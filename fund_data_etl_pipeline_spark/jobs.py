@@ -27,6 +27,7 @@ by the same generic machinery (SURVEY §7.0 "platforms are data, not code").
 
 from __future__ import annotations
 
+import threading
 from collections import OrderedDict
 
 from pyspark.sql import Column, DataFrame
@@ -116,12 +117,25 @@ def _records_column(
 # per call.
 _SPEC_CACHE: "OrderedDict" = OrderedDict()
 _SPEC_CACHE_MAX = 64
+# run_all builds its nine jobs on concurrent driver threads: the lock
+# covers each lookup / insert / LRU step, never a (slow, py4j-bound)
+# build, so a lost race at worst builds one tree twice
+_SPEC_CACHE_LOCK = threading.Lock()
+
+
+def _spec_cache_get(key):
+    with _SPEC_CACHE_LOCK:
+        hit = _SPEC_CACHE.get(key)
+        if hit is not None:
+            _SPEC_CACHE.move_to_end(key)
+        return hit
 
 
 def _spec_cache_put(key, value):
-    _SPEC_CACHE[key] = value
-    while len(_SPEC_CACHE) > _SPEC_CACHE_MAX:
-        _SPEC_CACHE.popitem(last=False)
+    with _SPEC_CACHE_LOCK:
+        _SPEC_CACHE[key] = value
+        while len(_SPEC_CACHE) > _SPEC_CACHE_MAX:
+            _SPEC_CACHE.popitem(last=False)
 
 
 def _cached_specs(specs_fn):
@@ -132,13 +146,11 @@ def _cached_specs(specs_fn):
     # into a colliding key after a session restart. A handful of dead
     # contexts pinned per process is bounded and tiny.
     key = (SparkContext._active_spark_context, specs_fn)
-    if key not in _SPEC_CACHE:
-        _spec_cache_put(key, specs_fn(
-            F.col("text"), F.col("lines"), F.col("filename")
-        ))
-    else:
-        _SPEC_CACHE.move_to_end(key)
-    return _SPEC_CACHE[key]
+    specs = _spec_cache_get(key)
+    if specs is None:
+        specs = specs_fn(F.col("text"), F.col("lines"), F.col("filename"))
+        _spec_cache_put(key, specs)
+    return specs
 
 
 def _explode_records(
@@ -152,14 +164,13 @@ def _explode_records(
     from pyspark import SparkContext
 
     key = (SparkContext._active_spark_context, id(specs), tuple(all_fields))
-    hit = _SPEC_CACHE.get(key)
+    hit = _spec_cache_get(key)
     if hit is None or hit[0] is not specs:
         rec = F.explode(_records_column(specs, F.col("platform")))
         sel = [F.col(f"rec.{f}").alias(f) for f in all_fields]
-        _spec_cache_put(key, (specs, rec, sel))
-    else:
-        _SPEC_CACHE.move_to_end(key)
-    _, rec, sel = _SPEC_CACHE[key]
+        hit = (specs, rec, sel)
+        _spec_cache_put(key, hit)
+    _, rec, sel = hit
     return df.withColumn("rec", rec).select(
         "doc_id", "filename", "platform", *sel
     )
@@ -2221,9 +2232,25 @@ def run_all(
     The reference runs 9 sequential jobs each re-walking the share
     (main:501-527); here a single binaryFile scan + parse stage is
     persisted and every job is a filter over it — at 100 TB this is the
-    difference between 9 corpus reads and 1.
+    difference between 9 corpus reads and 1. The audit count materializes
+    the persisted parse; then the nine jobs run concurrently, one driver
+    thread each (build -> write -> Excel copy), so one job's Python plan
+    build overlaps the others' execution, while this thread writes the
+    quarantine sink. Each sink executes its plan once: the row count is
+    observed on the write, and an output whose observed count is zero is
+    deleted again (the reference's empty-result guard). ``dividend_merged``
+    and the Excel copies read the written parquet back, so nothing
+    re-executes a job's plan. The parse cache is released even when a job
+    fails; every job is waited for, then the first failure in job order
+    is raised.
     Returns {job: output path | False (empty)} plus audit counts.
     """
+    from concurrent.futures import ThreadPoolExecutor
+
+    from pyspark import inheritable_thread_target
+
+    from .operators import aggregate
+    from .operators.caching import persist_tracked
     from .operators.sinks import (
         audit_summary,
         excel_job_path,
@@ -2233,55 +2260,72 @@ def run_all(
     )
     from .sources.corpus import load_corpus
 
-    from .operators.caching import persist_tracked
-
-    # eager consumer: every pipeline writes below, then the explicit
-    # unpersist at the end reclaims; persist_tracked is the
-    # exception-path backstop when run under a registry collector
+    # eager consumer: the audit below materializes the cache, every
+    # pipeline reads it, and the finally reclaims it; persist_tracked is
+    # the exception-path backstop when run under a registry collector
     parsed = persist_tracked(load_corpus(spark, corpus_root))
-    ok = parsed.filter(F.col("status") == "ok").select(
-        "doc_id", "filename", "rel_path", "text"
-    )
-    errors = parsed.filter(F.col("status") == "error")
-
-    def sub(keyword: str) -> DataFrame:
-        return ok.filter(F.col("rel_path").contains(keyword))
-
-    pipelines = {
-        "dividend": dividend_job(sub("分红"), dim, run_date),
-        "purchase_apply": purchase_apply_job(sub("受理"), dim, run_date),
-        "purchase_confirm": purchase_confirm_job(sub("确认"), dim, run_date),
-        "redemption_confirm": redemption_confirm_job(sub("确认"), dim, run_date),
-        "conversion": conversion_job(sub("确认"), dim, run_date),
-        "manual_apply": manual_purchase_apply_job(ok, dim, run_date),
-        "manual_confirm": manual_purchase_confirm_job(ok, dim, run_date),
-        "manual_redemption": manual_redemption_job(ok, dim, run_date),
-        "manual_dividend": manual_dividend_job(ok, dim, run_date),
-    }
-    status: dict[str, object] = {}
-    for name, df in pipelines.items():
-        path = f"{out_dir}/{name}"
-        status[name] = path if write_partitioned(df, path) else False
-        if excel and status[name]:
-            # reference-parity per-job Excel (reads back the tiny written
-            # parquet — no second execution of the pipeline plan)
-            status[f"{name}_excel"] = write_excel_compat(
-                spark.read.parquet(path), excel_job_path(out_dir, name)
-            )
-    status["dividend_merged"] = (
-        f"{out_dir}/dividend_merged"
-        if write_partitioned(
-            __import__(
-                "fund_data_etl_pipeline_spark.operators.aggregate",
-                fromlist=["dividend_merge"],
-            ).dividend_merge(pipelines["dividend"]),
-            f"{out_dir}/dividend_merged",
+    try:
+        audit = {r["status"]: r["n"] for r in audit_summary(parsed).collect()}
+        ok = parsed.filter(F.col("status") == "ok").select(
+            "doc_id", "filename", "rel_path", "text"
         )
-        else False
-    )
-    status["quarantined"] = write_quarantine(errors, f"{out_dir}/quarantine")
-    status["audit"] = {
-        r["status"]: r["n"] for r in audit_summary(parsed).collect()
-    }
-    parsed.unpersist()
-    return status
+        errors = parsed.filter(F.col("status") == "error")
+
+        def sub(keyword: str) -> DataFrame:
+            return ok.filter(F.col("rel_path").contains(keyword))
+
+        # builders are looked up when the pool thread calls them
+        builders = {
+            "dividend": lambda: dividend_job(sub("分红"), dim, run_date),
+            "purchase_apply": lambda: purchase_apply_job(sub("受理"), dim, run_date),
+            "purchase_confirm": lambda: purchase_confirm_job(sub("确认"), dim, run_date),
+            "redemption_confirm": lambda: redemption_confirm_job(sub("确认"), dim, run_date),
+            "conversion": lambda: conversion_job(sub("确认"), dim, run_date),
+            "manual_apply": lambda: manual_purchase_apply_job(ok, dim, run_date),
+            "manual_confirm": lambda: manual_purchase_confirm_job(ok, dim, run_date),
+            "manual_redemption": lambda: manual_redemption_job(ok, dim, run_date),
+            "manual_dividend": lambda: manual_dividend_job(ok, dim, run_date),
+        }
+
+        def sink(name: str, df: DataFrame) -> str | bool:
+            path = f"{out_dir}/{name}"
+            return path if write_partitioned(df, path) else False
+
+        def run_job(name: str, build) -> dict[str, object]:
+            df = build()
+            out: dict[str, object] = {name: sink(name, df)}
+            if not out[name] or not (excel or name == "dividend"):
+                return out
+            # the tiny written parquet, typed by the job's own schema (a
+            # yyyyMMdd biz_date partition stays a string)
+            written = (
+                spark.read.schema(df.schema).parquet(out[name]).select(*df.columns)
+            )
+            if excel:
+                out[f"{name}_excel"] = write_excel_compat(
+                    written, excel_job_path(out_dir, name)
+                )
+            if name == "dividend":
+                out["dividend_merged"] = sink(
+                    "dividend_merged", aggregate.dividend_merge(written)
+                )
+            return out
+
+        status: dict[str, object] = {}
+        task = inheritable_thread_target(spark)(run_job)
+        with ThreadPoolExecutor(max_workers=len(builders)) as pool:
+            futures = [pool.submit(task, n, b) for n, b in builders.items()]
+            try:
+                quarantined = write_quarantine(errors, f"{out_dir}/quarantine")
+            finally:
+                # leaving the pool waits for every job; result() re-raises
+                # the first failure in job order
+                for future in futures:
+                    status.update(future.result())
+        # the merge follows the nine jobs' keys; False when no dividends
+        status["dividend_merged"] = status.pop("dividend_merged", False)
+        status["quarantined"] = quarantined
+        status["audit"] = audit
+        return status
+    finally:
+        parsed.unpersist()

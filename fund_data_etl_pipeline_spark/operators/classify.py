@@ -18,6 +18,7 @@ reference's patterns:
 
 from __future__ import annotations
 
+import threading
 from collections import OrderedDict
 from dataclasses import dataclass
 from typing import Callable
@@ -142,20 +143,25 @@ def platform_column(
 # invalidates old Column refs.
 _CASCADE_CACHE: OrderedDict = OrderedDict()
 _CASCADE_CACHE_MAX = 32
+# concurrent builders (run_all's pool threads): the lock covers the
+# lookup / insert / LRU steps, not the py4j-bound build
+_CASCADE_CACHE_LOCK = threading.Lock()
 
 
 def _cached_platform_column(rules: list[PlatformRule]) -> Column:
     from pyspark import SparkContext
 
     key = (SparkContext._active_spark_context, tuple(rules))
-    col = _CASCADE_CACHE.get(key)
-    if col is None:
-        col = platform_column(rules)
+    with _CASCADE_CACHE_LOCK:
+        col = _CASCADE_CACHE.get(key)
+        if col is not None:
+            _CASCADE_CACHE.move_to_end(key)
+            return col
+    col = platform_column(rules)
+    with _CASCADE_CACHE_LOCK:
         _CASCADE_CACHE[key] = col
         while len(_CASCADE_CACHE) > _CASCADE_CACHE_MAX:
             _CASCADE_CACHE.popitem(last=False)
-    else:
-        _CASCADE_CACHE.move_to_end(key)
     return col
 
 

@@ -25,15 +25,48 @@ def write_partitioned(
 ) -> bool:
     """S6 — canonical parquet sink. Returns False on an empty result (the
     reference's empty-result guard Q2 aborts the job instead of writing an
-    empty file, dividend_extractor.py:1440-1442)."""
-    if df.isEmpty():
-        return False
+    empty file, dividend_extractor.py:1440-1442).
+
+    The plan executes once: the row count is observed on the write itself
+    (no ``isEmpty`` probe re-running the plan first), and on a zero count
+    whatever this call wrote is deleted again — the whole path when the
+    call created or replaced it, only the new top-level entries (an empty
+    write adds no partition directories) when it appended to, ignored or
+    dynamically overwrote an existing path, so older data is never
+    removed."""
+    from pyspark.sql import Observation
+
+    spark = df.sparkSession
     cols = [c for c in partition_cols if c in df.columns]
-    writer = df.write.mode(mode)
+    replaces = mode.lower() == "overwrite" and not (
+        cols
+        and spark.conf.get("spark.sql.sources.partitionOverwriteMode").lower()
+        == "dynamic"
+    )
+    sc = spark.sparkContext
+    hpath = sc._jvm.org.apache.hadoop.fs.Path(path)
+    fs = hpath.getFileSystem(sc._jsc.hadoopConfiguration())
+    before = None if replaces or not fs.exists(hpath) else _entries(fs, hpath)
+    rows = Observation()
+    observed = df.observe(rows, F.count(F.lit(1)).alias("n"))
+    writer = observed.write.mode(mode)
     if cols:
         writer = writer.partitionBy(*cols)
     writer.parquet(path)
-    return True
+    if rows.get["n"]:
+        return True
+    if before is None:
+        fs.delete(hpath, True)
+    else:
+        for name, entry in _entries(fs, hpath).items():
+            if name not in before:
+                fs.delete(entry, True)
+    return False
+
+
+def _entries(fs, hpath) -> dict:
+    """The entries directly under a directory: name -> Hadoop Path."""
+    return {s.getPath().getName(): s.getPath() for s in fs.listStatus(hpath)}
 
 
 def write_excel_compat(
@@ -99,11 +132,13 @@ def excel_job_path(out_dir: str, job: str) -> str:
 def write_quarantine(df: DataFrame, path: str) -> int:
     """S7 — persist failed/unmatched rows with their reason; returns the
     quarantined row count (the reference's failed-files counter,
-    dividend_extractor.py:1432-1438). Write first, count from the written
-    files — one execution of the upstream plan instead of count+write."""
-    df.write.mode("overwrite").parquet(path)
-    spark = df.sparkSession
-    return spark.read.parquet(path).count()
+    dividend_extractor.py:1432-1438). The count is observed on the write:
+    one execution of the upstream plan, no read-back."""
+    from pyspark.sql import Observation
+
+    rows = Observation()
+    df.observe(rows, F.count(F.lit(1)).alias("n")).write.mode("overwrite").parquet(path)
+    return rows.get["n"]
 
 
 def audit_summary(parsed: DataFrame) -> DataFrame:

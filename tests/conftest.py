@@ -10,38 +10,6 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 SF_SMOKE = "/root/testdata/sf0.001"
 
 
-def pytest_addoption(parser):
-    parser.addoption(
-        "--slow",
-        action="store_true",
-        default=False,
-        help="also run @pytest.mark.slow tests (the exhaustive from-spec "
-        "codec/OCR round-trip sweeps); the local round gate "
-        "(tools/run_round_checks.sh) always passes this",
-    )
-
-
-def pytest_configure(config):
-    config.addinivalue_line(
-        "markers",
-        "slow: exhaustive from-spec sweep; skipped by default so the "
-        "default lane finishes inside the grading driver's budget "
-        "(VERDICT r13 #1) — run with --slow or SPARK_GRAFT_SLOW_TESTS=1. "
-        "Every slow test stays in the repo and the local gate runs it.",
-    )
-
-
-def pytest_collection_modifyitems(config, items):
-    if config.getoption("--slow") or os.environ.get("SPARK_GRAFT_SLOW_TESTS"):
-        return
-    skip = pytest.mark.skip(
-        reason="slow lane (run with --slow; local gate runs it)"
-    )
-    for item in items:
-        if "slow" in item.keywords:
-            item.add_marker(skip)
-
-
 @pytest.fixture(scope="session")
 def spark():
     from fund_data_etl_pipeline_spark.session import get_spark

@@ -1,0 +1,245 @@
+"""``jobs.run_all`` fan-out: each sink executes its plan once, the nine job
+pipelines run on concurrent driver threads, the empty-result guard deletes
+only what the write itself produced, and the parse cache is released on
+every exit path.
+"""
+
+from __future__ import annotations
+
+import os
+
+import pytest
+from pyspark.sql import functions as F
+
+from fund_data_etl_pipeline_spark import jobs
+from fund_data_etl_pipeline_spark import schemas as S
+from fund_data_etl_pipeline_spark.operators.aggregate import dividend_merge
+from fund_data_etl_pipeline_spark.operators.sinks import write_partitioned
+from fund_data_etl_pipeline_spark.testing import fixtures as FX
+from test_corpus_lifecycle import _build_tree
+from test_fund_jobs import expected_set, rows_set
+
+# Spark jobs of one run_all(excel=True) over the _build_tree corpus: the
+# audit (which materializes the parse), one write per sink, one toPandas
+# per Excel copy, plus the map stages AQE submits as jobs of their own.
+# An isEmpty probe, a re-executed dividend cascade, a schema-inferring
+# read-back or a count-after-write each add jobs and fail the test.
+RUN_ALL_SPARK_JOBS = 29
+
+SINK_GOLDENS = {
+    "dividend": (FX.EXPECTED_DIVIDEND, S.DIVIDEND_COLS),
+    "purchase_apply": (FX.EXPECTED_PURCHASE_APPLY, S.TXN_COLS),
+    "purchase_confirm": (FX.EXPECTED_PURCHASE_CONFIRM, S.TXN_COLS),
+    "redemption_confirm": (FX.EXPECTED_REDEMPTION, S.TXN_COLS),
+    "conversion": (FX.EXPECTED_CONVERSION, S.CONVERSION_COLS),
+    "manual_apply": (FX.EXPECTED_MANUAL_APPLY, S.MANUAL_APPLY_COLS),
+    "manual_confirm": (FX.EXPECTED_MANUAL_CONFIRM, S.MANUAL_CONFIRM_COLS),
+    "manual_redemption": (FX.EXPECTED_MANUAL_REDEMPTION, S.MANUAL_REDEMPTION_COLS),
+    "manual_dividend": (FX.EXPECTED_MANUAL_DIVIDEND, S.MANUAL_DIVIDEND_COLS),
+}
+N_DOCS = len(
+    FX.DIVIDEND_DOCS + FX.PURCHASE_APPLY_DOCS + FX.PURCHASE_CONFIRM_DOCS
+    + FX.REDEMPTION_DOCS + FX.CONVERSION_DOCS + FX.MANUAL_DOCS
+)
+
+
+@pytest.fixture(scope="module")
+def corpus(tmp_path_factory):
+    return str(_build_tree(tmp_path_factory.mktemp("fanout") / "corpus"))
+
+
+def _run_all(spark, corpus, out, excel=False):
+    return jobs.run_all(spark, corpus, FX.dim_df(spark), FX.RUN_DATE, str(out), excel=excel)
+
+
+def _sink_rows(spark, path, cols):
+    df = spark.read.parquet(path)
+    if "biz_date" in df.columns:  # the hive partition value reads back as int
+        df = df.withColumn("biz_date", F.col("biz_date").cast("string"))
+    return rows_set(df.select(*cols))
+
+
+def test_empty_append_keeps_existing_output(spark, tmp_path):
+    path = str(tmp_path / "sink")
+    for partition_cols in (("biz_date",), ()):
+        old = spark.createDataFrame([("20260114", 1.0)], "biz_date string, x double")
+        assert write_partitioned(old, path, partition_cols, mode="overwrite")
+        before = sorted(os.listdir(path))
+        empty = spark.createDataFrame([], "biz_date string, x double")
+        assert write_partitioned(empty, path, partition_cols, mode="append") is False
+        assert sorted(os.listdir(path)) == before
+        assert spark.read.parquet(path).count() == 1
+
+
+def test_run_all_spark_job_count(spark, corpus, tmp_path):
+    sc = spark.sparkContext
+    spark.catalog.clearCache()  # no cached plan from another test substitutes
+    group = "test_run_all_spark_job_count"
+    sc.setLocalProperty("spark.jobGroup.id", group)
+    try:
+        _run_all(spark, corpus, tmp_path / "out", excel=True)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty(60_000)
+    # the pool threads inherit the job group, so every job is counted
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == RUN_ALL_SPARK_JOBS
+
+
+def test_run_all_failure_releases_parse_cache(spark, corpus, tmp_path, monkeypatch):
+    def broken(*args, **kwargs):
+        raise RuntimeError("builder failed")
+
+    spark.catalog.clearCache()
+    monkeypatch.setattr(jobs, "conversion_job", broken)
+    with pytest.raises(RuntimeError, match="builder failed"):
+        _run_all(spark, corpus, tmp_path / "out")
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
+def test_back_to_back_runs_match_goldens(spark, corpus, tmp_path):
+    dividend = jobs.dividend_job(
+        FX.docs_df(spark, FX.DIVIDEND_DOCS), FX.dim_df(spark), FX.RUN_DATE
+    )
+    merged = rows_set(dividend_merge(dividend))
+    for run in range(2):
+        status = _run_all(spark, corpus, tmp_path / f"out{run}")
+        for sink, (golden, cols) in SINK_GOLDENS.items():
+            assert _sink_rows(spark, status[sink], cols) == expected_set(golden), sink
+        # merged from the written output == merged from the job's plan
+        assert _sink_rows(spark, status["dividend_merged"], S.DIVIDEND_COLS) == merged
+        assert status["quarantined"] == 1
+        assert status["audit"] == {"ok": N_DOCS, "error": 1}
+
+
+def _plan_cache(name):
+    """(module, cache attribute, cap, lookup(k) for a distinct key per k)."""
+    from fund_data_etl_pipeline_spark.operators import classify as C
+
+    if name == "cascade":
+        rules = {}
+
+        def lookup(k):
+            rule = rules.setdefault(k, C.PlatformRule(f"r{k}", C.fname_has(f"s{k}")))
+            return C._cached_platform_column([rule])
+
+        return C, "_CASCADE_CACHE", C._CASCADE_CACHE_MAX, lookup
+    fns = {}
+
+    def lookup(k):
+        fn = fns.setdefault(k, lambda text, lines, filename: [(f"s{k}", text)])
+        return jobs._cached_specs(fn)
+
+    return jobs, "_SPEC_CACHE", jobs._SPEC_CACHE_MAX, lookup
+
+
+@pytest.mark.parametrize("name", ["cascade", "spec"])
+def test_plan_cache_hit_is_atomic_with_eviction(spark, monkeypatch, name):
+    """run_all builds on concurrent driver threads. One thread hits the
+    oldest key of a full LRU and pauses between lookup and move_to_end;
+    another inserts a new key, which evicts the oldest. Under the cache
+    lock the insert waits, so the hit survives; unlocked, the evicted key
+    fails move_to_end with a KeyError."""
+    import threading
+    from collections import OrderedDict
+
+    module, attr, cap, lookup = _plan_cache(name)
+    looked_up, evicted = threading.Event(), threading.Event()
+    errors = []
+
+    class PausingLRU(OrderedDict):
+        def get(self, key, default=None):
+            hit = super().get(key, default)
+            if hit is not None and threading.current_thread() is reader:
+                looked_up.set()
+                evicted.wait(timeout=0.5)
+            return hit
+
+    monkeypatch.setattr(module, attr, PausingLRU())
+    for k in range(cap):
+        lookup(k)
+    oldest = next(iter(getattr(module, attr)))
+
+    def guarded(fn):
+        try:
+            fn()
+        except Exception as e:  # noqa: BLE001 — collected and asserted below
+            errors.append(e)
+
+    def evict():
+        looked_up.wait(timeout=10)
+        lookup(cap)
+        evicted.set()
+
+    reader = threading.Thread(target=guarded, args=(lambda: lookup(0),))
+    writer = threading.Thread(target=guarded, args=(evict,))
+    for th in (reader, writer):
+        th.start()
+    for th in (reader, writer):
+        th.join(timeout=30)
+    assert not reader.is_alive() and not writer.is_alive()
+    assert errors == []
+    assert oldest in getattr(module, attr)
+    assert len(getattr(module, attr)) == cap
+
+
+def test_plan_caches_survive_concurrent_builders(spark, monkeypatch):
+    """Stress: more threads than cores draw random keys from a few more
+    than the LRU cap, under a short switch interval, with a lookup that
+    sleeps before returning; the caches stay bounded and nothing raises."""
+    import random
+    import sys
+    import threading
+    import time
+    from collections import OrderedDict
+
+    class SlowLRU(OrderedDict):
+        def get(self, key, default=None):
+            hit = super().get(key, default)
+            time.sleep(0.0005)  # widen the lookup-to-move_to_end window
+            return hit
+
+    caches = [_plan_cache(name) for name in ("cascade", "spec")]
+    for module, attr, _, _ in caches:
+        monkeypatch.setattr(module, attr, SlowLRU())
+    errors = []
+
+    def worker(t):
+        rng = random.Random(t)
+        try:
+            for _ in range(100):
+                for _, _, cap, lookup in caches:
+                    lookup(rng.randrange(cap + 2))
+        except Exception as e:  # noqa: BLE001 — collected and asserted below
+            errors.append(e)
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=worker, args=(t,)) for t in range(16)]
+        for th in threads:
+            th.start()
+        for th in threads:
+            th.join(timeout=120)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(th.is_alive() for th in threads)
+    assert errors == []
+    for module, attr, cap, _ in caches:
+        assert len(getattr(module, attr)) <= cap
+
+
+def test_cached_columns_never_files_a_stale_context(spark):
+    """A context change during the unlocked build must not leave the
+    tree built under the old context in the cache."""
+    from fund_data_etl_pipeline_spark.functions import text as T
+
+    def build():
+        T._COL_CACHE_CTX = object()  # another context took over meanwhile
+        return F.lit(1)
+
+    key = ("test_cached_columns_never_files_a_stale_context",)
+    try:
+        assert T.cached_columns(key, build) is not None
+        assert key not in T._COL_CACHE
+    finally:
+        T._COL_CACHE_CTX = None  # the next call resets to the live context

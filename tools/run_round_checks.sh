@@ -51,8 +51,8 @@ qs, os_ = e.queries(), e.oracle_sql()
 print(f"queries(): {len(qs)}  oracle_sql(): {len(os_)}")
 EOF
 
-step "pytest (full suite including the --slow lane)"
-python -m pytest tests/ -q --slow 2>/dev/null | tail -2 || fail=1
+step "pytest (full suite)"
+python -m pytest tests/ -q 2>/dev/null | tail -2 || fail=1
 
 if [ "$FAST" != "--fast" ]; then
   step "bench (also validates the JSON capture path)"
