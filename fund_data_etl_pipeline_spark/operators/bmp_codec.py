@@ -1,4 +1,5 @@
-"""Minimal from-spec BMP decoder (the multimodal image stage).
+"""Minimal from-spec BMP decoder (a library decoder; no registered
+query calls it).
 
 Windows DIB per the public BITMAPFILEHEADER/BITMAPINFOHEADER layout —
 pure struct parsing:

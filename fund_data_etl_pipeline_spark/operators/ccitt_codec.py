@@ -1,8 +1,8 @@
 """Minimal from-spec CCITT Group 3/4 fax decoder (ITU-T T.4 / T.6).
 
-Seventh from-spec codec. Real-world scanned black-and-white documents —
-exactly the 万事如意-style manual-transaction scans the reference OCRs —
-are overwhelmingly CCITTFaxDecode inside PDF (§7.4.6) or Compression
+Real-world scanned black-and-white documents — exactly the
+万事如意-style manual-transaction scans the reference OCRs — are
+overwhelmingly CCITTFaxDecode inside PDF (§7.4.6) or Compression
 3/4 inside TIFF, so the scanned-PDF OCR front half
 (sources/corpus.ocr_scanned_pdf) needs this to turn a production scan
 into pixels. Scope:
@@ -127,9 +127,8 @@ _EOL = (12, 0b000000000001)
 
 class _Bits:
     """MSB-first bit reader — an integer accumulator refilled a byte at
-    a time (the flac_codec pattern), so the per-run peek/skip cycle in
-    the MH decoder is shift/mask work instead of a bytes slice per
-    probe. ``peek`` zero-pads past EOF so mode probes near the end of a
+    a time, so the per-run peek/skip cycle in the MH decoder is
+    shift/mask work instead of a bytes slice per probe. ``peek`` zero-pads past EOF so mode probes near the end of a
     strip stay simple."""
 
     def __init__(self, data: bytes) -> None:

@@ -464,11 +464,12 @@ def grouped_bucket_pairs(
     BOUND (r14, VERDICT r13 #7): the all-pairs branch materializes the
     per-bucket pair array as ONE expression value — O(cap²) structs on a
     single group row at occupancy <= cap (above cap the doubling branch
-    emits O(occ·log occ)). That is fine at the shipped caps (32² = 496
-    pairs, 128² ≈ 8k pairs) but a cap of 10³ would make it a per-row
-    10⁶-struct array; tests/test_round14_fixes.py pins every shipped cap
-    under the documented ceiling so a future bump is a conscious
-    decision, not a drive-by constant edit.
+    emits O(occ·log occ)). That is fine at the shipped caps
+    (cap·(cap−1)/2 pairs: 496 at cap 32, 8,128 at cap 128) but a cap of
+    10³ would make it a per-row 10⁶-struct array;
+    tests/test_round14_fixes.py pins every shipped cap under the
+    documented ceiling so a future bump is a conscious decision, not a
+    drive-by constant edit.
 
     Callers whose bucket key can be NULL (minhash band keys NULL out
     for contentless docs) must filter NULL keys on the PERSISTED banded

@@ -1,10 +1,10 @@
-"""Minimal from-spec PNG decoder (the multimodal image-decode stage).
+"""Minimal from-spec PNG decoder (a library decoder; no registered
+query calls it).
 
 Third from-spec codec after operators/xls_writer.py (BIFF8/CFB) and
 sources/pdf_text.py (ISO 32000): the container ships no image library,
 but PNG (W3C PNG spec / RFC 2083 — public) is zlib + per-scanline
-filters, both expressible with the stdlib + numpy. This turns the
-multimodal decode step from an honest stub into a real decoder for the
+filters, both expressible with the stdlib + numpy. This decodes the
 PNG subset that matters:
 
 - chunk stream: signature, IHDR, concatenated IDAT, IEND (ancillary

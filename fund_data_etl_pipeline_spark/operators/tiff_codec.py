@@ -1,4 +1,5 @@
-"""Minimal from-spec TIFF decoder (the multimodal image stage).
+"""Minimal from-spec TIFF decoder (a library decoder; no registered
+query calls it).
 
 Baseline TIFF 6.0 per the public Adobe specification — pure struct
 parsing:
@@ -39,6 +40,8 @@ import zlib
 
 import numpy as np
 
+from ..sources.pdf_text import unpack_lzw
+
 TIFF_MAGIC_LE = b"II*\x00"
 TIFF_MAGIC_BE = b"MM\x00*"
 
@@ -62,69 +65,6 @@ def _unpack_packbits(data: bytes, expected: int) -> bytes:
             i += 1
     if len(out) < expected:
         raise ValueError("TIFF PackBits stream ended short (truncated)")
-    return bytes(out[:expected])
-
-
-def unpack_lzw(data: bytes, expected: int | None = None) -> bytes:
-    """TIFF LZW (spec Section 13): byte-rooted table, codes 256 = Clear
-    and 257 = EOI, codes packed MSB-first, 9-bit initial width with the
-    "early change" — the width bumps when the table reaches 2^width - 1
-    entries (one code EARLIER than GIF's LZW, the spec's documented
-    off-by-one), capped at 12 bits.
-
-    ``expected`` None decodes until EOI / end of stream (the PDF
-    LZWDecode contract, §7.4.4.2 with the default EarlyChange = 1 —
-    identical to this TIFF variant, which is why sources/pdf_text.py
-    imports this function); an integer enforces exactly that many
-    output bytes (the TIFF strip contract)."""
-    clear, eoi = 256, 257
-    out = bytearray()
-    acc = nbits = pos = 0
-
-    def read(width: int) -> int:
-        nonlocal acc, nbits, pos
-        while nbits < width:
-            if pos >= len(data):
-                return eoi
-            acc = (acc << 8) | data[pos]
-            nbits += 8
-            pos += 1
-        nbits -= width
-        code = (acc >> nbits) & ((1 << width) - 1)
-        acc &= (1 << nbits) - 1
-        return code
-
-    def fresh() -> list[bytes]:
-        return [bytes([i]) for i in range(256)] + [b"", b""]
-
-    table = fresh()
-    width = 9
-    prev: bytes | None = None
-    while expected is None or len(out) < expected:
-        code = read(width)
-        if code == clear:
-            table = fresh()
-            width = 9
-            prev = None
-            continue
-        if code == eoi:
-            break
-        if code < len(table) and (code < 256 or table[code]):
-            entry = table[code]
-        elif code == len(table) and prev is not None:
-            entry = prev + prev[:1]
-        else:
-            raise ValueError("TIFF LZW code out of range (corrupt)")
-        out += entry
-        if prev is not None and len(table) < 4096:
-            table.append(prev + entry[:1])
-        prev = entry
-        if len(table) >= (1 << width) - 1 and width < 12:
-            width += 1
-    if expected is None:
-        return bytes(out)
-    if len(out) < expected:
-        raise ValueError("TIFF LZW stream ended short (truncated)")
     return bytes(out[:expected])
 
 
@@ -298,7 +238,11 @@ def decode_tiff(data: bytes) -> tuple[int, int, int, np.ndarray]:
         if comp == 32773:
             chunks.append(_unpack_packbits(raw, expected))
         elif comp == 5:
-            chunks.append(unpack_lzw(raw, expected))
+            # Section 13 LZW is PDF's LZWDecode with EarlyChange = 1
+            unpacked = unpack_lzw(raw)
+            if len(unpacked) < expected:
+                raise ValueError("TIFF LZW strip short (truncated)")
+            chunks.append(unpacked[:expected])
         elif comp in (8, 32946):
             try:
                 inflated = zlib.decompress(raw)

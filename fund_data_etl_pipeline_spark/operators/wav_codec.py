@@ -1,4 +1,5 @@
-"""Minimal from-spec PCM WAV decoder (the multimodal audio stage).
+"""Minimal from-spec PCM WAV decoder (a library decoder; no registered
+query calls it).
 
 Fifth from-spec codec after operators/xls_writer.py (BIFF8/CFB),
 sources/pdf_text.py (ISO 32000), operators/png_codec.py (W3C PNG) and

@@ -260,8 +260,8 @@ def fund_dividend_scaled(spark: SparkSession, sf_dir: str) -> DataFrame:
     platform. Row values equal the golden counts x1000 — but the point is
     measuring the single-scan extract stage at volume (bench.py times
     this; at sf-independent 25k docs the per-doc cost is the signal).
-    ``tools/fund_cascade_probe.py`` drives the same builder at 10x/100x
-    this replication to fit the cascade's cost exponent (BASELINE.md)."""
+    The same builder at 10x/100x this replication fits the cascade's
+    cost exponent (BASELINE.md §4.5)."""
     return dividend_scaled_agg(spark, 1000)
 
 

@@ -1,7 +1,6 @@
 """Multimodal queries. ``multimodal_binary_stats`` proves the binary-column
 path end-to-end with a DuckDB oracle (documents text encoded to bytes both
-sides); the codec-dependent operators are exercised by pytest with the
-deterministic fake decode (plans can't assume image libs exist)."""
+sides)."""
 
 from __future__ import annotations
 

@@ -157,8 +157,8 @@ def ocr_scanned_pdf(content: bytes) -> str:
     path (manual_purchase_apply_extractor.py:75-181), with the render
     half built from spec: a scanned announcement's page images ARE the
     embedded /Subtype /Image XObjects, so ``extract_pdf_images`` plus
-    the builtin image codecs reproduce exactly the pixels the reference
-    rasterizes, with zero third-party libraries. Only the neural
+    the builtin JPEG and CCITT decoders reproduce exactly the pixels the
+    reference rasterizes, with zero third-party libraries. Only the neural
     glyph-recognition step stays import-gated; when easyocr is absent
     the named error carries the decoded page-image inventory — the
     quarantine row then PROVES the front half worked on real bytes."""

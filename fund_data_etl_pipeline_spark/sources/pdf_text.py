@@ -12,9 +12,8 @@ ordinary generated announcement PDFs:
   quarantine-grade codec must tolerate; the xref is an OPTIMIZATION for
   random access, not the object store itself — §7.5.4);
 - streams: ``stream``/``endstream`` payloads; filters ``/FlateDecode``
-  (stdlib zlib), ``/LZWDecode`` (the TIFF Section-13 early-change LZW,
-  shared with operators/tiff_codec.py — §7.4.4.2's default
-  EarlyChange = 1 IS that variant), ``/ASCIIHexDecode`` and
+  (stdlib zlib), ``/LZWDecode`` (``unpack_lzw``: §7.4.4.2 with the
+  default EarlyChange = 1), ``/ASCIIHexDecode`` and
   ``/ASCII85Decode``, applied first-to-last when /Filter names a chain
   (§7.4.1); unsupported filters raise a NAMED error so the file
   quarantines informatively (S7), never silently;
@@ -240,7 +239,7 @@ def _stream_data(body: bytes, objs: dict[int, bytes]) -> bytes:
         em = re.search(rb"/EarlyChange\s+(\d+)", parms)
         if em and int(em.group(1)) == 0:
             raise ValueError("PDF LZWDecode with EarlyChange 0 not "
-                             "supported (TIFF-variant only)")
+                             "supported (EarlyChange 1 only)")
     # /Filter may be a single name or an array naming a CHAIN (§7.4.1,
     # applied first-to-last), e.g. [/ASCII85Decode /FlateDecode]
     out = raw
@@ -315,6 +314,61 @@ def _apply_predictor(data: bytes, parms: bytes) -> bytes:
     return bytes(out)
 
 
+def unpack_lzw(data: bytes) -> bytes:
+    """PDF LZWDecode (§7.4.4.2) with the default EarlyChange = 1:
+    byte-rooted table, codes 256 = Clear and 257 = EOD, codes packed
+    MSB-first, 9-bit initial width that bumps when the table reaches
+    2^width - 1 entries (one code earlier than GIF's LZW), capped at 12
+    bits. Decodes until EOD or the end of the stream. TIFF's Section 13
+    LZW is the same variant; operators/tiff_codec.py decodes its strips
+    with this."""
+    clear, eod = 256, 257
+    out = bytearray()
+    acc = nbits = pos = 0
+
+    def read(width: int) -> int:
+        nonlocal acc, nbits, pos
+        while nbits < width:
+            if pos >= len(data):
+                return eod
+            acc = (acc << 8) | data[pos]
+            nbits += 8
+            pos += 1
+        nbits -= width
+        code = (acc >> nbits) & ((1 << width) - 1)
+        acc &= (1 << nbits) - 1
+        return code
+
+    def fresh() -> list[bytes]:
+        return [bytes([i]) for i in range(256)] + [b"", b""]
+
+    table = fresh()
+    width = 9
+    prev: bytes | None = None
+    while True:
+        code = read(width)
+        if code == clear:
+            table = fresh()
+            width = 9
+            prev = None
+            continue
+        if code == eod:
+            break
+        if code < len(table) and (code < 256 or table[code]):
+            entry = table[code]
+        elif code == len(table) and prev is not None:
+            entry = prev + prev[:1]
+        else:
+            raise ValueError("PDF LZW code out of range (corrupt)")
+        out += entry
+        if prev is not None and len(table) < 4096:
+            table.append(prev + entry[:1])
+        prev = entry
+        if len(table) >= (1 << width) - 1 and width < 12:
+            width += 1
+    return bytes(out)
+
+
 def _apply_filter(name: bytes, raw: bytes) -> bytes:
     if name == b"Crypt":
         # §7.4.10: the Crypt step is decryption, which _decrypt_streams
@@ -331,10 +385,6 @@ def _apply_filter(name: bytes, raw: bytes) -> bytes:
             except zlib.error as exc:
                 raise ValueError(f"PDF FlateDecode corrupt: {exc}")
     if name == b"LZWDecode":
-        # §7.4.4.2 with the default EarlyChange = 1 is the TIFF
-        # Section-13 LZW variant — shared decoder
-        from ..operators.tiff_codec import unpack_lzw
-
         return unpack_lzw(raw)
     if name == b"ASCIIHexDecode":
         body = raw.split(b">")[0]

@@ -99,20 +99,3 @@ def test_named_errors():
         decode_aiff(blob.replace(b"AIFF", b"AIFC", 1))
     with pytest.raises(ValueError, match="COMM|truncated"):
         decode_aiff(blob[:20])
-
-
-def test_spark_audio_features_aiff_path(spark):
-    from fund_data_etl_pipeline_spark.operators.multimodal import (
-        MEDIA_SCHEMA,
-        decode_audio_features,
-    )
-
-    s = _tone(1600)
-    rows = [(13, "audio", write_aiff(s, 16000),
-             (None, None, None, 16000, None, None))]
-    df = spark.createDataFrame(rows, MEDIA_SCHEMA)
-    r = decode_audio_features(df, fake=False).collect()[0]
-    assert r["sample_rate"] == 16000 and r["channels"] == 2
-    assert r["n_frames"] == 1600
-    expected_rms = float(np.sqrt(np.mean((s / 32768.0) ** 2)))
-    assert abs(r["rms"] - expected_rms) < 1e-9

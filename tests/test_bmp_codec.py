@@ -118,21 +118,6 @@ def test_bmp_named_errors():
         decode_bmp(bytes(bf))
 
 
-def test_bmp_spark_image_path(spark):
-    from fund_data_etl_pipeline_spark.operators.multimodal import (
-        MEDIA_SCHEMA,
-        decode_image_features,
-    )
-    from fund_data_etl_pipeline_spark.operators.png_codec import mean_luma
-
-    img = _rgb(h=8, w=10)
-    rows = [(31, "image", write_bmp(img), (10, 8, 3, None, None, None))]
-    df = spark.createDataFrame(rows, MEDIA_SCHEMA)
-    r = decode_image_features(df, fake=False).collect()[0]
-    assert (r["width"], r["height"]) == (10, 8)
-    assert abs(r["mean_luma"] - mean_luma(img)) < 1e-9
-
-
 # --- BI_RLE8 / BI_RLE4 ----------------------------------------------------
 
 def _rle8_encode(idx: np.ndarray) -> bytes:

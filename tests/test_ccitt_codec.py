@@ -561,23 +561,3 @@ def test_tiff_fax_named_errors():
     with pytest.raises(ValueError, match="rows|truncated|invalid"):
         decode_tiff(write_fax_tiff([encode_g4(img)[:2]], 16, 4, comp=4,
                                    rows_per_strip=4))
-
-
-def test_fax_tiff_spark_image_path(spark):
-    """A Group-4 fax TIFF flows through the Spark multimodal stage:
-    RIFF-free magic dispatch -> decode_tiff -> the shared fax decoder."""
-    from fund_data_etl_pipeline_spark.operators.multimodal import (
-        MEDIA_SCHEMA,
-        decode_image_features,
-    )
-    from fund_data_etl_pipeline_spark.operators.png_codec import mean_luma
-
-    img = _text_like(rows=20, cols=72, seed=43)
-    blob = write_fax_tiff([encode_g4(img)], 72, 20, comp=4,
-                          rows_per_strip=20)
-    rows = [(71, "image", blob, (72, 20, 1, None, None, None))]
-    df = spark.createDataFrame(rows, MEDIA_SCHEMA)
-    r = decode_image_features(df, fake=False).collect()[0]
-    assert (r["width"], r["height"]) == (72, 20)
-    rgb = np.repeat(img[:, :, None], 3, axis=2)
-    assert abs(r["mean_luma"] - mean_luma(rgb)) < 1e-9

@@ -4,7 +4,7 @@ spec-conformant baseline ENCODER here builds real JFIF byte streams
 (FDCT + quantization + canonical Huffman + byte stuffing + optional
 restart markers and 4:2:0 subsampling), and the decoder must reconstruct
 the pixels within the quantization error bound — the
-xls_writer/pdf_text/png_codec round-trip strategy applied to JPEG.
+xls_writer/pdf_text round-trip strategy applied to JPEG.
 
 JPEG is lossy, so "round trip" asserts bounded error: with all-ones
 quantization tables the only loss is coefficient rounding (|err| <= 0.5
@@ -300,28 +300,6 @@ def test_named_error_truncated_entropy():
     blob = encode_jpeg(_gradient(16, 16))
     with pytest.raises(ValueError):
         decode_jpeg(blob[: len(blob) // 2])
-
-
-def test_image_features_real_jpeg_path(spark):
-    """The Spark operator must run the REAL JPEG decode (fake=False):
-    width/height from SOF0, mean_luma from the reconstructed pixels
-    (within the codec's bounded quantization error)."""
-    from fund_data_etl_pipeline_spark.operators.multimodal import (
-        MEDIA_SCHEMA,
-        decode_image_features,
-    )
-    from fund_data_etl_pipeline_spark.operators.png_codec import mean_luma
-
-    img = _gradient(12, 20)
-    blob = encode_jpeg(img)
-    rows = [(1, "image", blob, (20, 12, 1, None, None, None))]
-    df = spark.createDataFrame(rows, MEDIA_SCHEMA)
-    out = decode_image_features(df, fake=False).collect()
-    assert len(out) == 1
-    r = out[0]
-    assert r["width"] == 20 and r["height"] == 12
-    expected = mean_luma(img[:, :, None])
-    assert abs(r["mean_luma"] - expected) <= 1.5
 
 
 # --- progressive (SOF2) encoder + tests -----------------------------------

@@ -274,12 +274,116 @@ def test_backslash_crlf_continuation_elides_whole_eol():
 
 # --- round-6 upgrades: LZW / ASCIIHex / ASCII85 filters + /ObjStm ---------
 
-def _lzw_pdf_payload(data: bytes) -> bytes:
-    # PDF LZWDecode (EarlyChange default 1) IS the TIFF Section-13
-    # variant — reuse the independent in-test TIFF LZW compressor
-    from tests.test_tiff_codec import _lzw_encode_tiff
+class _MSBWriter:
+    """Packs variable-width codes MSB-first; remembers each (code, width)
+    so tests can see the width bumps and clears the encoder chose."""
 
-    return _lzw_encode_tiff(data)
+    def __init__(self):
+        self.acc = 0
+        self.nbits = 0
+        self.out = bytearray()
+        self.codes: list[tuple[int, int]] = []
+
+    def put(self, code, width):
+        self.codes.append((code, width))
+        self.acc = (self.acc << width) | code
+        self.nbits += width
+        while self.nbits >= 8:
+            self.out.append((self.acc >> (self.nbits - 8)) & 0xFF)
+            self.nbits -= 8
+            self.acc &= (1 << self.nbits) - 1
+
+    def flush(self):
+        if self.nbits:
+            self.out.append((self.acc << (8 - self.nbits)) & 0xFF)
+        return bytes(self.out)
+
+
+def _lzw_codes(data: bytes) -> _MSBWriter:
+    """Independent LZW compressor, the forward direction of §7.4.4.2
+    with EarlyChange = 1: a dict keyed by byte strings, Clear first,
+    and a Clear again when the table nears 4096 entries."""
+    CLEAR, EOD = 256, 257
+    w = _MSBWriter()
+
+    def fresh():
+        return {bytes([i]): i for i in range(256)}, 258, 9
+
+    table, next_code, width = fresh()
+    w.put(CLEAR, width)
+    run = b""
+    for byte in data:
+        cand = run + bytes([byte])
+        if cand in table:
+            run = cand
+            continue
+        w.put(table[run], width)
+        table[cand] = next_code
+        # early change: the bump keys on the just-ASSIGNED entry index
+        # reaching 2^width - 1 (one earlier than GIF's 2^width)
+        if next_code == (1 << width) - 1 and width < 12:
+            width += 1
+        next_code += 1
+        if next_code >= 4094:
+            w.put(CLEAR, width)
+            table, next_code, width = fresh()
+        run = bytes([byte])
+    if run:
+        w.put(table[run], width)
+    w.put(EOD, width)
+    return w
+
+
+def lzw_encode(data: bytes) -> bytes:
+    return _lzw_codes(data).flush()
+
+
+def test_lzw_literal_and_dictionary_growth_roundtrip():
+    import numpy as np
+
+    from fund_data_etl_pipeline_spark.sources.pdf_text import unpack_lzw
+
+    rng = np.random.default_rng(8)
+    # low-entropy runs grow long dictionary entries (and hit the
+    # code == next-entry case); random bytes stay near-literal
+    smooth = np.repeat(rng.integers(0, 8, size=900, dtype=np.uint8) * 31, 4)
+    noisy = rng.integers(0, 256, size=3600, dtype=np.uint8)
+    for data in (b"", b"a", b"aaaaaaaaaa", smooth.tobytes(),
+                 noisy.tobytes()):
+        assert unpack_lzw(lzw_encode(data)) == data
+
+
+def test_lzw_width_bumps_and_clear():
+    import numpy as np
+
+    from fund_data_etl_pipeline_spark.sources.pdf_text import unpack_lzw
+
+    # enough distinct pairs to push the table through every width bump
+    # and past the near-4096 mid-stream clear
+    data = np.random.default_rng(10).integers(
+        0, 256, size=14400, dtype=np.uint8
+    ).tobytes()
+    w = _lzw_codes(data)
+    widths = [width for _, width in w.codes]
+    assert sorted(set(widths)) == [9, 10, 11, 12]
+    assert [c for c, _ in w.codes].count(256) >= 2  # start + mid-stream
+    # after the 254th data code the decoder's table holds 2^9 - 1 = 511
+    # entries, so early change makes the 255th the first 10-bit code
+    # (GIF's rule would wait for 512); codes[0] is the leading Clear
+    assert widths.index(10) == 255
+    assert unpack_lzw(w.flush()) == data
+
+
+def test_lzw_corrupt_code_is_named():
+    import pytest
+
+    from fund_data_etl_pipeline_spark.sources.pdf_text import unpack_lzw
+
+    w = _MSBWriter()
+    for code in (256, 65, 300, 257):  # 300: past the 259-entry table
+        w.put(code, 9)
+    with pytest.raises(ValueError, match="PDF LZW code out of range"):
+        unpack_lzw(w.flush())
 
 
 def test_lzw_filter_roundtrip():
@@ -290,8 +394,8 @@ def test_lzw_filter_roundtrip():
     content = b"BT /F1 12 Tf (LZW works: 42,000.00) Tj ET"
     obj = (
         b"<< /Length %d /Filter /LZWDecode >>\nstream\n"
-        % len(_lzw_pdf_payload(content))
-        + _lzw_pdf_payload(content)
+        % len(lzw_encode(content))
+        + lzw_encode(content)
         + b"\nendstream"
     )
     pdf = build_pdf(

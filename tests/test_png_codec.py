@@ -120,33 +120,6 @@ def test_corrupt_crc_and_unsupported_are_named():
         decode_png(b"\xff\xd8\xffJPEG-ish")
 
 
-def test_image_features_real_codec_path(spark):
-    """The Spark operator must run the REAL decode (fake=False) for PNG
-    blobs: width/height from IHDR, mean_luma from actual pixels."""
-    from fund_data_etl_pipeline_spark.operators.multimodal import (
-        MEDIA_SCHEMA,
-        decode_image_features,
-    )
-    from fund_data_etl_pipeline_spark.operators.png_codec import mean_luma
-
-    pxs = [_random_pixels(6, 10, 3, seed=s) for s in (11, 12)]
-    rows = [
-        (
-            i,
-            "image",
-            bytearray(encode_png(px, filters=[0, 1, 2, 3, 4, 1])),
-            (10, 6, 3, None, None, None),
-        )
-        for i, px in enumerate(pxs)
-    ]
-    df = spark.createDataFrame(rows, MEDIA_SCHEMA)
-    out = {r["media_id"]: r for r in decode_image_features(df).collect()}
-    for i, px in enumerate(pxs):
-        r = out[i]
-        assert (r["width"], r["height"]) == (10, 6)
-        assert abs(r["mean_luma"] - mean_luma(px)) < 1e-9
-
-
 # --- round-6 upgrades: palette / sub-byte / 16-bit / GA / Adam7 -----------
 
 def _write_png_general(

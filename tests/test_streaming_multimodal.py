@@ -1,4 +1,4 @@
-"""Structured Streaming file-ingest tests + multimodal plumbing tests."""
+"""Structured Streaming file-ingest tests."""
 
 from __future__ import annotations
 
@@ -6,15 +6,8 @@ import json
 import os
 import tempfile
 
-import pytest
 from pyspark.sql import functions as F
 
-from fund_data_etl_pipeline_spark.operators.multimodal import (
-    MEDIA_SCHEMA,
-    decode_image_features,
-    resize_plan,
-    sample_frames,
-)
 from fund_data_etl_pipeline_spark.streaming.file_ingest import (
     read_document_stream,
     stream_dividend_pipeline,
@@ -97,50 +90,6 @@ def test_streaming_window_with_watermark(spark, tmp_path):
     }
     assert ("2026-01-15T10:00:00", 6) in got  # 10:00..10:25
     assert ("2026-01-15T10:30:00", 4) in got  # 10:30..10:45
-
-
-@pytest.fixture()
-def media_df(spark):
-    rows = [
-        (1, "image", b"imgbytes-1", (64, 48, 3, None, None, None)),
-        (2, "image", b"imgbytes-2", (640, 480, 3, None, None, None)),
-        (3, "audio", b"wavbytes", (None, None, None, 16000, None, None)),
-        (4, "video", b"mp4bytes", (1920, 1080, 3, None, 30.0, 95)),
-    ]
-    return spark.createDataFrame(rows, MEDIA_SCHEMA)
-
-
-def test_decode_image_stub_raises_without_fake(spark, media_df):
-    with pytest.raises(Exception) as e:
-        decode_image_features(media_df, fake=False).collect()
-    assert "NotImplementedError" in str(e.value) or "codec" in str(e.value)
-
-
-def test_decode_image_fake_plumbing(spark, media_df):
-    out = {r["media_id"]: r for r in decode_image_features(media_df, fake=True).collect()}
-    assert set(out) == {1, 2}  # only images pass the kind filter
-    r = out[1]
-    assert r["n_bytes"] == len(b"imgbytes-1")
-    assert r["width"] == 64 and r["height"] == 48
-    assert 0.0 < r["mean_luma"] < 255.0
-    # deterministic: same input -> same features
-    again = {r["media_id"]: r for r in decode_image_features(media_df, fake=True).collect()}
-    assert again[1]["mean_luma"] == r["mean_luma"]
-    assert again[1]["bytes_md5"] == r["bytes_md5"]
-
-
-def test_resize_plan(spark, media_df):
-    out = {r["media_id"]: r for r in resize_plan(media_df, target=224).collect()}
-    assert out[1]["out_height"] == 224  # shortest side 48 -> 224
-    assert out[1]["out_width"] == round(64 * 224 / 48)
-    assert out[2]["out_height"] == 224
-    assert out[2]["out_width"] == round(640 * 224 / 480)
-
-
-def test_sample_frames(spark, media_df):
-    frames = sample_frames(media_df, every_n=10).collect()
-    assert all(r["media_id"] == 4 for r in frames)
-    assert [r["frame_index"] for r in frames] == list(range(0, 95, 10))
 
 
 def test_streaming_dedup_within_watermark(spark, tmp_path):

@@ -11,6 +11,7 @@ import numpy as np
 import pytest
 
 from fund_data_etl_pipeline_spark.operators.tiff_codec import decode_tiff
+from tests.test_pdf_text import lzw_encode
 
 
 def _packbits(row: bytes) -> bytes:
@@ -207,76 +208,9 @@ def test_tiff_named_errors():
         decode_tiff(bytes(jp))
 
 
-def test_tiff_spark_image_path(spark):
-    from fund_data_etl_pipeline_spark.operators.multimodal import (
-        MEDIA_SCHEMA,
-        decode_image_features,
-    )
-    from fund_data_etl_pipeline_spark.operators.png_codec import mean_luma
-
-    img = _rgb(h=5, w=7)
-    rows = [(51, "image", write_tiff(img), (7, 5, 3, None, None, None))]
-    df = spark.createDataFrame(rows, MEDIA_SCHEMA)
-    r = decode_image_features(df, fake=False).collect()[0]
-    assert (r["width"], r["height"]) == (7, 5)
-    assert abs(r["mean_luma"] - mean_luma(img)) < 1e-9
-
-
 # --- TIFF LZW (compression 5) and Deflate (8) -----------------------------
-# In-test forward LZW encoder: MSB-first packing and the spec's "early
-# change" width bump, mirroring the decoder in lockstep.
-
-class _MSBWriter:
-    def __init__(self):
-        self.acc = 0
-        self.nbits = 0
-        self.out = bytearray()
-
-    def put(self, code, width):
-        self.acc = (self.acc << width) | code
-        self.nbits += width
-        while self.nbits >= 8:
-            self.out.append((self.acc >> (self.nbits - 8)) & 0xFF)
-            self.nbits -= 8
-            self.acc &= (1 << self.nbits) - 1
-
-    def flush(self):
-        if self.nbits:
-            self.out.append((self.acc << (8 - self.nbits)) & 0xFF)
-        return bytes(self.out)
-
-
-def _lzw_encode_tiff(data: bytes) -> bytes:
-    CLEAR, EOI = 256, 257
-    w = _MSBWriter()
-
-    def fresh():
-        return {bytes([i]): i for i in range(256)}, 258, 9
-
-    table, next_code, width = fresh()
-    w.put(CLEAR, width)
-    run = b""
-    for byte in data:
-        cand = run + bytes([byte])
-        if cand in table:
-            run = cand
-            continue
-        w.put(table[run], width)
-        table[cand] = next_code
-        # early change: the bump keys on the just-ASSIGNED entry index
-        # reaching 2^width - 1 (one earlier than GIF's 2^width)
-        if next_code == (1 << width) - 1 and width < 12:
-            width += 1
-        next_code += 1
-        if next_code >= 4094:
-            w.put(CLEAR, width)
-            table, next_code, width = fresh()
-        run = bytes([byte])
-    if run:
-        w.put(table[run], width)
-    w.put(EOI, width)
-    return w.flush()
-
+# TIFF Section 13 LZW is PDF's LZWDecode with EarlyChange = 1, so the
+# strips are packed with the in-test PDF LZW encoder.
 
 def _strip_recompress(blob: bytes, comp: int, transform) -> bytes:
     """Rewrite an uncompressed single-strip in-test TIFF: set the
@@ -315,7 +249,7 @@ def test_tiff_lzw_roundtrip():
             )
         else:
             img = rng.integers(0, 256, size=(30, 40, 3), dtype=np.uint8)
-        blob = _strip_recompress(write_tiff(img), 5, _lzw_encode_tiff)
+        blob = _strip_recompress(write_tiff(img), 5, lzw_encode)
         _, _, _, px = decode_tiff(blob)
         assert np.array_equal(px, img)
 
@@ -325,7 +259,7 @@ def test_tiff_lzw_width_bumps_and_clear():
     # and the 4094-entry mid-stream clear
     rng = np.random.default_rng(10)
     img = rng.integers(0, 256, size=(60, 80, 3), dtype=np.uint8)
-    blob = _strip_recompress(write_tiff(img), 5, _lzw_encode_tiff)
+    blob = _strip_recompress(write_tiff(img), 5, lzw_encode)
     _, _, _, px = decode_tiff(blob)
     assert np.array_equal(px, img)
 
@@ -352,7 +286,7 @@ def test_tiff_lzw_with_horizontal_predictor():
         rows = np.frombuffer(body, dtype=np.uint8).reshape(14, 20, 3)
         d = rows.astype(np.int16)
         d[:, 1:] = d[:, 1:] - d[:, :-1]
-        return _lzw_encode_tiff((d % 256).astype(np.uint8).tobytes())
+        return lzw_encode((d % 256).astype(np.uint8).tobytes())
 
     blob = bytearray(_strip_recompress(write_tiff(img), 5, delta_then_lzw))
     # append a Predictor=2 tag: easier — rewrite IFD by inserting is

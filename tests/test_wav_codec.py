@@ -109,44 +109,6 @@ def test_named_errors():
         decode_wav(write_wav(_tone(frames=10))[:-25])
 
 
-def test_audio_features_real_wav_path(spark):
-    """The Spark operator must run the REAL WAV decode (fake=False):
-    sample_rate/duration/rms from the actual PCM samples."""
-    from fund_data_etl_pipeline_spark.operators.multimodal import (
-        MEDIA_SCHEMA,
-        decode_audio_features,
-    )
-
-    s = _tone(frames=1600)
-    blob = write_wav(s, rate=16000, bits=16)
-    rows = [
-        (7, "audio", blob, (None, None, None, 16000, None, None)),
-        (8, "image", b"\x89PNGnotaudio", (4, 4, 3, None, None, None)),
-    ]
-    df = spark.createDataFrame(rows, MEDIA_SCHEMA)
-    out = decode_audio_features(df, fake=False).collect()
-    assert len(out) == 1  # kind filter drops the image row
-    r = out[0]
-    assert r["sample_rate"] == 16000 and r["channels"] == 2
-    assert r["n_frames"] == 1600
-    assert abs(r["duration_s"] - 0.1) < 1e-9
-    expected_rms = float(np.sqrt(np.mean(s**2)))
-    assert abs(r["rms"] - expected_rms) < 1e-3
-
-
-def test_audio_features_quarantines_compressed(spark):
-    from fund_data_etl_pipeline_spark.operators.multimodal import (
-        MEDIA_SCHEMA,
-        decode_audio_features,
-    )
-
-    rows = [(9, "audio", b"\xff\xfb\x90mp3frame", (None, None, None, 44100, None, None))]
-    df = spark.createDataFrame(rows, MEDIA_SCHEMA)
-    with pytest.raises(Exception) as e:
-        decode_audio_features(df, fake=False).collect()
-    assert "NotImplementedError" in str(e.value) or "codec" in str(e.value)
-
-
 # --- ITU-T G.711 A-law / mu-law (format tags 6/7) ------------------------
 # In-test INDEPENDENT compressors implementing the spec's forward
 # (compress) direction, segment-search style — the decoder under test
@@ -236,11 +198,7 @@ def test_g711_roundtrip_within_one_step():
     assert np.all(np.abs(adec - pcm) <= astep)
 
 
-def test_g711_wav_container_and_spark_path(spark):
-    from fund_data_etl_pipeline_spark.operators.multimodal import (
-        MEDIA_SCHEMA,
-        decode_audio_features,
-    )
+def test_g711_wav_container():
     from fund_data_etl_pipeline_spark.operators.wav_codec import (
         decode_wav,
         expand_mulaw,
@@ -257,13 +215,6 @@ def test_g711_wav_container_and_spark_path(spark):
     assert np.array_equal(samples.reshape(-1), ref)
     # quantized tone keeps its level: companding error is ~sub-percent
     assert abs(rms(samples) - 0.4 / np.sqrt(2)) < 0.01
-
-    rows = [(11, "audio", blob, (None, None, None, 8000, None, None))]
-    df = spark.createDataFrame(rows, MEDIA_SCHEMA)
-    r = decode_audio_features(df, fake=False).collect()[0]
-    assert r["sample_rate"] == 8000 and r["channels"] == 1
-    assert r["n_frames"] == 800
-    assert abs(r["rms"] - rms(samples)) < 1e-9
 
     # G.711 must be 8-bit: a 16-bit G.711 header is a NAMED error
     bad = bytearray(write_g711_wav(comp, tag=6))
@@ -392,25 +343,3 @@ def test_ima_adpcm_named_errors():
     j = blob.index(b"data") + 8
     with pytest.raises(ValueError, match="truncated"):
         decode_wav(blob[: j + 2])
-
-
-def test_ima_adpcm_spark_audio_path(spark):
-    from fund_data_etl_pipeline_spark.operators.multimodal import (
-        MEDIA_SCHEMA,
-        decode_audio_features,
-    )
-    from fund_data_etl_pipeline_spark.operators.wav_codec import (
-        decode_wav,
-        rms,
-    )
-
-    t = np.arange(505) / 8000.0
-    pcm = np.round(10000 * np.sin(2 * np.pi * 220 * t)).astype(int)
-    blob, _ = write_ima_wav(pcm.reshape(-1, 1))
-    _, _, samples = decode_wav(blob)
-    rows = [(41, "audio", blob, (None, None, None, 8000, None, None))]
-    df = spark.createDataFrame(rows, MEDIA_SCHEMA)
-    r = decode_audio_features(df, fake=False).collect()[0]
-    assert r["sample_rate"] == 8000 and r["channels"] == 1
-    assert r["n_frames"] == samples.shape[0]
-    assert abs(r["rms"] - rms(samples)) < 1e-9
