@@ -31,11 +31,11 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """One entry per implemented operator from SURVEY.md §2 (priority
-    names first — see plans.PRIORITY)."""
-    return plans.ordered_queries()
+    """One entry per implemented operator from SURVEY.md §2, in
+    registration order."""
+    return plans.QUERIES
 
 
 def oracle_sql() -> dict[str, str]:
     """DuckDB-equivalent SQL for each SQL-expressible query."""
-    return plans.ordered_oracles()
+    return plans.ORACLES

@@ -27,7 +27,9 @@ If a caller derives children and drops the parent handle before
 collecting, the children still compute correctly — Spark's cache
 substitution happens at physical planning, so a missing cache entry
 means a recompute, never a wrong answer. The hook trades, at worst, a
-recompute for guaranteed reclamation.
+recompute for guaranteed reclamation. Only persists enroll: a local
+checkpoint's blocks are the only copy of its data, so releasing one
+under a live child would fail the child instead of recomputing it.
 """
 
 from __future__ import annotations
@@ -57,6 +59,18 @@ def persist_tracked(df: DataFrame) -> DataFrame:
     if stack:
         stack[-1].append(df)
     return df
+
+
+def release(df: DataFrame) -> None:
+    """Free ``df``'s storage: its cache entry, and the blocks of its RDD
+    when ``df`` is a local checkpoint (a ``LogicalRDD`` leaf, which
+    ``DataFrame.unpersist`` and ``clearCache`` do not reach). Releasing
+    twice is a no-op. Only for state no other live plan reads: a plan
+    that scans a released checkpoint fails rather than recomputes."""
+    df.unpersist()
+    plan = df._jdf.queryExecution().analyzed()
+    if plan.nodeName() == "LogicalRDD" and plan.rdd().isCheckpointed():
+        plan.rdd().unpersist(False)
 
 
 @contextlib.contextmanager

@@ -21,12 +21,12 @@ Embedding-cosine near-dup lives in operators/similarity.py.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..functions.numeric import round2
-from .caching import persist_tracked
+from .caching import persist_tracked, release
 from ..functions.text import (
     MINHASH_A,
     MINHASH_BANDS,
@@ -363,11 +363,9 @@ def shingle_hash_prepped(
 # the whole upstream signature pipeline per query.
 _LEAD_MAX_J = 30  # lead offsets are JVM ints; 2^30 is the largest safe one
 
-# connected_components: probed rounds persist on top of each other; cut
-# the lineage with a localCheckpoint once this many cache levels nest
-# (see the loop comment — nested InMemoryRelations cost O(2^depth) in
-# driver plan machinery; 3 keeps that term under ~35 KB of plan text).
-_CC_TRUNCATE_NESTING = 3
+# connected_components raises ComponentRoundLimitError past this many
+# label-propagation rounds (see its docstring)
+CC_MAX_ROUNDS = 25
 
 
 def doubling_chain_pairs(
@@ -381,13 +379,14 @@ def doubling_chain_pairs(
     giant-cluster probe exposed that a capped ladder only divides the
     diameter by its largest stride — C/128 label-propagation rounds, so
     a 10^5-member boilerplate cluster (real crawls have them) needs
-    ~780 rounds and silently exceeds connected_components' max_iter.
+    ~780 rounds, past connected_components' CC_MAX_ROUNDS.
     Rank-doubling pairs reach any rank from any other in <= 2*log2(C)
-    hops (binary decomposition of the rank gap), so propagation
-    converges in <= log2(C)+1 rounds — 18 at C=10^5 — and the star
-    variant in fewer still. Costs: occ * (log2(occ)+1) pairs per bucket
-    (the old ladder's 8*occ, now growing logarithmically — the minimum
-    for a log diameter), plus one extra shuffle (the rank equi-join
+    hops (binary decomposition of the rank gap), so propagation over
+    one such bucket converges in <= log2(C)+1 rounds — 18 at C=10^5.
+    Costs:
+    occ * (log2(occ)+1) pairs per bucket (the old ladder's 8*occ, now
+    growing logarithmically — the minimum for a log diameter), plus one
+    extra shuffle (the rank equi-join
     instead of window leads). Rank 1 pairs with rank 2 (j=0 is always a
     live stride since occ > cap >= 1), so bucket connectivity — the
     property dedup_groups' single-group guarantee rests on — is
@@ -812,8 +811,8 @@ def minhash_lsh_pairs(
     true O(log C) so the propagation loop's round count stays
     logarithmic at ANY cluster size (r8 probe: the former fixed
     1..128 ladder only divided the diameter by 128, so a 10^5-member
-    cluster needed ~C/128 propagation rounds and silently exceeded
-    max_iter); forgone are only bucket pairs off the doubling ladder in
+    cluster needed ~C/128 propagation rounds, past CC_MAX_ROUNDS);
+    forgone are only bucket pairs off the doubling ladder in
     a mixed oversized bucket — quantified capped-vs-uncapped in
     BASELINE.md's recall table (tools/recall_probe.py). On a cluster at
     100 TB the persisted tables become written intermediates (bucketed
@@ -1016,11 +1015,15 @@ def ngram_jaccard_pairs(
     )
 
 
+class ComponentRoundLimitError(RuntimeError):
+    """``connected_components`` found no fixpoint within ``CC_MAX_ROUNDS``:
+    some component is more than CC_MAX_ROUNDS - 1 hops across."""
+
+
 def connected_components(
     pairs: DataFrame,
     ids: DataFrame,
     id_col: str = "doc_id",
-    max_iter: int = 25,
     stats: dict | None = None,
     with_sizes: bool = True,
 ) -> DataFrame:
@@ -1043,6 +1046,16 @@ def connected_components(
     ``.distinct()`` of its own (a full-width exchange that map-side
     partial aggregation cannot shrink when rows are already unique).
 
+    Round limit: a component whose labels still change after
+    ``CC_MAX_ROUNDS`` rounds raises ``ComponentRoundLimitError`` rather
+    than returning partial labels. Min labels move one hop per round, so
+    the limit bounds the diameter this operator resolves. Rank doubling
+    (doubling_chain_pairs) bounds only the diameter inside one oversized
+    LSH bucket, to about log2(C) for C members; pairs from different
+    buckets and bands can still chain without limit (a run of
+    statements each near-identical only to the next), and such input
+    raises here.
+
     Scale shape (restructured r13 — guide §2.3/§2.4): propagation runs
     ONLY over nodes that appear in the edge list — a singleton's label
     never changes and never influences a neighbor's min, so the full
@@ -1052,16 +1065,17 @@ def connected_components(
     repartitioned ONCE on its probe key (dst) so the per-round join is
     co-partitioned against label state (itself id-hash-partitioned by
     the previous round's groupBy) — one exchange per round (the
-    unavoidable label regroup), not three. Label state is persisted and
-    materialized BY the convergence aggregate — one driver-blocked job
-    per round, where the r4 form paid two (eager localCheckpoint + the
-    sum probe; under AQE an eager checkpoint additionally materializes
-    every upstream stage as its own job). Convergence is the monotone
-    label-sum aggregate, one tiny job per round. At 100 TB the same
-    loop swaps persist for a durable checkpoint every few rounds
-    (bounded lineage); rounds stay few because text near-dup graphs are
-    star-like (large-star/small-star alternation is the escalation path
-    for adversarial diameters, per the Kang et al. CC-MR line of work).
+    unavoidable label regroup), not three. Every round's label state is
+    ``observe(label sum).localCheckpoint(eager=True)``: the one job that
+    materializes the state also yields the convergence sum, and the
+    next round's plan starts from a LogicalRDD leaf, so lineage and plan
+    size stay constant however many rounds run. The previous round's
+    blocks are released as soon as the next round is materialized (and
+    on any failure); the final state is left to Spark's ContextCleaner,
+    which drops it at the first driver GC after no plan references it,
+    so a plan derived from the result still runs after the result itself
+    is dropped (``clearCache`` does not reach it). At 100 TB
+    the same loop swaps the local checkpoint for a durable one.
 
     Why a driver loop and not SQL: Spark 4's recursive CTEs support only
     UNION ALL in the recursive member (UNION_NOT_SUPPORTED_IN_RECURSIVE_
@@ -1077,9 +1091,8 @@ def connected_components(
     # distinct was a full-width exchange that map-side partial
     # aggregation couldn't shrink (every row unique). Self-inclusion —
     # the self-loop rows' only job — moves into the aggregates below.
-    # persist_tracked: the explicit unpersist below reclaims on the
-    # happy path; the collector tie is the exception-path backstop
-    # (double-unpersist is a no-op).
+    # Persisted for the loop only: the returned plan reads the final
+    # label checkpoint, never the edges.
     edges = persist_tracked(
         pairs.select(
             F.explode(
@@ -1092,6 +1105,17 @@ def connected_components(
         .select("e.src", "e.dst")
         .repartition("dst")
     )
+    # convergence: labels only ever decrease, so the label sum is
+    # strictly monotone until the fixpoint — one cheap observed aggregate
+    # per round instead of a label-vs-label shuffle join (decimal(38)
+    # can't overflow at any realistic id range x row count)
+    label_sum = F.sum(F.col("label").cast("decimal(38,0)")).alias("s")
+
+    def checkpoint(state: DataFrame) -> tuple[DataFrame, object]:
+        obs = Observation()
+        cp = state.observe(obs, label_sum).localCheckpoint(eager=True)
+        return cp, obs.get["s"]
+
     # round 1 fused into initialization: with labels0(v) = v, a node's
     # first-round label is min over N(u) ∪ {u} — least(node, min of
     # neighbors). The edge set is SYMMETRIC (both directions emitted),
@@ -1099,98 +1123,48 @@ def connected_components(
     # src while REUSING the repartition("dst") layout — the init
     # aggregate runs exchange-free where the old groupBy(src) form
     # re-shuffled the whole edge list a second time.
-    labels = persist_tracked(
-        edges.groupBy(F.col("dst").alias("id"))
-        .agg(F.min("src").alias("__m"))
-        .select("id", F.least("id", "__m").alias("label"))
-    )
-    # convergence probe: labels only ever decrease, so the label sum is
-    # strictly monotone until the fixpoint — one cheap aggregate per round
-    # instead of a label-vs-label shuffle join (decimal(38) can't overflow
-    # at any realistic id range x row count). The aggregate doubles as the
-    # materialization action for the round's persisted state.
-    label_sum = F.sum(F.col("label").cast("decimal(38,0)")).alias("s")
-    prev_sum = labels.agg(label_sum).first()["s"]
-    prev_probe_round = 1
-    last_persisted = labels
-    nested_caches = 1  # persist-on-persist depth since the last lineage cut
-    rounds = 1
-    for _ in range(max_iter - 1):
-        # Round update: label'(u) = least(u, min over N(u) of label(v)).
-        # This references the previous round's state ONCE (r14): the r13
-        # form unioned ``labels`` back into the aggregate to add the
-        # self-label, which referenced the round-(r-1) plan TWICE — the
-        # logical plan doubled every round, and on deep graphs plan
-        # analysis/cache-normalization cost grew 2^rounds (measured: an
-        # 8-node chain took 304 s, a long-chain test 1457 s; invisible at
-        # sf0.1's 2 rounds). least(u, ·) is provably label-identical to
-        # min over N(u) ∪ {u}: labels are monotone non-increasing, and by
-        # induction any label u holds is either u itself (the least arm)
-        # or arrived from a neighbor whose own label is still <= it (so
-        # the neighbor-min arm re-delivers it) — per-round label values,
-        # the convergence round count and the fixpoint are unchanged.
-        # The join runs over the co-partitioned edge layout (edges hashed
-        # by dst at persist, labels by id from the previous aggregate —
-        # no exchange); the groupBy(src) regroup is the round's one
-        # unavoidable exchange.
-        nxt = (
-            edges.join(labels, edges["dst"] == labels["id"])
-            .groupBy(F.col("src").alias("id"))
-            .agg(F.min("label").alias("__m"))
+    labels = None
+    try:
+        labels, prev_sum = checkpoint(
+            edges.groupBy(F.col("dst").alias("id"))
+            .agg(F.min("src").alias("__m"))
             .select("id", F.least("id", "__m").alias("label"))
         )
-        rounds += 1
-        # Convergence-probe cadence (r14, guide §2.4 — halve driver
-        # round-trips on deep graphs): labels are MONOTONE non-increasing,
-        # so equality of the label sum across a k-round span proves every
-        # round in the span was a no-op — overshooting the fixpoint by
-        # k-1 rounds is semantics-free (the fixpoint is idempotent).
-        # Rounds 1-2 are probed every round (near-dup graphs are
-        # star-like and usually converge by round 2 — the common case
-        # pays zero extra rounds); past round 2 the probe runs every 2nd
-        # round, and the unprobed round stays UNPERSISTED pure lineage,
-        # computed once inside the next probe's job — one driver-blocked
-        # job per two rounds instead of one per round.
-        cadence = 1 if rounds <= 2 else 2
-        if rounds - prev_probe_round < cadence and rounds < max_iter:
+        for rounds in range(2, CC_MAX_ROUNDS + 1):
+            # label'(u) = least(u, min over N(u) of label(v)) references
+            # the previous state once, and is label-identical to min over
+            # N(u) ∪ {u}: labels are monotone non-increasing, and by
+            # induction any label u holds is either u itself (the least
+            # arm) or arrived from a neighbor whose own label is still
+            # <= it (so the neighbor-min arm re-delivers it). The join
+            # runs over the co-partitioned edge layout; the groupBy(src)
+            # regroup is the round's one exchange.
+            nxt, cur_sum = checkpoint(
+                edges.join(labels, edges["dst"] == labels["id"])
+                .groupBy(F.col("src").alias("id"))
+                .agg(F.min("label").alias("__m"))
+                .select("id", F.least("id", "__m").alias("label"))
+            )
+            release(labels)
             labels = nxt
-            continue
-        prev_persisted = last_persisted
-        if nested_caches >= _CC_TRUNCATE_NESTING:
-            # Bound the NESTED-CACHE depth (r14, measured): a chain of
-            # persisted rounds nests each InMemoryRelation's cached
-            # physical plan inside the next, and Spark's plan
-            # rendering/canonicalization over that nesting costs
-            # O(2^depth) — the optimized-plan STRING of a 15-round chain
-            # reached 80 MB and per-probe driver time grew 0.4 s → 55 s
-            # while job counts stayed constant (pure driver plan-
-            # machinery, no recomputation). localCheckpoint(eager=True)
-            # truncates to a LogicalRDD leaf, resetting the depth; like
-            # any localCheckpoint it trades fault-tolerance of that
-            # intermediate for lineage truncation (guide §5) — at
-            # cluster scale the docstring's durable-checkpoint swap
-            # applies. Shallow graphs (the sf corpora converge in 2
-            # rounds) never reach the threshold, so the common-case
-            # plan/job shape is untouched.
-            labels = nxt.localCheckpoint(eager=True)
-            nested_caches = 0
+            if cur_sum == prev_sum:
+                break
+            prev_sum = cur_sum
         else:
-            labels = persist_tracked(nxt)
-            nested_caches += 1
-        last_persisted = labels if nested_caches else None
-        cur_sum = labels.agg(label_sum).first()["s"]
-        if prev_persisted is not None:
-            prev_persisted.unpersist()
-        if cur_sum == prev_sum:
-            # monotonicity: sum(prev_probe) == sum(now) means every round
-            # since the previous probe was already at the fixpoint, so
-            # the first no-op round was prev_probe_round + 1 (within
-            # cadence-1 of the probe-every-round stat; exact at cadence 1)
-            rounds = prev_probe_round + 1
-            break
-        prev_sum = cur_sum
-        prev_probe_round = rounds
-    edges.unpersist()
+            raise ComponentRoundLimitError(
+                f"connected_components: labels still changing after "
+                f"{CC_MAX_ROUNDS} rounds (a component is more than "
+                f"{CC_MAX_ROUNDS - 1} hops across)"
+            )
+    except BaseException:
+        if labels is not None:
+            release(labels)
+        raise
+    finally:
+        edges.unpersist()
+    # the returned plan scans the final state (twice with sizes), and a
+    # plan derived from it may run after the handle is gone, so its blocks
+    # are left to Spark's ContextCleaner (see the docstring)
     if stats is not None:
         # observability for the giant-cluster probe (VERDICT r7 #3): the
         # stride-ladder claim is rounds ∝ log(cluster size)
@@ -1223,11 +1197,7 @@ def connected_components(
         "group_size",
     )
     # attach the full universe: singletons (never touched by an edge)
-    # come out as their own size-1 group. The final label state's cache
-    # is already enrolled (persist_tracked in the loop) and scanned
-    # twice by the returned plan (sizes + the grouped join), so it must
-    # outlive this call — intermediate rounds were unpersisted above
-    # (double-unpersist at collector release is a no-op).
+    # come out as their own size-1 group
     return (
         ids.select(F.col(id_col))
         .join(grouped, id_col, "left")
@@ -1238,114 +1208,6 @@ def connected_components(
                 "group_size"
             ),
         )
-    )
-
-
-def connected_components_two_phase(
-    pairs: DataFrame,
-    ids: DataFrame,
-    id_col: str = "doc_id",
-    max_rounds: int = 20,
-    stats: dict | None = None,
-) -> DataFrame:
-    """Connected components by alternating large-star / small-star edge
-    rewrites (the Kiveris et al. 2014 "Connected Components in MapReduce
-    and Beyond" two-phase algorithm) — the escalation path for graphs
-    whose diameter defeats plain min-label propagation: a D-hop chain
-    needs D propagation rounds but only O(log D) star rounds, because
-    every round re-points whole neighborhoods at their minimum rather
-    than moving labels one hop.
-
-    Per round, with m(u) = min(N(u) ∪ {u}) computed as a window MIN over
-    the symmetric edge list (never a collected neighbor set):
-      large-star: every edge (u,v), v > u  becomes (v, m(u))
-      small-star: every edge (u,v), v <= u becomes (v, m(u)), plus
-                  (u, m(u)) — re-pointing u itself
-    At the fixpoint the edge set is a forest of stars rooted at each
-    component's minimum id; labels read directly off the edges. Same
-    output contract as ``connected_components``.
-
-    Scale shape: each phase is one shuffle on the grouping node (window
-    partition) + a distinct; edge state is localCheckpoint'ed per round
-    (constant lineage — durable checkpoints on a cluster). Convergence is
-    a signature of the canonicalized edge set — (count, sum(hi), sum(lo),
-    sum(xxhash64(hi, lo))) — one tiny aggregate, never an edge-vs-edge
-    join; the order-insensitive hash sum distinguishes edge sets that tie
-    on counts and coordinate sums (e.g. {(5,1),(4,2)} vs {(5,2),(4,1)}),
-    so a false fixpoint would need a 64-bit hash-sum collision.
-    """
-    # canonical undirected pair (hi, lo), self-loops dropped
-    edges = (
-        pairs.select(
-            F.greatest("d1", "d2").alias("hi"), F.least("d1", "d2").alias("lo")
-        )
-        .filter(F.col("hi") != F.col("lo"))
-        .distinct()
-        .localCheckpoint()
-    )
-
-    def sym(e: DataFrame) -> DataFrame:
-        return e.select(F.col("hi").alias("u"), F.col("lo").alias("v")).unionByName(
-            e.select(F.col("lo").alias("u"), F.col("hi").alias("v"))
-        )
-
-    def star(e: DataFrame, large: bool) -> DataFrame:
-        s = sym(e)
-        m = F.least(F.min("v").over(Window.partitionBy("u")), F.col("u"))
-        s = s.withColumn("m", m)
-        cond = F.col("v") > F.col("u") if large else F.col("v") <= F.col("u")
-        out = s.filter(cond).select(F.col("v").alias("a"), F.col("m").alias("b"))
-        if not large:
-            out = out.unionByName(
-                s.select(F.col("u").alias("a"), F.col("m").alias("b"))
-            )
-        return (
-            out.select(
-                F.greatest("a", "b").alias("hi"), F.least("a", "b").alias("lo")
-            )
-            .filter(F.col("hi") != F.col("lo"))
-            .distinct()
-        )
-
-    sig_cols = [
-        F.count(F.lit(1)).alias("n"),
-        F.sum(F.col("hi").cast("decimal(38,0)")).alias("sh"),
-        F.sum(F.col("lo").cast("decimal(38,0)")).alias("sl"),
-        # collision-resistant term: distinct edge sets can tie on the
-        # coordinate sums, but not (modulo a 64-bit collision) on the sum
-        # of per-edge hashes
-        F.sum(F.xxhash64("hi", "lo").cast("decimal(38,0)")).alias("sx"),
-    ]
-    sig_keys = ("n", "sh", "sl", "sx")
-    prev = edges.agg(*sig_cols).first()
-    rounds = 0
-    for _ in range(max_rounds):
-        # checkpoint BETWEEN the phases too: sym() references its input
-        # from two union branches, so an un-materialized large-star plan
-        # would execute twice inside small-star (the note-6 trap)
-        edges = star(edges, large=True).localCheckpoint()
-        edges = star(edges, large=False).localCheckpoint()
-        rounds += 1
-        cur = edges.agg(*sig_cols).first()
-        if tuple(cur[k] for k in sig_keys) == tuple(prev[k] for k in sig_keys):
-            break
-        prev = cur
-    if stats is not None:
-        stats["rounds"] = rounds
-    # star edges: hi -> root(lo); singletons label themselves. min-agg
-    # guards the not-fully-converged case (max_rounds hit) from fanning
-    # out the left join
-    roots = edges.groupBy("hi").agg(F.min("lo").alias("lo"))
-    labels = (
-        ids.select(F.col(id_col).alias("id"))
-        .join(roots.select(F.col("hi").alias("id"), F.col("lo")), "id", "left")
-        .select("id", F.coalesce("lo", "id").alias("label"))
-    )
-    sizes = labels.groupBy("label").agg(F.count(F.lit(1)).alias("group_size"))
-    return labels.join(sizes, "label").select(
-        F.col("id").alias(id_col),
-        F.col("label").alias("group_id"),
-        "group_size",
     )
 
 

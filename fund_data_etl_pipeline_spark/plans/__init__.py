@@ -106,207 +106,3 @@ def load_all() -> None:
         vectors,
         windows,
     )
-
-
-# Round-13 rotation policy (VERDICT r12 next-step #1). Cap is 50 driver
-# slots; 112 queries registered (111 oracle-bearing). Invariant: every
-# oracle-bearing query is driver-green within the last two rounds, OR on
-# the documented peer-coverage exception list below (re-proven by the
-# local gate at all three SFs instead).
-#
-# This round's 50 slots: (a) the two r12-registered indexed forms —
-# exact oracles, judge-proven locally, owed their FIRST driver rows
-# (their on-disk index is pre-warmed at round end so the driver row
-# measures attach + probe, not a first-touch build); (b) the nine
-# r12 exception-valve names — last driver row r10, their valve window
-# closes now; (c) 39 of the 50 r11-green names whose two-round window
-# closes at r13. The other 11 r11-green names move to the exception
-# valve with peer coverage — see the note below the list.
-PRIORITY = [
-    # (a) r12-registered steady-state indexed forms — first driver rows
-    "dedup_incremental_minhash_indexed",
-    "vector_ann_ivf_indexed",
-    # (b) r12 exception-valve names — last driver row r10; window closes
-    "fund_manual_apply",
-    "dedup_incremental_exact",
-    "dedup_groups_star",
-    "dedup_hybrid",
-    "events_tumbling_window",
-    "window_running",
-    "cast_round_coerce",
-    "semi_join_parts",
-    "rollup_priority",
-    # (c) r11-green names whose window closes at r13 (39 of 50)
-    "dim_merge",
-    "cube_lineitem",
-    "topk_revenue",
-    "agg_stats",
-    "intersect_nations",
-    "except_nations",
-    "quality_deciles",
-    "doc_hash_split",
-    "vector_ann_ivf",
-    "dedup_minhash_lsh",
-    "top_users_per_event",
-    "attribution_join",
-    "fund_classify",
-    "fund_dividend",
-    "fund_quarantine",
-    "fund_purchase_apply",
-    "fund_purchase_confirm",
-    "fund_redemption_confirm",
-    "fund_conversion",
-    "graph_pagerank",
-    "multimodal_binary_stats",
-    "dq_constraint_report",
-    "k_anonymity_audit",
-    "mixed_sort_key",
-    "json_extract_agg",
-    "anti_join_customers",
-    "distinct_pairs",
-    "asof_last_click",
-    "grouping_sets_sql",
-    "correlated_subquery",
-    "shipping_priority_topk",
-    "market_share",
-    "late_sole_supplier",
-    "text_token_count",
-    "source_capped_sample",
-    "corpus_curation",
-    "text_c4_filters",
-    "events_session_window",
-    "user_rolling_7d_spend",
-]
-
-# PRIORITY is exactly at the 50-query driver cap (2 + 9 + 39).
-
-# EXCEPTION LIST (round-13 cap overflow — 61 names owed a row vs 50
-# slots, so these eleven r11-green queries go one round on peer
-# coverage). Each is chosen because its machinery is provably inside
-# r12-green or r13-PRIORITY peers, and each is re-proven by the local
-# gate (tools/check_correctness.py) at sf0.001/0.01/0.1 this round:
-#   dim_join_left — the J1 broadcast dim left join (plan-asserted
-#     broadcast) runs inside EVERY r12-green fund row
-#     (fund_dividend_scaled, fund_manual_confirm/redemption/dividend)
-#     via operators/normalize.with_fund_dim;
-#   isin_filter — the Q1 whitelist filter is exercised by the r12-green
-#     fund_manual_confirm row (business-type doc 603 dropped by the
-#     same isin machinery);
-#   date_math — N3 date defaulting/arithmetic runs inside every
-#     r12-green fund row (confirm-date defaulting);
-#   derived_arithmetic — N4 derived-with-fallback is the refund
-#     expression inside the r12-green fund_manual_confirm row;
-#   group_merge — the A1 dividend group-merge aggregate is the merge
-#     stage of the r12-green fund_dividend_scaled row;
-#   union_slices — U1 unionByName drives the r12-green
-#     fund_dividend_scaled multi-branch cascade (and every fund job);
-#   fund_dividend_merged — composes the r13-PRIORITY fund_dividend with
-#     the same A1 merge stage the r12-green fund_dividend_scaled runs
-#     at 20x scale;
-#   dedup_ngram_capped — same shingle/jaccard verify as the r12-green
-#     dedup_ngram_jaccard; the occupancy-cap device is pinned by the
-#     r12-green dedup_incremental_minhash (index cap) and the
-#     r13-PRIORITY dedup_minhash_lsh (band cap + doubling chains);
-#   event_value_stats — same events value-rollup family as the
-#     r12-green event_value_winsorized (robust twin over the identical
-#     scan+agg shape) and events_anomaly_zscore;
-#   vector_cosine_topk — the r12-green dedup_embedding_cosine drives
-#     the same dot/norm cosine end-to-end, the r12-green vector_ann_lsh
-#     the same ranked top-k window contract;
-#   when_cascade_tier — the F.when cascade lowering is the C1 router:
-#     87 rules inside the r12-green fund_dividend_scaled cascade and
-#     the r13-PRIORITY fund_classify.
-#
-# DEPRIORITY: names that safely fall past the cap this round. The 50
-# r12-green names (fresh driver rows in CORRECTNESS_r12, window open
-# through round 14), the eleven exception-list names above, and the
-# rows-only-by-design sketch query: 50 + 11 + 1 = 62; with the 50
-# PRIORITY names that accounts for all 112 registered names — nothing
-# falls past by registration-order accident.
-DEPRIORITY = [
-    # eleven exception-list names (peer coverage documented above)
-    "dim_join_left",
-    "isin_filter",
-    "date_math",
-    "derived_arithmetic",
-    "group_merge",
-    "union_slices",
-    "fund_dividend_merged",
-    "dedup_ngram_capped",
-    "event_value_stats",
-    "vector_cosine_topk",
-    "when_cascade_tier",
-    # rows-only by design (KLL/HLL sketch aggregate; rank-contract parity
-    # is pytest-asserted) — its weak row adds nothing over r4's
-    "event_value_stats_approx",
-    # r12-green (driver rows in CORRECTNESS_r12): window open to round 14
-    "fund_manual_confirm",
-    "fund_manual_redemption",
-    "fund_manual_dividend",
-    "events_sliding_window",
-    "user_retention_cohorts",
-    "dedup_ngram_jaccard",
-    "dedup_semantic",
-    "volume_shipping",
-    "quality_weighted_sample",
-    "dedup_incremental_minhash",
-    "dedup_recovery_pairs",
-    "dedup_embedding_cosine",
-    "dedup_canonical",
-    "cdc_latest_snapshot",
-    "scd2_intervals",
-    "event_value_winsorized",
-    "cdc_incremental_merge",
-    "vector_ann_lsh",
-    "dedup_exact",
-    "dedup_groups",
-    "leakage_safe_split",
-    "dedup_spans",
-    "contamination_check",
-    "dedup_simhash",
-    "dedup_semantic_lsh",
-    "events_funnel",
-    "fund_dividend_scaled",
-    "pricing_summary",
-    "pivot_status",
-    "range_join_ship_window",
-    "salted_skew_agg",
-    "zorder_layout",
-    "table_profile",
-    "local_supplier_revenue",
-    "large_order_customers",
-    "bm25_topk",
-    "events_anomaly_zscore",
-    "text_quality",
-    "text_lang_id",
-    "text_fingerprint",
-    "stratified_sample",
-    "sequence_packing",
-    "epoch_shuffle",
-    "doc_chunking",
-    "corpus_top_terms",
-    "text_repetition_filter",
-    "text_scrub",
-    "source_mixture_weights",
-    "doc_tfidf_topk",
-    "events_hourly_gapfill",
-]
-
-
-def _ordered(src: dict) -> dict:
-    out = {n: src[n] for n in PRIORITY if n in src}
-    out.update(
-        {n: v for n, v in src.items() if n not in out and n not in DEPRIORITY}
-    )
-    out.update({n: src[n] for n in DEPRIORITY if n in src})
-    return out
-
-
-def ordered_queries() -> dict[str, QueryFn]:
-    """QUERIES with PRIORITY names first, DEPRIORITY last, others in
-    registration order."""
-    return _ordered(QUERIES)
-
-
-def ordered_oracles() -> dict[str, str]:
-    return _ordered(ORACLES)

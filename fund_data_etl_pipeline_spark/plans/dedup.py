@@ -538,26 +538,6 @@ def dedup_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
     return D.connected_components(pairs, docs.select("doc_id"))
 
 
-@register(
-    "dedup_groups_star",
-    # identical oracle to dedup_groups: the two-phase algorithm must
-    # reach exactly the same min-id fixpoint as label propagation
-    oracle=f"""
-    {_GROUPS_CTE}
-    SELECT lab.id AS doc_id, lab.group_id, g.group_size
-    FROM lab JOIN g USING (group_id)
-    """,
-)
-def dedup_groups_star(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Near-dup group resolution via alternating large-star/small-star
-    edge rewrites (Kiveris et al. 2014) — same pairs, same output contract
-    as dedup_groups, but O(log diameter) rounds instead of O(diameter):
-    the escalation path for adversarially-chained near-dup graphs."""
-    docs = load_table(spark, sf_dir, "documents")
-    pairs = D.minhash_lsh_pairs(docs, threshold=_JACCARD_T)
-    return D.connected_components_two_phase(pairs, docs.select("doc_id"))
-
-
 _LSPLIT_SALT = "leakage-split-v1"
 
 
@@ -587,7 +567,7 @@ def leakage_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     representative guarantees a near-dup cluster never straddles splits.
 
     Scale shape: the pair-finding + CC stages are the dedup pipeline's
-    existing cost (bucketed LSH join, checkpointed propagation); the split
+    existing cost (bucketed LSH join, label propagation); the split
     itself adds only a map-side hash on the group label. The same
     composition at 100 TB reuses the persisted group table a dedup pass
     already materialized — assignment is then one scan of it."""

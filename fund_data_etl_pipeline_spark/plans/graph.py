@@ -5,7 +5,7 @@ Engine extension (SURVEY §2 extensions note): the reference pipeline has
 no graph surface; this is the canonical *iterative* distributed algorithm
 a training-data platform runs on its document/link graphs (citation rank,
 source authority weighting for mixture construction). It complements the
-connected-components family (operators/dedup.py:447–612) with a
+connected_components operator (operators/dedup.py) with a
 fixed-point computation whose per-round state is a full numeric vector,
 not a shrinking label set.
 

@@ -48,6 +48,19 @@ def test_release_on_gc_result_still_correct_after_parent_dropped(spark):
     gc.collect()
     assert child.collect()[0]["s"] == sum(range(1, 51))
 
+    # a connected-components query reads its label state from a local
+    # checkpoint, which cannot be recomputed: dropping the handle must
+    # not release it under a child derived from the handle
+    from fund_data_etl_pipeline_spark import plans
+
+    plans.load_all()
+    held = plans.QUERIES["dedup_groups"](spark, SF)
+    expected = held.filter("group_size > 1").count()
+    del held
+    child = plans.QUERIES["dedup_groups"](spark, SF).filter("group_size > 1")
+    gc.collect()
+    assert child.count() == expected > 0
+
 
 def test_dedup_semantic_reclaims_prepped(spark):
     from fund_data_etl_pipeline_spark.plans.dedup import dedup_semantic
@@ -185,3 +198,39 @@ def test_wrapper_unpersists_on_builder_failure(spark):
     finally:
         # restore the registry size for any test that iterates it
         QUERIES.pop(name, None)
+
+
+def _new_rdds(jsc, before: set) -> dict:
+    """Persistent RDD ids not in ``before`` -> whether each is a
+    checkpoint; holds no JVM reference past the call."""
+    live = jsc.getPersistentRDDs()
+    out = {i: live[i].rdd().isCheckpointed() for i in live.keys() if i not in before}
+    del live
+    gc.collect()
+    return out
+
+
+def test_dedup_groups_releases_intermediate_cc_rounds(spark):
+    """Connected components checkpoints every label round. Through the
+    registered query, each round's blocks go once the next round is
+    materialized, so only the final round's checkpoint is held with the
+    handle; dropping the handle empties the cache manager and leaves no
+    persisted RDD of the call behind but that checkpoint, which a plan
+    derived from the handle may still read (Spark's ContextCleaner
+    reclaims it at a driver GC once no plan references it)."""
+    from fund_data_etl_pipeline_spark import plans
+
+    plans.load_all()
+    spark.catalog.clearCache()
+    gc.collect()
+    jsc = spark.sparkContext._jsc
+    before = set(_new_rdds(jsc, set()))
+    df = plans.QUERIES["dedup_groups"](spark, SF)
+    assert df.count() > 0
+    held = _new_rdds(jsc, before)
+    assert sum(held.values()) == 1, held
+    del df
+    gc.collect()
+    left = _new_rdds(jsc, before)
+    assert set(left) <= {i for i, cp in held.items() if cp}, left
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()

@@ -7,10 +7,15 @@ where sf corpora converge in ~2 rounds; these pin the operator directly
 on graphs that need MORE propagation rounds (a long chain) and on the
 shapes the restructure could plausibly break: the component minimum
 sitting at either end of an edge, duplicate-free-by-construction input,
-singletons, and the with_sizes=False label-only contract.
+singletons, the with_sizes=False label-only contract, and small mixed
+graphs checked against a union-find reference.
 """
 
 from __future__ import annotations
+
+from collections import Counter
+
+import pytest
 
 from fund_data_etl_pipeline_spark.operators.dedup import connected_components
 
@@ -74,3 +79,37 @@ def test_with_sizes_false_matches_labels(spark):
     assert slim_df.columns == ["doc_id", "group_id"]
     slim = {r.doc_id: r.group_id for r in slim_df.collect()}
     assert slim == {k: v[0] for k, v in full.items()}
+
+
+def _union_find_labels(pairs, universe):
+    """Reference answer: min id per component, and component size."""
+    parent = {u: u for u in universe}
+
+    def root(u):
+        while parent[u] != u:
+            u = parent[u]
+        return u
+
+    for a, b in pairs:
+        ra, rb = root(a), root(b)
+        parent[max(ra, rb)] = min(ra, rb)
+    lab = {u: root(u) for u in universe}
+    size = Counter(lab.values())
+    return {u: (r, size[r]) for u, r in lab.items()}
+
+
+@pytest.mark.parametrize(
+    "pairs, universe",
+    [
+        # a triangle, a 4-chain, a star and a singleton
+        ([(0, 1), (1, 2), (0, 2), (3, 4), (4, 5), (5, 6), (7, 8), (7, 9)],
+         range(11)),
+        # edge sets that tie on edge count and on both coordinate sums —
+        # {(1,5),(2,4)} vs {(2,5),(1,4)} — next to a 4-node component
+        ([(1, 5), (2, 4), (6, 10), (7, 9), (6, 7)], range(1, 11)),
+        ([(2, 5), (1, 4), (6, 10), (7, 9), (6, 7)], range(1, 11)),
+    ],
+    ids=["mixed", "tied_sums", "tied_sums_swapped"],
+)
+def test_graph_shapes(spark, pairs, universe):
+    assert _run(spark, pairs, universe) == _union_find_labels(pairs, universe)

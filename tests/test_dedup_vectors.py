@@ -1114,9 +1114,8 @@ def test_giant_cluster_log_rounds(spark):
     """r8 giant-cluster contract: ONE boilerplate family of C=4000
     members must resolve to a single group with propagation rounds
     ~log2(C), not C/stride. Under the old fixed 1..128 ladder this C
-    needs ceil(4000/128)=32 rounds — past max_iter=25, so labels came
-    back silently WRONG; the rank-doubling pairing converges in
-    <= log2(C)+2 rounds. Also checks the star variant agrees."""
+    needs ceil(4000/128)=32 rounds — past the 25-round limit; the
+    rank-doubling pairing converges in <= log2(C)+2 rounds."""
     n = 4000
     base = " ".join(f"gtok{w}" for w in range(40))
     docs = spark.createDataFrame(
@@ -1132,13 +1131,6 @@ def test_giant_cluster_log_rounds(spark):
     import math
 
     assert stats["rounds"] <= math.ceil(math.log2(n)) + 2, stats
-    stats2: dict = {}
-    labels2 = D.connected_components_two_phase(
-        pairs, docs.select("doc_id"), stats=stats2
-    )
-    rows2 = labels2.collect()
-    assert {r["group_id"] for r in rows2} == {0}
-    assert stats2["rounds"] <= stats["rounds"]
 
 
 def test_minhash_oversized_cluster_stays_one_group(spark):

@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import datetime
 
+import pytest
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
@@ -198,45 +199,31 @@ def _cc_ids(spark, n):
     return spark.createDataFrame([(i,) for i in range(n)], ["doc_id"])
 
 
-def test_two_phase_cc_matches_label_propagation(spark):
+def test_cc_chain_past_round_limit_raises(spark):
+    """Min labels move one hop per round, and one more round confirms the
+    fixpoint: an n-node chain takes n rounds. The longest chain within
+    the round limit resolves; one node more raises the named error
+    instead of returning partial labels, and frees the label checkpoints
+    and the edge cache it made."""
     from fund_data_etl_pipeline_spark.operators.dedup import (
+        CC_MAX_ROUNDS,
+        ComponentRoundLimitError,
         connected_components,
-        connected_components_two_phase,
     )
 
-    # mixed graph: a triangle, a 4-chain, a star, singletons
-    pairs = [(0, 1), (1, 2), (0, 2), (3, 4), (4, 5), (5, 6), (7, 8), (7, 9)]
-    a = connected_components(
-        _cc_pairs(spark, pairs), _cc_ids(spark, 11)
-    ).collect()
-    b = connected_components_two_phase(
-        _cc_pairs(spark, pairs), _cc_ids(spark, 11)
-    ).collect()
-    assert {(r.doc_id, r.group_id, r.group_size) for r in a} == {
-        (r.doc_id, r.group_id, r.group_size) for r in b
-    }
+    def chain(n):
+        pairs = [(i, i + 1) for i in range(n - 1)]
+        return _cc_pairs(spark, pairs), _cc_ids(spark, n)
 
-
-def test_two_phase_cc_beats_propagation_on_long_chain(spark):
-    """A 60-hop chain exceeds plain propagation's default round budget
-    (min labels move one hop per round); the star algorithm collapses it
-    in O(log n) rounds — the documented escalation path actually works."""
-    from fund_data_etl_pipeline_spark.operators.dedup import (
-        connected_components,
-        connected_components_two_phase,
-    )
-
-    n = 60
-    chain = [(i, i + 1) for i in range(n - 1)]
-    out = connected_components_two_phase(
-        _cc_pairs(spark, chain), _cc_ids(spark, n), max_rounds=10
-    ).collect()
-    assert all(r.group_id == 0 and r.group_size == n for r in out)
-    # plain propagation with an equivalent per-round budget CANNOT finish
-    partial = connected_components(
-        _cc_pairs(spark, chain), _cc_ids(spark, n), max_iter=10
-    ).collect()
-    assert any(r.group_id != 0 for r in partial)
+    stats: dict = {}
+    out = connected_components(*chain(CC_MAX_ROUNDS), stats=stats).collect()
+    assert {r.group_id for r in out} == {0}
+    assert stats["rounds"] == CC_MAX_ROUNDS
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keys())
+    with pytest.raises(ComponentRoundLimitError, match=f"{CC_MAX_ROUNDS} rounds"):
+        connected_components(*chain(CC_MAX_ROUNDS + 1))
+    assert set(jsc.getPersistentRDDs().keys()) <= before
 
 
 def test_top_users_per_event_shape(spark, sf_dir):

@@ -125,35 +125,6 @@ def test_mixture_weights_all_empty_corpus(spark, tmp_path):
         assert r["mix_weight"] is None
 
 
-def test_two_phase_cc_signature_collision_graph(spark):
-    """Convergence signature regression (round-3 ADVICE): edge sets that
-    tie on (count, sum(hi), sum(lo)) — e.g. {(5,1),(4,2)} vs
-    {(5,2),(4,1)} — must not read as a fixpoint. The xxhash64 sum term
-    separates them; the two-phase loop must still fully converge on a
-    graph containing exactly those colliding shapes."""
-    from fund_data_etl_pipeline_spark.operators.dedup import (
-        connected_components,
-        connected_components_two_phase,
-    )
-
-    pairs = spark.createDataFrame(
-        [(5, 1), (4, 2), (10, 6), (9, 7), (6, 7)],
-        "d1 bigint, d2 bigint",
-    )
-    ids = spark.range(1, 11).select(F.col("id").alias("doc_id"))
-    a = {
-        r["doc_id"]: r["group_id"]
-        for r in connected_components_two_phase(pairs, ids).collect()
-    }
-    b = {
-        r["doc_id"]: r["group_id"]
-        for r in connected_components(pairs, ids).collect()
-    }
-    assert a == b
-    assert a[5] == a[1] and a[4] == a[2] and a[5] != a[4]
-    assert a[10] == a[6] == a[9] == a[7]
-
-
 def test_epoch_shuffle_deterministic_and_total(spark, sf_dir):
     """Same (corpus, epoch) -> identical order across builds; positions
     are a dense 1..n per shard; epochs decorrelate."""

@@ -63,7 +63,6 @@ CROSS_OK = {
 PERSIST_OK = {
     "dedup_minhash_lsh",
     "dedup_groups",
-    "dedup_groups_star",
     "dedup_canonical",
     "dedup_hybrid",
     "leakage_safe_split",

@@ -1,4 +1,4 @@
-"""One-giant-cluster stress for the connected-components family
+"""One-giant-cluster stress for connected components
 (VERDICT r7 next-step #3).
 
 Real crawl corpora contain boilerplate families with 10^4-10^5
@@ -7,14 +7,10 @@ plus ONE planted boilerplate family of C members (ids 10_000_000+i, so
 the family is a contiguous id block labeled by its minimum), runs the
 shipped pair machinery (minhash_lsh_pairs — the family lands in one
 oversized band bucket per band and pairs by id-rank doubling), then
-resolves groups with BOTH CC algorithms, recording:
-
-  rounds_prop / time_prop  — label propagation (connected_components)
-  rounds_star / time_star  — large/small-star (connected_components_two_phase)
-  n_pairs                  — the doubling-capped edge count (~C*log2(C)*bands)
-
-and asserting the family resolves to ONE group of size C under both.
-The claim under test: rounds ∝ log2(C), no max_iter blow-up — this
+resolves groups with connected_components, recording its rounds and
+time, the doubling-capped edge count n_pairs (~C*log2(C)*bands), and
+whether the family resolves to ONE group of size C.
+The claim under test: rounds ∝ log2(C), within the round limit — this
 probe is what exposed the r7 fixed stride ladder's C/128-round
 behavior and motivated the r8 doubling-pairs fix.
 
@@ -90,7 +86,6 @@ def build_giant_cluster_dir(spark, sf_dir: str, size: int) -> str:
 def probe_size(spark, sf_dir: str, size: int, recover: bool = False) -> dict:
     from fund_data_etl_pipeline_spark.operators.dedup import (
         connected_components,
-        connected_components_two_phase,
         minhash_lsh_pairs,
         minhash_recovery_pairs,
     )
@@ -142,29 +137,22 @@ def probe_size(spark, sf_dir: str, size: int, recover: bool = False) -> dict:
             }
         )
         spark.catalog.clearCache()
-    for name, fn in (
-        ("prop", connected_components),
-        ("star", connected_components_two_phase),
-    ):
-        spark.catalog.clearCache()
-        stats: dict = {}
-        t0 = time.time()
-        labels = fn(pairs, ids, stats=stats)
-        giant = (
-            labels.filter(F.col("group_id") == PLANT_BASE)
-            .agg(
-                F.count(F.lit(1)).alias("n"),
-                F.max("group_size").alias("gs"),
-            )
-            .collect()[0]
-        )
-        row[f"time_{name}_s"] = round(time.time() - t0, 3)
-        row[f"rounds_{name}"] = stats.get("rounds")
-        n_in_giant = int(giant["n"] or 0)
-        row[f"giant_cover_{name}"] = round(n_in_giant / size, 5)
-        # connectivity contract: every PAIRED member lands in the giant
-        # group (the chain resolves everything banding reached)
-        row[f"connected_ok_{name}"] = n_in_giant == n_paired
+    spark.catalog.clearCache()
+    stats: dict = {}
+    t0 = time.time()
+    labels = connected_components(pairs, ids, stats=stats)
+    giant = (
+        labels.filter(F.col("group_id") == PLANT_BASE)
+        .agg(F.count(F.lit(1)).alias("n"))
+        .collect()[0]
+    )
+    row["time_cc_s"] = round(time.time() - t0, 3)
+    row["rounds_cc"] = stats.get("rounds")
+    n_in_giant = int(giant["n"] or 0)
+    row["giant_cover"] = round(n_in_giant / size, 5)
+    # connectivity contract: every PAIRED member lands in the giant
+    # group (the chain resolves everything banding reached)
+    row["connected_ok"] = n_in_giant == n_paired
     spark.catalog.clearCache()
     return row
 
@@ -193,10 +181,8 @@ def main() -> None:
         print(
             f"C={size}: pairs={row['n_pairs']} ({row['time_pairs_s']}s) "
             f"stragglers={row['banding_stragglers']}  "
-            f"prop rounds={row['rounds_prop']} {row['time_prop_s']}s "
-            f"cover={row['giant_cover_prop']} ok={row['connected_ok_prop']}  "
-            f"star rounds={row['rounds_star']} {row['time_star_s']}s "
-            f"cover={row['giant_cover_star']} ok={row['connected_ok_star']}"
+            f"cc rounds={row['rounds_cc']} {row['time_cc_s']}s "
+            f"cover={row['giant_cover']} ok={row['connected_ok']}"
             + (
                 f"  recovery: +{row['recovery_pairs']} pairs, "
                 f"{row['recovered_stragglers']} stragglers reattached "

@@ -16,9 +16,6 @@ step() { printf '\n== %s\n' "$*"; }
 step "testdata schema preflight"
 python tools/check_schemas.py || fail=1
 
-step "rotation sanity (must-set vs cap)"
-python tools/suggest_rotation.py | head -5
-
 step "plan audit (no row-wise UDFs / unlisted cartesians / persists)"
 # grep SUCCEEDING on "violation" lines must still fail the run, so gate
 # on the audit exit code AND on the word appearing in its output
