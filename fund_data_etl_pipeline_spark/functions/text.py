@@ -12,6 +12,9 @@ BIGINT`` — so every hashed operator has an exact DuckDB oracle.
 
 from __future__ import annotations
 
+import threading
+from collections import OrderedDict
+
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -57,36 +60,37 @@ def _s(col: Column | str) -> Column:
     return F.col(col) if isinstance(col, str) else col
 
 
-# Constructed-Column cache (r13, guide §1.2 "per-task work" applied to
-# the DRIVER: plan BUILD time). Building the 16-permutation minhash
-# signature + band structs costs ~0.5 s of py4j round-trips, and the
-# bucket-pairing expression another ~0.2 s — paid on EVERY fresh
-# DataFrame build (the bench rebuilds per pass; a long-lived service
-# rebuilds per request). Columns are immutable expression trees bound to
-# column NAMES, so one constructed tree serves every plan in the session
-# — the lesson-9 fund-cascade / similarity._signs_array precedent made
-# generic. Keyed per SparkContext: a JVM restart in-process would
-# otherwise leave stale gateway refs in the cache.
-import threading as _threading
+# Constructed-Column cache: the ONE cache for plan-build Column trees
+# (fund platform cascades and spec records, minhash signatures, bucket
+# pairing, scoring). Building such a tree costs hundreds to thousands of
+# py4j round-trips, paid on EVERY fresh DataFrame build (the bench
+# rebuilds per pass; run_all per run; a long-lived service per request).
+# Columns are immutable expression trees bound to column NAMES, so one
+# constructed tree serves every plan in the session. Keyed per
+# SparkContext: a JVM restart in-process would otherwise leave stale
+# gateway refs in the cache. An LRU bounds callers that build fresh keys
+# per call; the cap sits well above the 23 distinct keys one session
+# builds over every registered query plus run_all.
+COL_CACHE_MAX = 64
 
-_COL_CACHE: dict = {}
+_COL_CACHE: OrderedDict = OrderedDict()
 _COL_CACHE_CTX: object | None = None
-_COL_CACHE_LOCK = _threading.Lock()
+_COL_CACHE_LOCK = threading.Lock()
 
 
 def cached_columns(key: tuple, build):
     """Memoize an immutable constructed Column (or tuple of Columns) for
-    ``key``; ``build`` is a zero-arg constructor run on miss. The cache
-    resets whenever the active SparkContext changes.
+    the hashable ``key``; ``build`` is a zero-arg constructor run on
+    miss. The cache resets whenever the active SparkContext changes.
 
     Classic (JVM-gateway) PySpark only: the reset key is the active
     SparkContext, which Spark Connect does not populate — under Connect
     the reset never fires, which is harmless there (Connect Columns are
     client-local protos with no gateway refs to go stale) but means this
-    cache is *correct* rather than *useful* on that path. Guarded by a
-    lock so concurrent driver threads (guide §2.6 job overlap) can't
-    interleave a clear with an insert; a lost race at worst double-builds
-    one expression tree."""
+    cache is *correct* rather than *useful* on that path. run_all builds
+    its nine jobs on concurrent driver threads: the lock covers each
+    reset / lookup / insert / LRU step, never the (slow, py4j-bound)
+    build, so a lost race at worst builds one tree twice."""
     global _COL_CACHE_CTX
     from pyspark import SparkContext
 
@@ -96,13 +100,17 @@ def cached_columns(key: tuple, build):
             _COL_CACHE.clear()
             _COL_CACHE_CTX = sc
         val = _COL_CACHE.get(key)
-    if val is None:
-        val = build()
-        with _COL_CACHE_LOCK:
-            # the context may have changed during the unlocked build:
-            # never file a tree bound to a stale gateway under the new one
-            if _COL_CACHE_CTX is sc:
-                _COL_CACHE[key] = val
+        if val is not None:
+            _COL_CACHE.move_to_end(key)
+            return val
+    val = build()
+    with _COL_CACHE_LOCK:
+        # the context may have changed during the unlocked build:
+        # never file a tree bound to a stale gateway under the new one
+        if _COL_CACHE_CTX is sc:
+            _COL_CACHE[key] = val
+            while len(_COL_CACHE) > COL_CACHE_MAX:
+                _COL_CACHE.popitem(last=False)
     return val
 
 

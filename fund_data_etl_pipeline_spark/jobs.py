@@ -27,9 +27,6 @@ by the same generic machinery (SURVEY §7.0 "platforms are data, not code").
 
 from __future__ import annotations
 
-import threading
-from collections import OrderedDict
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -42,6 +39,7 @@ from .functions.cleaning import (
     correct_fund_code,
     strip_currency,
 )
+from .functions.text import cached_columns
 from .operators.classify import (
     PlatformRule,
     all_of,
@@ -100,77 +98,23 @@ def _records_column(
     return expr
 
 
-# Platform-spec Column trees are pure functions of fixed column NAMES
-# (text/lines/filename) — unresolved, immutable, reusable across any
-# DataFrame in the same JVM. Building them is py4j-round-trip bound
-# (~8.8k gateway calls ≈ 1.5 s for the dividend cascade alone), so cache
-# per (SparkContext, builder): a rebuilt query pays the construction cost
-# once per JVM instead of once per call. Keyed on the live SparkContext
-# object so a JVM restart naturally invalidates stale Column refs.
-# Bounded LRU (r7 ADVICE): spec Column trees contain pyspark Columns
-# (unhashable — __eq__ builds an expression), so _explode_records keys on
-# id(specs) with a strong ref + identity re-check against stale-id reuse.
-# That cannot detect IN-PLACE mutation of a cached list — callers must
-# treat a specs list as immutable once passed (every in-repo caller gets
-# its list from _cached_specs, whose trees are built once per context and
-# never mutated). The LRU cap bounds callers that build fresh spec lists
-# per call.
-_SPEC_CACHE: "OrderedDict" = OrderedDict()
-_SPEC_CACHE_MAX = 64
-# run_all builds its nine jobs on concurrent driver threads: the lock
-# covers each lookup / insert / LRU step, never a (slow, py4j-bound)
-# build, so a lost race at worst builds one tree twice
-_SPEC_CACHE_LOCK = threading.Lock()
-
-
-def _spec_cache_get(key):
-    with _SPEC_CACHE_LOCK:
-        hit = _SPEC_CACHE.get(key)
-        if hit is not None:
-            _SPEC_CACHE.move_to_end(key)
-        return hit
-
-
-def _spec_cache_put(key, value):
-    with _SPEC_CACHE_LOCK:
-        _SPEC_CACHE[key] = value
-        while len(_SPEC_CACHE) > _SPEC_CACHE_MAX:
-            _SPEC_CACHE.popitem(last=False)
-
-
-def _cached_specs(specs_fn):
-    from pyspark import SparkContext
-
-    # key on the context OBJECT (identity hash), not id(): holding the
-    # reference prevents CPython from recycling a dead context's address
-    # into a colliding key after a session restart. A handful of dead
-    # contexts pinned per process is bounded and tiny.
-    key = (SparkContext._active_spark_context, specs_fn)
-    specs = _spec_cache_get(key)
-    if specs is None:
-        specs = specs_fn(F.col("text"), F.col("lines"), F.col("filename"))
-        _spec_cache_put(key, specs)
-    return specs
-
-
 def _explode_records(
-    df: DataFrame, specs: list[tuple[str, Column]], all_fields: list[str]
+    df: DataFrame, specs_fn, all_fields: list[str]
 ) -> DataFrame:
-    # the platform->records when-cascade and the rec.* select list are
-    # pure functions of (specs, field names); specs themselves come out
-    # of _SPEC_CACHE, so their identity is stable per context — cache
-    # the assembled Columns the same way (VERDICT r6 #4: construction,
-    # not Catalyst analysis, dominates warm plan cost)
-    from pyspark import SparkContext
+    """One row per extracted record: ``specs_fn(text, lines, filename)``
+    gives each platform's array<struct> of records, and the
+    platform->records when-cascade picks the matched one. Spec trees are
+    pure functions of fixed column NAMES, and building them is
+    py4j-round-trip bound (~8.8k gateway calls for the dividend specs),
+    so the cascade and the rec.* select list are built once per context
+    (text.cached_columns) and reused by every rebuilt plan."""
 
-    key = (SparkContext._active_spark_context, id(specs), tuple(all_fields))
-    hit = _spec_cache_get(key)
-    if hit is None or hit[0] is not specs:
+    def build():
+        specs = specs_fn(F.col("text"), F.col("lines"), F.col("filename"))
         rec = F.explode(_records_column(specs, F.col("platform")))
-        sel = [F.col(f"rec.{f}").alias(f) for f in all_fields]
-        hit = (specs, rec, sel)
-        _spec_cache_put(key, hit)
-    _, rec, sel = hit
+        return rec, [F.col(f"rec.{f}").alias(f) for f in all_fields]
+
+    rec, sel = cached_columns(("records", specs_fn, tuple(all_fields)), build)
     return df.withColumn("rec", rec).select(
         "doc_id", "filename", "platform", *sel
     )
@@ -636,8 +580,7 @@ def dividend_records(docs: DataFrame) -> DataFrame:
     normalization). Unmatched docs keep platform NULL and are split off by
     the caller via split_quarantine."""
     df = classify(_prep(docs), DIVIDEND_RULES)
-    specs = _cached_specs(_dividend_specs)
-    return _explode_records(df, specs, _DIV_FIELDS)
+    return _explode_records(df, _dividend_specs, _DIV_FIELDS)
 
 
 def dividend_job(
@@ -1881,8 +1824,7 @@ def _txn_job(
             keep = keep | F.col("filename").contains(u)
         pre = pre.filter(~F.col("filename").contains(sub) | keep)
     df = classify(pre, rules)
-    specs = _cached_specs(specs_fn)
-    recs = _explode_records(df, specs, _TXN_FIELDS)
+    recs = _explode_records(df, specs_fn, _TXN_FIELDS)
     recs = require_fields(recs, required)
     # N3 — est_date is either an absolute yyyymmdd the platform printed
     # (好买/利得/长量/交行/盈米/联泰/京东 forms, hyphens already stripped
@@ -1960,28 +1902,25 @@ CONVERSION_RULES = [
 ]
 
 
-def conversion_job(docs, dim, run_date: str = "2026-01-15") -> DataFrame:
-    """19-col conversion output; P16 section scoping + N4 derived
-    in_amount = out_amount - in_fee with fallback to out_amount
-    (conversion_extractor.py:212-219 for JD, :215-222 for 天天)."""
-    rd = _run_date(run_date)
-    pre = _prep(docs).filter(
-        F.col("filename").contains("超级") | F.col("filename").contains("转换")
-    )
-    df = classify(pre, CONVERSION_RULES)
-    text = F.col("text")
-    lines = F.col("lines")
+_CONV_FIELDS = [
+    "product_name", "out_fund_code", "in_fund_code", "out_amount",
+    "out_shares", "in_shares", "in_fee", "out_confirm_date",
+]
+
+
+def _conversion_specs(text: Column, lines: Column, filename: Column):
+    """The job's two single-record platforms (P16 section scoping)."""
     section = F.coalesce(X.section_after(text, "转换确认"), text)  # P16
-    jd_rec = F.struct(
-        clean_name(X.label_value(text, "产品名称", NAME)).alias("product_name"),
-        X.label_value(section, "转出基金代码", X.CODE6).alias("out_fund_code"),
-        X.label_value(section, "转入基金代码", X.CODE6).alias("in_fund_code"),
-        clean_number(X.label_value(section, "转出金额")).alias("out_amount"),
-        clean_number(X.label_value(section, "转出份额")).alias("out_shares"),
-        clean_number(X.label_value(section, "转入份额")).alias("in_shares"),
-        clean_number(X.label_value(section, "转入手续费")).alias("in_fee"),
-        X.label_value(section, "确认日期", r"\d{8}").alias("out_confirm_date"),
-    )
+    jd = {
+        "product_name": clean_name(X.label_value(text, "产品名称", NAME)),
+        "out_fund_code": X.label_value(section, "转出基金代码", X.CODE6),
+        "in_fund_code": X.label_value(section, "转入基金代码", X.CODE6),
+        "out_amount": clean_number(X.label_value(section, "转出金额")),
+        "out_shares": clean_number(X.label_value(section, "转出份额")),
+        "in_shares": clean_number(X.label_value(section, "转入份额")),
+        "in_fee": clean_number(X.label_value(section, "转入手续费")),
+        "out_confirm_date": X.label_value(section, "确认日期", r"\d{8}"),
+    }
     # 天天 super-conversion (conversion_extractor.py:127-222): name from the
     # first 万联-bearing line + the 计划/合资产 continuation within 3 lines;
     # out/in numbers on the line AFTER the 转出基金确认/转入基金确认 markers
@@ -2016,50 +1955,44 @@ def conversion_job(docs, dim, run_date: str = "2026-01-15") -> DataFrame:
         r"(?m)^(?=[^\n]*转出基金确认)(?![^\n]*金额)[^\n]*\n"
         r"[ \t]*([\d,]+\.\d+)\s+([\d,]+\.\d+)"
     )
-    tt_rec = F.struct(
-        clean_name(tt_name).alias("product_name"),
-        X.rx(text, r"转出基金代码\s+(\d{6})").alias("out_fund_code"),
-        X.rx(text, r"转入基金代码\s+(\d{6})").alias("in_fund_code"),
-        clean_number(X.rx(text, _out_pair, 2)).alias("out_amount"),
-        clean_number(X.rx(text, _out_pair, 1)).alias("out_shares"),
-        clean_number(
+    tt = {
+        "product_name": clean_name(tt_name),
+        "out_fund_code": X.rx(text, r"转出基金代码\s+(\d{6})"),
+        "in_fund_code": X.rx(text, r"转入基金代码\s+(\d{6})"),
+        "out_amount": clean_number(X.rx(text, _out_pair, 2)),
+        "out_shares": clean_number(X.rx(text, _out_pair, 1)),
+        "in_shares": clean_number(
             X.rx(
                 text,
                 r"(?m)^(?=[^\n]*转入基金确认)(?![^\n]*份额)[^\n]*\n"
                 r"[ \t]*([\d,]+\.\d+)",
             )
-        ).alias("in_shares"),
+        ),
         # fee strategy A: first decimal on the 手续费 line; strategy B
         # (:197-203, the 2025 错行 fix): the wrapped form puts the value
         # on the PREVIOUS line as 'num(' — e.g. '719.97(转换费：0,补差费'
-        clean_number(
+        "in_fee": clean_number(
             F.coalesce(
                 X.rx(text, r"(?m)^(?=[^\n]*手续费)[^\n]*?([\d,]+\.\d+)"),
                 X.rx(text, r"(?m)^[^\n]*?([\d,.]+)[ \t]*[（(][^\n]*\n(?=[^\n]*手续费)"),
             )
-        ).alias("in_fee"),
-        F.lit(None).cast("string").alias("out_confirm_date"),
+        ),
+    }
+    return [
+        ("京东肯特瑞", _single(jd, _CONV_FIELDS)),
+        ("天天基金", _single(tt, _CONV_FIELDS)),
+    ]
+
+
+def conversion_job(docs, dim, run_date: str = "2026-01-15") -> DataFrame:
+    """19-col conversion output; N4 derived in_amount = out_amount -
+    in_fee with fallback to out_amount (conversion_extractor.py:212-219
+    for JD, :215-222 for 天天)."""
+    pre = _prep(docs).filter(
+        F.col("filename").contains("超级") | F.col("filename").contains("转换")
     )
-    rec = F.when(F.col("platform") == "京东肯特瑞", jd_rec).when(
-        F.col("platform") == "天天基金", tt_rec
-    )
-    extracted = (
-        df.filter(F.col("platform").isNotNull())
-        .withColumn("__rec", rec)
-        .select(
-            "doc_id",
-            "filename",
-            "platform",
-            *[
-                F.col(f"__rec.{f}").alias(f)
-                for f in [
-                    "product_name", "out_fund_code", "in_fund_code",
-                    "out_amount", "out_shares", "in_shares", "in_fee",
-                    "out_confirm_date",
-                ]
-            ],
-        )
-    )
+    df = classify(pre, CONVERSION_RULES)
+    extracted = _explode_records(df, _conversion_specs, _CONV_FIELDS)
     derived = extracted.withColumns(
         {
             # N4: in_amount = out_amount - in_fee, fallback out_amount
@@ -2127,7 +2060,7 @@ def manual_purchase_apply_job(docs, dim, run_date: str = "2026-01-15") -> DataFr
         F.lit(None).cast("string").alias("counterparty"),
         F.lit("万事如意直销").alias("platform"),
     )
-    return require_fields(to_target_manual(out, MANUAL_APPLY_COLS), ["fund_code", "amount"])
+    return require_fields(out.select(*MANUAL_APPLY_COLS), ["fund_code", "amount"])
 
 
 def manual_purchase_confirm_job(docs, dim, run_date: str = "2026-01-15") -> DataFrame:
@@ -2153,7 +2086,7 @@ def manual_purchase_confirm_job(docs, dim, run_date: str = "2026-01-15") -> Data
     )
     # Q1 business-type whitelist (manual_purchase_confirm_extractor.py:407)
     out = out.filter(F.col("business_type").isin("申购确认", "认购确认"))
-    return require_fields(to_target_manual(out, MANUAL_CONFIRM_COLS), ["fund_code"])
+    return require_fields(out.select(*MANUAL_CONFIRM_COLS), ["fund_code"])
 
 
 def manual_redemption_job(docs, dim, run_date: str = "2026-01-15") -> DataFrame:
@@ -2177,7 +2110,7 @@ def manual_redemption_job(docs, dim, run_date: str = "2026-01-15") -> DataFrame:
         F.lit("万事如意直销").alias("platform"),
     )
     out = out.filter(F.col("business_type").isin("赎回确认", "强制赎回"))
-    return require_fields(to_target_manual(out, MANUAL_REDEMPTION_COLS), ["fund_code"])
+    return require_fields(out.select(*MANUAL_REDEMPTION_COLS), ["fund_code"])
 
 
 def manual_dividend_job(docs, dim, run_date: str = "2026-01-15") -> DataFrame:
@@ -2196,26 +2129,13 @@ def manual_dividend_job(docs, dim, run_date: str = "2026-01-15") -> DataFrame:
         X.candidate_max(text, rf"分红金额[：: ]*({_AMT})").alias("amount"),
         F.lit("万事如意直销").alias("platform"),
     )
-    return require_fields(to_target_manual(out, MANUAL_DIVIDEND_COLS), ["fund_code"])
-
-
-def to_target_manual(df: DataFrame, cols: list[str]) -> DataFrame:
-    return df.select(*cols)
+    return require_fields(out.select(*MANUAL_DIVIDEND_COLS), ["fund_code"])
 
 
 # ==========================================================================
 # Run-all entry point (SURVEY §3.1: the reference's 9-job sequential plan,
 # main - 基金单提取程序.py:471-548)
 # ==========================================================================
-
-JOB_PATH_KEYWORDS = {
-    # reference: path must contain the job's folder keyword (S1)
-    "dividend": "分红",
-    "purchase_apply": "受理",
-    "purchase_confirm": "确认",
-    "redemption_confirm": "确认",
-    "conversion": "确认",
-}
 
 
 def run_all(

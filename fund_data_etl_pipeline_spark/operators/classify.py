@@ -18,13 +18,13 @@ reference's patterns:
 
 from __future__ import annotations
 
-import threading
-from collections import OrderedDict
 from dataclasses import dataclass
 from typing import Callable
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from ..functions.text import cached_columns
 
 Pred = Callable[[Column, Column], Column]  # (filename, lines) -> boolean col
 
@@ -129,41 +129,13 @@ def platform_column(
     return expr.otherwise(F.lit(None).cast("string"))
 
 
-# Cascade Columns are pure functions of the fixed filename/lines column
-# NAMES, so (like the jobs._SPEC_CACHE spec trees) they are reusable
-# across any DataFrame in the same JVM. Building one is py4j-bound
-# (~0.25 s for a 24-rule cascade — the dominant term in the measured
-# warm plan-construction cost, VERDICT r6 #4), so cache per
-# (SparkContext, rules-CONTENT). Keying on tuple(rules) — PlatformRule
-# is a frozen dataclass — means in-place mutation of a cached list
-# changes the key instead of serving a stale tree (the r7 ADVICE gap in
-# the old id()-based key), and rebuilding an equal list from the same
-# rule objects still hits. The LRU cap bounds callers that construct
-# fresh PlatformRule objects per call; a new SparkContext naturally
-# invalidates old Column refs.
-_CASCADE_CACHE: OrderedDict = OrderedDict()
-_CASCADE_CACHE_MAX = 32
-# concurrent builders (run_all's pool threads): the lock covers the
-# lookup / insert / LRU steps, not the py4j-bound build
-_CASCADE_CACHE_LOCK = threading.Lock()
-
-
-def _cached_platform_column(rules: list[PlatformRule]) -> Column:
-    from pyspark import SparkContext
-
-    key = (SparkContext._active_spark_context, tuple(rules))
-    with _CASCADE_CACHE_LOCK:
-        col = _CASCADE_CACHE.get(key)
-        if col is not None:
-            _CASCADE_CACHE.move_to_end(key)
-            return col
-    col = platform_column(rules)
-    with _CASCADE_CACHE_LOCK:
-        _CASCADE_CACHE[key] = col
-        while len(_CASCADE_CACHE) > _CASCADE_CACHE_MAX:
-            _CASCADE_CACHE.popitem(last=False)
-    return col
-
-
 def classify(df: DataFrame, rules: list[PlatformRule], out: str = "platform") -> DataFrame:
-    return df.withColumn(out, _cached_platform_column(rules))
+    # the cascade is a pure function of the fixed filename/lines column
+    # NAMES, so it is built once per context (text.cached_columns). The
+    # key is the rules' CONTENT — PlatformRule is a frozen dataclass — so
+    # in-place mutation of a cached list changes the key instead of
+    # serving a stale tree, and an equal list of the same rule objects
+    # still hits.
+    key = tuple(rules)
+    col = cached_columns(("cascade", key), lambda: platform_column(key))
+    return df.withColumn(out, col)

@@ -606,98 +606,36 @@ def rhp_sign_vector(plane: int, dims: int) -> list[int]:
     H(plane || '_' || d). Deterministic constants — the same list feeds
     the Spark plan (as literals) and the DuckDB oracle SQL (as an array
     literal), so bucket assignment is engine-reproducible."""
-    import functools
     import hashlib
 
-    @functools.lru_cache(maxsize=4096)
-    def _sv(plane: int, dims: int) -> tuple[int, ...]:
-        return tuple(
-            1
-            if int(hashlib.md5(f"{plane}_{d}".encode()).hexdigest()[:8], 16)
-            % 2
-            else -1
-            for d in range(dims)
-        )
-
-    return list(_sv(plane, dims))
+    return [
+        1
+        if int(hashlib.md5(f"{plane}_{d}".encode()).hexdigest()[:8], 16) % 2
+        else -1
+        for d in range(dims)
+    ]
 
 
-# Constructed-Column cache for the per-plane +-1 literal arrays (r13,
-# guide §1.2 "per-task work" applied to the DRIVER: plan BUILD time).
-# Each plane's array is ``dims`` F.lit py4j round-trips; a 4-table
-# 16-plane bucket set costs ~0.9 s of pure Column construction, paid
-# once per with_buckets side on EVERY fresh DataFrame build (the bench
-# rebuilds per pass; a long-lived service rebuilds per request). Columns
-# are immutable expression trees, so one constructed array serves every
-# plan in the session — the lesson-9 fund-cascade Column cache applied
-# to the ANN family. Keyed per SparkContext: a JVM restart in-process
-# would otherwise leave stale gateway refs in the cache.
-_SIGNS_CACHE: dict[tuple[int, int], Column] = {}
-_SIGNS_CACHE_CTX: object | None = None
-
-
-def _signs_array(plane: int, dims: int) -> Column:
-    global _SIGNS_CACHE_CTX
-    from pyspark import SparkContext
-
-    sc = SparkContext._active_spark_context
-    if _SIGNS_CACHE_CTX is not sc:
-        _SIGNS_CACHE.clear()
-        _SIGNS_CACHE_CTX = sc
-    key = (plane, dims)
-    col = _SIGNS_CACHE.get(key)
-    if col is None:
-        col = F.array(
-            *[F.lit(float(s)) for s in rhp_sign_vector(plane, dims)]
-        )
-        _SIGNS_CACHE[key] = col
-    return col
-
-
-def rhp_sign(vec: Column, plane: int, dims: int) -> Column:
-    """Sign bit of <v, r_plane> — deterministic pseudo-random
-    hyperplanes via ``rhp_sign_vector``."""
-    proj = F.aggregate(
-        F.zip_with(
-            vec,
-            _signs_array(plane, dims),
-            lambda x, r: x * r,
-        ),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-    return F.when(proj >= 0, F.lit(1)).otherwise(F.lit(0))
-
-
-def rhp_bucket(
-    vec: Column | str, planes: int, dims: int, offset: int = 0
-) -> Column:
+def rhp_bucket(vec: str, planes: int, dims: int, offset: int = 0) -> Column:
     """Concatenated sign bits -> LSH bucket key; ``offset`` selects an
     independent plane family per hash table.
 
-    ``vec`` may be a Column (the historical API) or a SQL expression
-    STRING. The string form builds the whole ``planes``-bit key as ONE
-    ``F.expr`` parse — the Column form pays ~5 py4j round-trips per
-    plane for the zip_with/aggregate/when combinators on every build
-    (~0.4 s per 16-plane set even with the literal-array cache; measured
-    bit-identical on real data, r13). Semantics are identical: same
-    literal sign arrays, same sequential left-to-right fold, same
-    ``>= 0`` sign rule with a NULL vector collapsing to all-zeros."""
-    if isinstance(vec, str):
-        bits_sql = []
-        for p in range(planes):
-            signs = rhp_sign_vector(offset + p, dims)
-            lits = ", ".join(f"{float(s):.1f}D" for s in signs)
-            bits_sql.append(
-                f"CASE WHEN aggregate(zip_with({vec}, array({lits}),"
-                " (x, r) -> x * r), 0.0D, (acc, v) -> acc + v) >= 0"
-                " THEN '1' ELSE '0' END"
-            )
-        return F.expr("concat_ws(''," + ",".join(bits_sql) + ")")
-    bits = [
-        rhp_sign(vec, offset + p, dims).cast("string") for p in range(planes)
-    ]
-    return F.concat_ws("", *bits)
+    ``vec`` is a SQL expression STRING for an array<double>. Bit p is
+    the sign of <v, r_(offset+p)> over the literal +-1 arrays of
+    ``rhp_sign_vector``, folded left to right, with ``>= 0`` as 1 and a
+    NULL vector collapsing to all-zeros. The whole ``planes``-bit key is
+    ONE ``F.expr`` parse, so a build pays a single py4j round-trip
+    instead of several per plane."""
+    bits_sql = []
+    for p in range(planes):
+        signs = rhp_sign_vector(offset + p, dims)
+        lits = ", ".join(f"{float(s):.1f}D" for s in signs)
+        bits_sql.append(
+            f"CASE WHEN aggregate(zip_with({vec}, array({lits}),"
+            " (x, r) -> x * r), 0.0D, (acc, v) -> acc + v) >= 0"
+            " THEN '1' ELSE '0' END"
+        )
+    return F.expr("concat_ws(''," + ",".join(bits_sql) + ")")
 
 
 def ann_lsh_topk(

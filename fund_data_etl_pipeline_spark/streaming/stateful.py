@@ -24,6 +24,10 @@ OUTPUT_SCHEMA = "user_id long, n_events long, sum_value double"
 # micro-batch arrival order, and Python's round() is half-even while
 # the repo's pinned convention is round2's half-away-from-zero
 STATE_SCHEMA = "n long, s_c long"
+# bound on len x max |cents| of one micro-batch slice for the int64 fold:
+# every term and every partial sum then stays below 2^63 (2^62 leaves
+# room for the float rounding of the bound itself)
+_SUM_VEC_CENTS_CAP = 2**62
 
 
 def _update(
@@ -31,7 +35,9 @@ def _update(
     batches: Iterator[pd.DataFrame],
     state: GroupState,
 ) -> Iterator[pd.DataFrame]:
-    from ..functions.numeric import cents_np, round2_py
+    import numpy as np
+
+    from ..functions.numeric import cents_np, cents_py, round2_py
 
     n, s_c = state.get if state.exists else (0, 0)
     for pdf in batches:
@@ -42,13 +48,18 @@ def _update(
         # so drop them before folding. Vectorized (r14, guide §4.2): the
         # fold is cents_np (the bit-equal numpy twin of cents_py) summed
         # in int64 — each term is an exact integer and integer addition
-        # has no rounding, so the sum equals the old per-row Python fold
-        # (int64 is ample: a micro-batch slice overflows only past ~1e14
-        # rows x $1e2 values).
+        # has no rounding, so the sum equals the per-row Python fold
+        # while no term and no partial sum leaves int64. Past that
+        # bound the slice takes the Python-int fold (arbitrary
+        # precision), so exactness is unconditional.
         n += len(pdf)
-        kept = pdf["value"].dropna()
+        kept = pdf["value"].dropna().to_numpy(dtype="float64")
         if len(kept):
-            s_c += int(cents_np(kept.to_numpy()).sum())
+            top = float(np.abs(kept).max()) * 100 + 1  # >= every |cents|
+            if top * len(kept) <= _SUM_VEC_CENTS_CAP:
+                s_c += int(cents_np(kept).sum())
+            else:
+                s_c += sum(cents_py(v) for v in kept)
     state.update((n, s_c))
     yield pd.DataFrame(
         {

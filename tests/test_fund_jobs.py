@@ -54,13 +54,17 @@ def test_classifier_first_match_and_unmatched(spark):
     assert got == dict(FX.EXPECTED_CLASSIFY)
 
 
-def test_cascade_cache_content_keyed_and_bounded(spark):
-    # Regression (ADVICE r7): the cascade cache keys on rules CONTENT,
-    # so in-place mutation of a cached list yields a fresh cascade (the
-    # old id()-based key served a stale tree), and the LRU cap bounds
-    # callers that build fresh rule objects per call.
+def test_cascade_cache_content_keyed_and_bounded(spark, monkeypatch):
+    # Regression (ADVICE r7): the cascade's cache key is the rules'
+    # CONTENT, so in-place mutation of a cached list yields a fresh
+    # cascade (an id()-based key served a stale tree), and the LRU cap
+    # bounds callers that build fresh rule objects per call.
+    from collections import OrderedDict
+
+    from fund_data_etl_pipeline_spark.functions import text as T
     from fund_data_etl_pipeline_spark.operators import classify as C
 
+    monkeypatch.setattr(T, "_COL_CACHE", OrderedDict())
     docs = jobs._prep(FX.docs_df(spark, FX.DIVIDEND_DOCS))
     rules = list(jobs.DIVIDEND_RULES)
     before = classify(docs, rules).select("platform").distinct().count()
@@ -73,12 +77,12 @@ def test_cascade_cache_content_keyed_and_bounded(spark):
     }
     assert one_rule <= {rules[0].name, None}
     # LRU stays bounded under fresh-objects-per-call churn
-    for i in range(C._CASCADE_CACHE_MAX + 10):
+    for i in range(T.COL_CACHE_MAX + 10):
         fresh = [
             C.PlatformRule(f"p{i}", C.fname_has(f"sub{i}")),
         ]
         C.classify(docs, fresh)
-    assert len(C._CASCADE_CACHE) <= C._CASCADE_CACHE_MAX
+    assert len(T._COL_CACHE) <= T.COL_CACHE_MAX
 
 
 def test_dividend_merge_groups_and_platform_concat(spark):

@@ -209,3 +209,25 @@ def test_running_totals_update_vectorized_sum_exact():
     assert n == len(vals)
     assert s_c == sum(cents_py(v) for v in vals if v is not None)
     assert out["n_events"].iloc[0] == len(vals)
+
+
+def test_running_totals_update_exact_past_int64():
+    # a value whose cents exceed 2^53, in a slice whose cents sum passes
+    # 2^63: the int64 fold would wrap, so _update must fall back to the
+    # Python-int fold and still equal the exact sum
+    from fund_data_etl_pipeline_spark.functions.numeric import cents_py
+    import fund_data_etl_pipeline_spark.streaming.stateful as st
+
+    class _FakeState:
+        exists = False
+
+        def update(self, v):
+            self.value = v
+
+    vals = [5e16, 4.75e16, None, 12.34, -0.005]
+    want = sum(cents_py(v) for v in vals if v is not None)
+    assert cents_py(5e16) > 2**53 and want > 2**63
+    pdf = pd.DataFrame({"user_id": [3] * len(vals), "value": vals})
+    state = _FakeState()
+    list(st._update((3,), iter([pdf]), state))
+    assert state.value == (len(vals), want)

@@ -111,25 +111,48 @@ def test_back_to_back_runs_match_goldens(spark, corpus, tmp_path):
         assert status["audit"] == {"ok": N_DOCS, "error": 1}
 
 
-def _plan_cache(name):
-    """(module, cache attribute, cap, lookup(k) for a distinct key per k)."""
+def _lookup(k):
+    """A plan-cache lookup for a distinct key per ``k``."""
+    from fund_data_etl_pipeline_spark.functions import text as T
+
+    return T.cached_columns(("test_plan_cache", k), lambda: F.lit(k))
+
+
+def _plan_cache_lookup(spark, name):
+    """lookup(k) builds a distinct key per ``k`` through one of the two
+    fund-job paths that file Column trees in the plan-build cache: the
+    platform cascade (``classify``) or the spec records
+    (``_explode_records``)."""
     from fund_data_etl_pipeline_spark.operators import classify as C
 
     if name == "cascade":
+        df = spark.createDataFrame(
+            [("a.pdf", ["x"])], "filename string, lines array<string>"
+        )
         rules = {}
 
         def lookup(k):
             rule = rules.setdefault(k, C.PlatformRule(f"r{k}", C.fname_has(f"s{k}")))
-            return C._cached_platform_column([rule])
+            return C.classify(df, [rule])
 
-        return C, "_CASCADE_CACHE", C._CASCADE_CACHE_MAX, lookup
+        return lookup
+    df = spark.createDataFrame(
+        [(1, "a.pdf", "s0", "t", ["x"])],
+        "doc_id int, filename string, platform string, text string, "
+        "lines array<string>",
+    )
     fns = {}
 
     def lookup(k):
-        fn = fns.setdefault(k, lambda text, lines, filename: [(f"s{k}", text)])
-        return jobs._cached_specs(fn)
+        fn = fns.setdefault(
+            k,
+            lambda text, lines, filename: [
+                (f"s{k}", F.array(F.struct(text.alias("x"))))
+            ],
+        )
+        return jobs._explode_records(df, fn, ["x"])
 
-    return jobs, "_SPEC_CACHE", jobs._SPEC_CACHE_MAX, lookup
+    return lookup
 
 
 @pytest.mark.parametrize("name", ["cascade", "spec"])
@@ -142,7 +165,10 @@ def test_plan_cache_hit_is_atomic_with_eviction(spark, monkeypatch, name):
     import threading
     from collections import OrderedDict
 
-    module, attr, cap, lookup = _plan_cache(name)
+    from fund_data_etl_pipeline_spark.functions import text as T
+
+    cap = T.COL_CACHE_MAX
+    lookup = _plan_cache_lookup(spark, name)
     looked_up, evicted = threading.Event(), threading.Event()
     errors = []
 
@@ -154,10 +180,10 @@ def test_plan_cache_hit_is_atomic_with_eviction(spark, monkeypatch, name):
                 evicted.wait(timeout=0.5)
             return hit
 
-    monkeypatch.setattr(module, attr, PausingLRU())
+    monkeypatch.setattr(T, "_COL_CACHE", PausingLRU())
     for k in range(cap):
         lookup(k)
-    oldest = next(iter(getattr(module, attr)))
+    oldest = next(iter(T._COL_CACHE))
 
     def guarded(fn):
         try:
@@ -178,19 +204,21 @@ def test_plan_cache_hit_is_atomic_with_eviction(spark, monkeypatch, name):
         th.join(timeout=30)
     assert not reader.is_alive() and not writer.is_alive()
     assert errors == []
-    assert oldest in getattr(module, attr)
-    assert len(getattr(module, attr)) == cap
+    assert oldest in T._COL_CACHE
+    assert len(T._COL_CACHE) == cap
 
 
 def test_plan_caches_survive_concurrent_builders(spark, monkeypatch):
     """Stress: more threads than cores draw random keys from a few more
     than the LRU cap, under a short switch interval, with a lookup that
-    sleeps before returning; the caches stay bounded and nothing raises."""
+    sleeps before returning; the cache stays bounded and nothing raises."""
     import random
     import sys
     import threading
     import time
     from collections import OrderedDict
+
+    from fund_data_etl_pipeline_spark.functions import text as T
 
     class SlowLRU(OrderedDict):
         def get(self, key, default=None):
@@ -198,17 +226,15 @@ def test_plan_caches_survive_concurrent_builders(spark, monkeypatch):
             time.sleep(0.0005)  # widen the lookup-to-move_to_end window
             return hit
 
-    caches = [_plan_cache(name) for name in ("cascade", "spec")]
-    for module, attr, _, _ in caches:
-        monkeypatch.setattr(module, attr, SlowLRU())
+    monkeypatch.setattr(T, "_COL_CACHE", SlowLRU())
+    cap = T.COL_CACHE_MAX
     errors = []
 
     def worker(t):
         rng = random.Random(t)
         try:
             for _ in range(100):
-                for _, _, cap, lookup in caches:
-                    lookup(rng.randrange(cap + 2))
+                _lookup(rng.randrange(cap + 2))
         except Exception as e:  # noqa: BLE001 — collected and asserted below
             errors.append(e)
 
@@ -224,8 +250,7 @@ def test_plan_caches_survive_concurrent_builders(spark, monkeypatch):
         sys.setswitchinterval(interval)
     assert not any(th.is_alive() for th in threads)
     assert errors == []
-    for module, attr, cap, _ in caches:
-        assert len(getattr(module, attr)) <= cap
+    assert len(T._COL_CACHE) <= cap
 
 
 def test_cached_columns_never_files_a_stale_context(spark):
@@ -243,3 +268,58 @@ def test_cached_columns_never_files_a_stale_context(spark):
         assert key not in T._COL_CACHE
     finally:
         T._COL_CACHE_CTX = None  # the next call resets to the live context
+
+
+# the five fund jobs whose platform cascade and spec records come out of
+# the plan-build Column cache; the four manual jobs have no cascade
+FUND_JOBS = (
+    "dividend_job", "purchase_apply_job", "purchase_confirm_job",
+    "redemption_confirm_job", "conversion_job",
+)
+MANUAL_JOBS = (
+    "manual_purchase_apply_job", "manual_purchase_confirm_job",
+    "manual_redemption_job", "manual_dividend_job",
+)
+
+
+def test_warm_job_rebuild_halves_gateway_calls(spark, monkeypatch):
+    """Each of the nine jobs is built twice on an empty Column cache,
+    counting the py4j commands the builds send. A warm rebuild of every
+    fund job reuses its cascade and spec records, so it sends at most
+    half the commands of the first build. GC is off while counting, so
+    no release command of an unrelated collected object lands in a
+    build's count."""
+    import gc
+    from collections import OrderedDict
+
+    from fund_data_etl_pipeline_spark.functions import text as T
+
+    docs = FX.docs_df(spark, FX.CONVERSION_DOCS + FX.DIVIDEND_DOCS)
+    dim = FX.dim_df(spark)
+    client = spark.sparkContext._gateway._gateway_client
+    send = client.send_command
+    sent = [0]
+
+    def counting(*args, **kwargs):
+        sent[0] += 1
+        return send(*args, **kwargs)
+
+    monkeypatch.setattr(T, "_COL_CACHE", OrderedDict())
+    monkeypatch.setattr(client, "send_command", counting)
+    # every built plan is held, so none of its objects is released
+    # (one py4j command each) inside a later build's count
+    built, calls = [], {}
+    gc.disable()
+    try:
+        for name in FUND_JOBS + MANUAL_JOBS:
+            counts = []
+            for _ in range(2):
+                sent[0] = 0
+                built.append(getattr(jobs, name)(docs, dim, FX.RUN_DATE))
+                counts.append(sent[0])
+            calls[name] = counts
+    finally:
+        gc.enable()
+    for name in FUND_JOBS:
+        first, warm = calls[name]
+        assert 2 * warm <= first, (name, calls[name])

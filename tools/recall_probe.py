@@ -161,7 +161,7 @@ def mixed_bucket_diag(spark, sf_dir: str, frac: float) -> dict:
                     F.struct(
                         F.lit(t).alias("tbl"),
                         rhp_bucket(
-                            F.col("v"), p, 64, offset=t * _SLSH_P_MAX
+                            "v", p, 64, offset=t * _SLSH_P_MAX
                         ).alias("bucket"),
                     )
                     for t in range(_SLSH_TABLES)

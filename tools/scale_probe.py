@@ -637,7 +637,7 @@ def slsh_occupancy(spark, sf_dir: str) -> dict:
                     F.struct(
                         F.lit(t).alias("tbl"),
                         rhp_bucket(
-                            F.col("v"), p, 64, offset=t * _SLSH_P_MAX
+                            "v", p, 64, offset=t * _SLSH_P_MAX
                         ).alias("bucket"),
                     )
                     for t in range(_SLSH_TABLES)
@@ -690,7 +690,7 @@ def ann_occupancy(spark, sf_dir: str) -> dict:
                     F.struct(
                         F.lit(t).alias("tbl"),
                         rhp_bucket(
-                            F.col("v"), _LSH_PLANES, _LSH_DIMS,
+                            "v", _LSH_PLANES, _LSH_DIMS,
                             offset=t * _LSH_PLANES,
                         ).alias("bucket"),
                     )
