@@ -1,7 +1,10 @@
 """Field-cleaning scalar expressions (SURVEY.md §2.3 tail).
 
 All JVM-side built-ins — no Python UDFs. Each helper cites the reference
-behavior it reproduces.
+behavior it reproduces. The spec-time cleaners (``clean_number``,
+``clean_name``, ``strip_currency``, ``ymd8``, ``yyyymmdd``) emit SQL text
+over a SQL input, so the platform tables compile them into one
+expression; plan code applies them through ``F.expr``.
 """
 
 from __future__ import annotations
@@ -9,27 +12,48 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-from .numeric import round2
+from .extract import q
+from .numeric import round2_sql
+
+_NAME_JUNK = q(r"[\s　┃│]+")
+_CURRENCY = q(r"^(CNY|RMB|￥)\s*")
+_UNIT = q(r"\s*(元|份)$")
 
 
 def _c(col: Column | str) -> Column:
     return F.col(col) if isinstance(col, str) else col
 
 
-def clean_number(col: Column | str, scale: int = 2) -> Column:
+def clean_number(x: str, scale: int = 2) -> str:
     """Thousands-separator strip + coerce-to-NULL cast + round
     (`.replace(',', '')` dividend_extractor.py:52 +
     `pd.to_numeric(errors='coerce').round(2)` :1406-1407).
     Empty string -> NULL (not 0)."""
-    s = F.regexp_replace(F.trim(_c(col)), "[,，]", "")
-    return round2(F.nullif(s, F.lit("")).try_cast("double"), scale)
+    return round2_sql(f"try_cast(nullif(regexp_replace(trim({x}), '[,，]', ''), '') AS DOUBLE)", scale)
 
 
-def clean_name(col: Column | str) -> Column:
+def clean_name(x: str) -> str:
     """Strip ASCII/ideographic spaces, newlines and box-drawing chars from
     product names (dividend_extractor.py:46,381,542). '' -> NULL."""
-    cleaned = F.regexp_replace(_c(col), "[\\s　┃│]+", "")
-    return F.nullif(cleaned, F.lit(""))
+    return f"nullif(regexp_replace({x}, {_NAME_JUNK}, ''), '')"
+
+
+def strip_currency(x: str) -> str:
+    """Unit/currency stripping (P11): 'CNY 1,234.56', '1,234.56元',
+    '100.00份' -> bare number string (dividend_extractor.py:280-286;
+    purchase_extractor.py:287,663)."""
+    return f"regexp_replace(regexp_replace(trim({x}), {_CURRENCY}, ''), {_UNIT}, '')"
+
+
+def ymd8(x: str) -> str:
+    """'2026-01-18' -> '20260118' (the reference's .replace('-','') on
+    every 预计到账日-style capture)."""
+    return f"regexp_replace({x}, '-', '')"
+
+
+def yyyymmdd(x: str) -> str:
+    """Serialize a date to the reference's 8-char string form."""
+    return f"date_format({x}, 'yyyyMMdd')"
 
 
 def correct_fund_code(col: Column | str) -> Column:
@@ -55,13 +79,3 @@ def complete_name_suffix(col: Column | str) -> Column:
         .when(c.endswith("单一"), F.concat(c, F.lit("资产管理计划")))
         .otherwise(c)
     )
-
-
-def strip_currency(col: Column | str) -> Column:
-    """Unit/currency stripping (P11): 'CNY 1,234.56', '1,234.56元',
-    '100.00份' -> bare number string (dividend_extractor.py:280-286;
-    purchase_extractor.py:287,663)."""
-    c = F.trim(_c(col))
-    c = F.regexp_replace(c, "^(CNY|RMB|￥)\\s*", "")
-    c = F.regexp_replace(c, "\\s*(元|份)$", "")
-    return c

@@ -2,33 +2,36 @@
 
 The reference hand-wrote ~80 near-identical per-platform parser functions
 (~4,500 LoC); the engine replaces them with ~a dozen generic expression
-builders, each compiling to built-in Catalyst expressions (regexp_extract,
-filter/transform/aggregate over the ``lines`` array) — JVM-side, inside
-whole-stage codegen, no Python in the hot path.
+builders, each emitting Spark SQL text over built-in Catalyst expressions
+(regexp_extract, filter/transform/aggregate over the ``lines`` array).
+A job's platform table (platforms.py) is compiled into ONE SQL expression
+that the JVM parses once per context (text.sql_column) — no Python in the
+hot path, and no per-node py4j round-trip while the plan is built.
 
 Conventions:
+- every builder takes its SQL input as ``src`` (a column name such as
+  ``text``/``lines``/``filename``, a lambda variable such as ``seg``, or
+  any SQL expression) and returns SQL expression text;
 - ``text`` is the full document (lines joined by '\\n'); ``lines`` is
-  ``split(text, '\\n')``.
-- every builder returns a STRING column ('' and no-match both -> NULL);
-  numeric casting/rounding happens later in normalize (N2).
+  ``split(text, '\\n')``;
+- every builder yields a STRING ('' and no-match both -> NULL); numeric
+  casting/rounding happens later in normalize (N2).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column
-from pyspark.sql import functions as F
-
 NUM = r"-?[\d,，]+(?:\.\d+)?"  # tolerant money/shares literal
 CODE6 = r"[0-9A-Za-z]{6}"      # fund codes: 6 chars, leading zeros kept
+NULL = "CAST(NULL AS STRING)"
+EMPTY = "CAST(array() AS ARRAY<STRING>)"
+WS = r"\s+"
 
 
-def _s(col: Column | str) -> Column:
-    return F.col(col) if isinstance(col, str) else col
-
-
-def _nn(col: Column) -> Column:
-    """'' -> NULL (regexp_extract returns '' on no match)."""
-    return F.nullif(col, F.lit(""))
+def q(s: str) -> str:
+    """The one SQL string-literal quoting: backslash and quote escaped, so
+    any regex (``\\d``, ``\\Q…\\E``, a literal newline, CJK) reads back
+    through the SQL parser unchanged."""
+    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
 
 
 def spaced(label: str) -> str:
@@ -37,9 +40,17 @@ def spaced(label: str) -> str:
     return r"\s*".join(label)
 
 
-def label_value(text: Column | str, label: str, value: str = NUM,
-                sep: str = r"[ \t]*[：:]?[ \t]*",
-                tolerate_spacing: bool = False) -> Column:
+def rx(pattern: str, group: int = 1, src: str = "text") -> str:
+    """Generic first-match regexp extraction ('' -> NULL) for platform
+    specs whose reference regex doesn't decompose into label+value (e.g.
+    长量's trailing-unit form `确认金额[：: ]*(NUM).*?\\(元\\)`,
+    purchase_confirm_extractor.py:158-170). P9 (a field from the file
+    name, 国信嘉利 dividend_extractor.py:1112-1129) is ``src="filename"``."""
+    return f"nullif(regexp_extract({src}, {q(pattern)}, {group}), '')"
+
+
+def label_value(label: str, value: str = NUM, sep: str = r"[ \t]*[：:]?[ \t]*",
+                tolerate_spacing: bool = False, src: str = "text") -> str:
     """P1/P2 — first `label<sep>value` occurrence anywhere in the document
     (`re.search` dividend_extractor.py:48-49; first-matching-line scan
     :119-133 is equivalent because regexp_extract takes the first match).
@@ -52,20 +63,11 @@ def label_value(text: Column | str, label: str, value: str = NUM,
     are an explicit shape with their own builder (next_line_value, P3)
     or an explicit ``sep`` at the call site."""
     lbl = spaced(label) if tolerate_spacing else label
-    return _nn(F.regexp_extract(_s(text), f"{lbl}{sep}({value})", 1))
+    return rx(f"{lbl}{sep}({value})", src=src)
 
 
-def rx(text: Column | str, pattern: str, group: int = 1) -> Column:
-    """Generic first-match regexp extraction ('' -> NULL) for platform
-    specs whose reference regex doesn't decompose into label+value (e.g.
-    长量's trailing-unit form `确认金额[：: ]*(NUM).*?\\(元\\)`,
-    purchase_confirm_extractor.py:158-170)."""
-    return _nn(F.regexp_extract(_s(text), pattern, group))
-
-
-def label_value_until(text: Column | str, label: str,
-                      stops: tuple[str, ...] = (),
-                      sep: str = r"[ \t]*[：:]?[ \t]*") -> Column:
+def label_value_until(label: str, stops: tuple[str, ...] = (),
+                      sep: str = r"[ \t]*[：:]?[ \t]*", src: str = "text") -> str:
     """Same-line free-text value after ``label``, cut at the first stop
     keyword — the reference's ``line.split(label)[1]`` +
     ``split(stop)[0]`` idiom (宁波 客户名称…基金账号
@@ -75,119 +77,89 @@ def label_value_until(text: Column | str, label: str,
     yield '' like the reference's split, not leak the next line."""
     # the alternation needs its own group: bare '|'.join would attach
     # [^\n]* to the LAST stop only, so earlier stop keywords could not
-    # cut mid-line and the capture swallowed the tail (r11 review;
-    # latent — every current caller passes exactly one stop)
+    # cut mid-line and the capture swallowed the tail (r11 review)
     tail = f"(?:(?:{'|'.join(stops)})[^\\n]*)?" if stops else ""
-    return _nn(
-        F.regexp_extract(
-            _s(text), rf"(?m){label}{sep}([^\n]*?)[ \t]*{tail}$", 1
-        )
-    )
+    return rx(rf"(?m){label}{sep}([^\n]*?)[ \t]*{tail}$", src=src)
 
 
-def line_after(text: Column | str, anchor: str, min_len: int = 1) -> Column:
+def line_after(anchor: str, min_len: int = 1, src: str = "text") -> str:
     """The full line following the first line containing ``anchor`` (交行
     投资者信息 -> name on next line, purchase_extractor.py:297-310)."""
-    return _nn(
-        F.regexp_extract(
-            _s(text), rf"(?m){anchor}[^\n]*\n([^\n]{{{min_len},}})$", 1
-        )
-    )
+    return rx(rf"(?m){anchor}[^\n]*\n([^\n]{{{min_len},}})$", src=src)
 
 
-def adjacent_name(lines: Column | str, anchor: str,
-                  prev_stops: tuple[str, ...] = (),
-                  next_stops: tuple[str, ...] = (),
-                  inline_before: bool = False) -> Column:
+def next_line_value(label: str, value: str = NUM, lookahead: int = 2,
+                    src: str = "text") -> str:
+    """P3 — label on line i, value alone on one of lines i+1..i+lookahead
+    (天天 dividend amount, dividend_extractor.py:85-105; 网金
+    purchase_extractor.py:398-406). A multi-line regex on the full text —
+    no explode/shuffle needed."""
+    skip = rf"(?:[^\n]*\n){{0,{lookahead - 1}}}?"
+    return rx(rf"(?m){label}[^\n]*\n{skip}[ \t　]*({value})[ \t　]*$", src=src)
+
+
+def box_cell(label: str, value: str = NUM, src: str = "text") -> str:
+    """P6 — box-drawing table cell: value in the `│`-delimited cell right
+    of the labelled cell (腾元 purchase_confirm_extractor.py:610-656)."""
+    return rx(rf"{label}\s*│\s*({value})\s*(?:│|┃|$)", src=src)
+
+
+def line_index(anchor: str, src: str) -> str:
+    """1-based index of the first element of ``src`` containing
+    ``anchor``; 0 when none does."""
+    return f"array_position(transform({src}, l -> contains(l, {q(anchor)})), true)"
+
+
+def first_line_with(anchor: str, src: str = "lines") -> str:
+    """The first line containing ``anchor``, NULL when none does."""
+    return f"try_element_at(filter({src}, l -> contains(l, {q(anchor)})), 1)"
+
+
+def adjacent_name(anchor: str, prev_stops: tuple[str, ...] = (),
+                  next_stops: tuple[str, ...] = (), inline_before: bool = False,
+                  src: str = "lines") -> str:
     """P4 variant — name assembled from the lines AROUND the anchor label:
     previous line (unless it carries a stop keyword) + optionally the text
     before the anchor on its own line + next line (unless stopped).
     Models 好买 账户名称 (purchase_extractor.py:34-46), 天天
-    账户户名 (:59-81), 盈米 投资者名称 (:175-190). Pure Catalyst."""
-    ls = _s(lines)
-    idx = F.array_position(
-        F.transform(ls, lambda l: l.contains(anchor)), F.lit(True)
-    )
-    prev = F.when(idx > 1, F.trim(F.element_at(ls, (idx - 1).cast("int")))).otherwise(
-        F.lit("")
-    )
-    prev_ok = prev != ""
-    for s in prev_stops:
-        prev_ok = prev_ok & ~prev.contains(s)
-    prev_part = F.when(prev_ok, prev).otherwise(F.lit(""))
-    inline_part = (
-        F.when(
-            idx > 0,
-            F.trim(
-                F.substring_index(F.element_at(ls, idx.cast("int")), anchor, 1)
-            ),
-        ).otherwise(F.lit(""))
+    账户户名 (:59-81), 盈米 投资者名称 (:175-190)."""
+    idx = line_index(anchor, src)
+    prev = f"CASE WHEN {idx} > 1 THEN trim(element_at({src}, CAST({idx} - 1 AS INT))) ELSE '' END"
+    nxt = f"trim(coalesce(try_element_at({src}, CAST({idx} + 1 AS INT)), ''))"
+    prev_ok = " AND ".join([f"{prev} != ''"] + [f"NOT contains({prev}, {q(s)})" for s in prev_stops])
+    next_ok = " AND ".join([f"{nxt} != ''"] + [f"NOT contains({nxt}, {q(s)})" for s in next_stops])
+    inline = (
+        f"CASE WHEN {idx} > 0 THEN trim(substring_index(element_at({src}, CAST({idx} AS INT)), "
+        f"{q(anchor)}, 1)) ELSE '' END"
         if inline_before
-        else F.lit("")
+        else "''"
     )
-    nxt = F.trim(F.coalesce(F.try_element_at(ls, (idx + 1).cast("int")), F.lit("")))
-    nxt_ok = nxt != ""
-    for s in next_stops:
-        nxt_ok = nxt_ok & ~nxt.contains(s)
-    next_part = F.when(nxt_ok, nxt).otherwise(F.lit(""))
-    return F.when(
-        idx > 0,
-        F.nullif(F.concat(prev_part, inline_part, next_part), F.lit("")),
-    )
+    parts = f"CASE WHEN {prev_ok} THEN {prev} ELSE '' END, {inline}, CASE WHEN {next_ok} THEN {nxt} ELSE '' END"
+    return f"CASE WHEN {idx} > 0 THEN nullif(concat({parts}), '') END"
 
 
-def next_line_value(text: Column | str, label: str, value: str = NUM,
-                    lookahead: int = 2) -> Column:
-    """P3 — label on line i, value alone on one of lines i+1..i+lookahead
-    (天天 dividend amount, dividend_extractor.py:85-105; 网金
-    purchase_extractor.py:398-406). Implemented as a multi-line regex on
-    the full text — no explode/shuffle needed."""
-    skip = rf"(?:[^\n]*\n){{0,{lookahead - 1}}}?"
-    return _nn(
-        F.regexp_extract(
-            _s(text), rf"(?m){label}[^\n]*\n{skip}[ \t　]*({value})[ \t　]*$", 1
-        )
-    )
-
-
-def box_cell(text: Column | str, label: str, value: str = NUM) -> Column:
-    """P6 — box-drawing table cell: value in the `│`-delimited cell right
-    of the labelled cell (腾元 purchase_confirm_extractor.py:610-656)."""
-    return _nn(
-        F.regexp_extract(_s(text), rf"{label}\s*│\s*({value})\s*(?:│|┃|$)", 1)
-    )
-
-
-def positional_value(lines: Column | str, anchor: str, offset: int) -> Column:
+def positional_value(anchor: str, offset: int, src: str = "lines") -> str:
     """P7 — whitespace-split positional token: on the first line containing
     ``anchor``, split on whitespace, return the token ``offset`` positions
     after the anchor token (国信嘉利 dividend_extractor.py:1131-1160)."""
-    line = F.try_element_at(
-        F.filter(_s(lines), lambda l: l.contains(anchor)), F.lit(1)
-    )
-    toks = F.split(F.trim(line), r"\s+")
-    anchor_tok = F.try_element_at(
-        F.filter(toks, lambda t: t.contains(anchor)), F.lit(1)
-    )
-    pos = F.array_position(toks, anchor_tok)
-    return F.when(
-        pos > 0, F.try_element_at(toks, (pos + F.lit(offset)).cast("int"))
-    )
+    toks = f"split(trim({first_line_with(anchor, src)}), {q(WS)})"
+    pos = f"array_position({toks}, {first_line_with(anchor, toks)})"
+    return f"CASE WHEN {pos} > 0 THEN try_element_at({toks}, CAST({pos} + {offset} AS INT)) END"
 
 
-def row_table_records(text: Column | str, row_pattern: str) -> Column:
+def row_table_records(row_pattern: str, src: str = "text") -> str:
     """P8/F4 — tabular summary rows -> array of raw row strings, one record
-    per match (证达通 dividend_extractor.py:946-983). Explode downstream."""
-    return F.regexp_extract_all(_s(text), F.lit(row_pattern), 0)
+    per match (证达通 dividend_extractor.py:946-983)."""
+    return f"regexp_extract_all({src}, {q(row_pattern)}, 0)"
 
 
-def filename_value(filename: Column | str, pattern: str, group: int = 1) -> Column:
-    """P9 — field derived from the file name (国信嘉利 product name
-    dividend_extractor.py:1112-1129)."""
-    return _nn(F.regexp_extract(_s(filename), pattern, group))
+def row_cell(row_pattern: str, group: int, src: str = "seg") -> str:
+    """Capture ``group`` of one row_table_records row (multi-line flag
+    dropped: the row is a single line; no-match stays '')."""
+    return f"regexp_extract({src}, {q(row_pattern.replace('(?m)', ''))}, {group})"
 
 
-def candidate_max(text: Column | str, pattern: str = NUM) -> Column:
+def candidate_max(pattern: str = NUM, src: str = "text") -> str:
     """P12 — collect every candidate number matched by ``pattern``, strip
     separators, take the max (OCR noise; manual_purchase_apply_extractor.py:
     216-229). ``pattern`` may carry its own capture group (e.g. a label
@@ -197,48 +169,39 @@ def candidate_max(text: Column | str, pattern: str = NUM) -> Column:
 
     has_group = _re.search(r"(?<!\\)\((?!\?)", pattern) is not None
     regexp = pattern if has_group else f"({pattern})"
-    cands = F.regexp_extract_all(_s(text), F.lit(regexp), 1)
-    nums = F.transform(
-        cands, lambda s: F.regexp_replace(s, "[,，]", "").try_cast("double")
+    nums = (
+        f"transform(regexp_extract_all({src}, {q(regexp)}, 1), "
+        "s -> try_cast(regexp_replace(s, '[,，]', '') AS DOUBLE))"
     )
-    return F.array_max(F.filter(nums, lambda x: x.isNotNull()))
+    return f"array_max(filter({nums}, x -> x IS NOT NULL))"
 
 
-def section_after(text: Column | str, marker: str) -> Column:
+def section_after(marker: str, src: str = "text") -> str:
     """P16 — restrict extraction to the document section after the first
     line matching ``marker`` (JD forced-redemption page-2 block,
-    redemption_extractor.py:379-459). Returns the tail text ('' -> NULL)."""
-    t = _s(text)
-    idx = F.instr(t, marker)
-    return F.when(idx > 0, t.substr(idx, F.length(t)))
+    redemption_extractor.py:379-459). Returns the tail text, NULL when
+    the marker is absent."""
+    idx = f"instr({src}, {q(marker)})"
+    return f"CASE WHEN {idx} > 0 THEN substr({src}, {idx}, length({src})) END"
 
 
-def stitched_name(lines: Column | str, start_label: str,
-                  stop_keywords: list[str], max_lookahead: int = 4) -> Column:
+def stitched_name(start_label: str, stop_keywords: list[str],
+                  max_lookahead: int = 4, src: str = "lines") -> str:
     """P4 — multi-line product-name stitching: take the text after
     ``start_label`` on its line, then append following lines until one
     contains a stop keyword, up to ``max_lookahead`` lines (好买
     dividend_extractor.py:35-46; 平安 :355-381; 和讯 :463-489).
 
-    Pure Catalyst: array_position to find the label line, slice for the
-    lookahead window, aggregate to fold with stop semantics. No UDF.
-    """
-    ls = _s(lines)
-    flags = F.transform(ls, lambda l: l.contains(start_label))
-    idx = F.array_position(flags, F.lit(True))  # 1-based, 0 = not found
-    head = F.regexp_extract(
-        F.coalesce(F.try_element_at(ls, idx.cast("int")), F.lit("")),
-        f"{start_label}[：:]?\\s*(.*)$",
-        1,
-    )
-    window = F.when(
-        idx > 0, F.slice(ls, (idx + 1).cast("int"), max_lookahead)
-    ).otherwise(F.array().cast("array<string>"))
+    array_position finds the label line, slice takes the lookahead
+    window, aggregate folds it with stop semantics. No UDF."""
+    idx = line_index(start_label, src)
+    label_rest = q(start_label + r"[：:]?\s*(.*)$")
+    head = f"regexp_extract(coalesce(try_element_at({src}, CAST({idx} AS INT)), ''), {label_rest}, 1)"
+    window = f"CASE WHEN {idx} > 0 THEN slice({src}, CAST({idx} + 1 AS INT), {max_lookahead}) ELSE {EMPTY} END"
     # \Q..\E quotes each keyword (an ASCII regex metachar in a keyword
     # must match literally), and an EMPTY list means "no stop keywords"
     # — the bare join would build stop_re = "", and regexp_count(line,
-    # "") > 0 stops the fold before the first appended line (r11 review;
-    # latent — every current caller passes literal Chinese keywords)
+    # "") > 0 stops the fold before the first appended line (r11 review)
     stop_re = (
         "|".join(f"\\Q{k}\\E" for k in stop_keywords if k)
         if any(stop_keywords)
@@ -246,33 +209,30 @@ def stitched_name(lines: Column | str, start_label: str,
     )
     # an empty line ends the stitch too — the reference's loops break on
     # len(next_line) == 0 (redemption_extractor.py:608-618)
-    folded = F.aggregate(
-        window,
-        F.struct(head.alias("acc"), F.lit(False).alias("stopped")),
-        lambda acc, line: F.when(
-            acc.stopped
-            | (F.regexp_count(line, F.lit(stop_re)) > 0)
-            | (F.length(F.trim(line)) == 0),
-            F.struct(acc.acc.alias("acc"), F.lit(True).alias("stopped")),
-        ).otherwise(
-            F.struct(F.concat(acc.acc, F.trim(line)).alias("acc"),
-                     F.lit(False).alias("stopped"))
-        ),
+    folded = (
+        f"aggregate({window}, struct({head} AS acc, false AS stopped), (acc, line) -> "
+        f"CASE WHEN acc.stopped OR regexp_count(line, {q(stop_re)}) > 0 OR length(trim(line)) = 0 "
+        "THEN struct(acc.acc AS acc, true AS stopped) "
+        "ELSE struct(concat(acc.acc, trim(line)) AS acc, false AS stopped) END)"
     )
-    return F.when(idx > 0, F.nullif(F.trim(folded.acc), F.lit("")))
+    return f"CASE WHEN {idx} > 0 THEN nullif(trim({folded}.acc), '') END"
 
 
-def marker_records(text: Column | str, marker_pattern: str) -> Column:
+def marker_records(marker_pattern: str, src: str = "text") -> str:
     """F1/F2/F3 — segment a document into per-record windows at every
     occurrence of ``marker_pattern`` and return the window texts as an
     array (盈米 `序号:` blocks dividend_extractor.py:230-257; 联泰
     `交易信息（X/Y）` :834-876; 腾元 multi-page redemption_extractor.py:
     769-835). Split keeps text BETWEEN markers; the leading pre-marker
     chunk is dropped, so element k covers record k."""
-    t = _s(text)
-    parts = F.split(t, marker_pattern)
-    n = F.size(parts)
-    has = F.regexp_count(t, F.lit(marker_pattern)) > 0
-    return F.when(has, F.slice(parts, 2, n - 1)).otherwise(
-        F.array().cast("array<string>")
+    m = q(marker_pattern)
+    return (
+        f"CASE WHEN regexp_count({src}, {m}) > 0 "
+        f"THEN slice(split({src}, {m}), 2, size(split({src}, {m})) - 1) ELSE {EMPTY} END"
     )
+
+
+def coalesce(*exprs: str) -> str:
+    """First non-NULL of several extractions (a platform's fallback
+    forms, e.g. same-line value else next-line value)."""
+    return f"coalesce({', '.join(exprs)})"

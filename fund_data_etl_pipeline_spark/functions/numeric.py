@@ -23,6 +23,13 @@ def round2(col: Column | str, scale: int = 2) -> Column:
     return F.signum(c) * F.floor(F.abs(c) * p + F.lit(0.5)) / p
 
 
+def round2_sql(x: str, scale: int = 2) -> str:
+    """SQL-text form of ``round2`` over the SQL expression ``x``, for
+    expressions compiled to one SQL string (the fund platform tables)."""
+    p = f"{float(10**scale)}D"
+    return f"signum({x}) * floor(abs({x}) * {p} + 0.5D) / {p}"
+
+
 def round2_py(x: float, scale: int = 2) -> float:
     """Scalar twin of ``round2`` — the SAME half-away-from-zero-on-the-
     binary-double expression (copysign(floor(|x|·p + 0.5)) / p), for the

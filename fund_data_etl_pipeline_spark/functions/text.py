@@ -61,21 +61,22 @@ def _s(col: Column | str) -> Column:
 
 
 # Constructed-Column cache: the ONE cache for plan-build Column trees
-# (fund platform cascades and spec records, minhash signatures, bucket
-# pairing, scoring). Building such a tree costs hundreds to thousands of
-# py4j round-trips, paid on EVERY fresh DataFrame build (the bench
-# rebuilds per pass; run_all per run; a long-lived service per request).
-# Columns are immutable expression trees bound to column NAMES, so one
-# constructed tree serves every plan in the session. Keyed per
-# SparkContext: a JVM restart in-process would otherwise leave stale
-# gateway refs in the cache. An LRU bounds callers that build fresh keys
-# per call; the cap sits well above the 23 distinct keys one session
-# builds over every registered query plus run_all.
+# (minhash signatures, bucket pairing, scoring, and the parsed SQL of the
+# fund jobs' platform and records CASEs, sql_column). Building such a tree
+# costs hundreds to thousands of py4j round-trips, paid on EVERY fresh
+# DataFrame build (the bench rebuilds per pass; run_all per run; a
+# long-lived service per request). Columns are immutable expression trees
+# bound to column NAMES, so one constructed tree serves every plan in the
+# session. Keyed per SparkContext: a JVM restart in-process would
+# otherwise leave stale gateway refs in the cache. An LRU bounds callers
+# that build fresh keys per call; the cap sits well above the distinct
+# keys one session builds over every registered query plus run_all.
 COL_CACHE_MAX = 64
 
 _COL_CACHE: OrderedDict = OrderedDict()
 _COL_CACHE_CTX: object | None = None
 _COL_CACHE_LOCK = threading.Lock()
+_PARSE_LOCK = threading.Lock()
 
 
 def cached_columns(key: tuple, build):
@@ -114,6 +115,27 @@ def cached_columns(key: tuple, build):
     return val
 
 
+def sql_column(sql: str) -> Column:
+    """``F.expr(sql)``, parsed once per context. PySpark 4 keeps an
+    ``F.expr`` Column as its SQL text and re-parses it every time a plan
+    uses it — about 20 ms for a fund job's 17 KB records CASE on a warm
+    JVM, and about 1 s for the first parse in a fresh one — so the
+    parsed expression is wrapped as a Column and kept here, keyed by its
+    SQL text. Parses run one at a time: in a fresh JVM, run_all's nine
+    concurrent builds would each pay the parser's warm-up at once (a cold
+    etl_day run took about 0.7 s longer unserialized)."""
+    from pyspark.sql import SparkSession
+    from pyspark.sql.classic.column import Column as ClassicColumn
+
+    def build():
+        spark = SparkSession.active()
+        with _PARSE_LOCK:
+            expr = spark._jsparkSession.sessionState().sqlParser().parseExpression(sql)
+        return ClassicColumn(spark._jvm.org.apache.spark.sql.classic.ExpressionUtils.column(expr))
+
+    return cached_columns(("sql", sql), build)
+
+
 # Explicit whitespace class pinned on BOTH engines: Java regex \s is
 # [ \t\n\x0B\f\r] while DuckDB's RE2 \s is [\t\n\f\r ] (no \x0B), so a
 # bare \s+ diverges on vertical-tab (and only there) between the engine
@@ -132,11 +154,6 @@ def words(text: Column | str) -> Column:
 # \s expanded to the pinned class (see WS_RE) so the negated class agrees
 # across Java regex and RE2
 BPE_TOKEN_RE = r"[A-Za-z]+|[0-9]+|[^A-Za-z0-9 \t\r\n\x0B\f]"
-
-
-def bpe_ish_tokens(text: Column | str) -> Column:
-    """BPE-ish pre-tokenization: letter runs, digit runs, single symbols."""
-    return F.regexp_extract_all(_s(text), F.lit(BPE_TOKEN_RE), 0)
 
 
 def word_hash(w: Column) -> Column:
@@ -201,18 +218,6 @@ def shingles(ws: Column, n: int = 3) -> Column:
     return F.array_distinct(grams)
 
 
-def minhash_signature(sh: Column) -> list[Column]:
-    """16 minhash values: min over shingles of (a*H(s)+b) mod P. Empty
-    shingle set -> NULLs. Prefer minhash_signature_from_hashes over a
-    pre-hashed column so md5 runs once, not once per permutation."""
-    return [
-        F.array_min(
-            F.transform(sh, lambda s: (F.lit(a) * word_hash(s) + F.lit(b)) % HASH_P)
-        ).alias(f"mh{i}")
-        for i, (a, b) in enumerate(zip(MINHASH_A, MINHASH_B))
-    ]
-
-
 def minhash_signature_from_hashes(hs: Column, seed: int = 0) -> list[Column]:
     """Same signature, computed from a pre-hashed ``transform(sh,
     word_hash)`` column: the md5 cost is paid once instead of once per
@@ -268,12 +273,6 @@ def simhash(hashes: Column, bits: int = SIMHASH_BITS) -> Column:
     for b in range(bits):
         out = out + bit_vote(b)
     return out
-
-
-def hamming32(a: Column, b: Column) -> Column:
-    """Hamming distance between two 32-bit simhashes."""
-    x = a.bitwiseXOR(b)
-    return F.bit_count(x)
 
 
 def poly_fingerprint(ws: Column) -> Column:

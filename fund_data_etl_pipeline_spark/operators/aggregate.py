@@ -43,8 +43,3 @@ def dividend_merge(
     aggs.extend(F.min(c).alias(c) for c in passthrough)
     merged = df.groupBy(*keys).agg(*aggs)
     return merged.select(*df.columns)
-
-
-def audit_counts(df: DataFrame, status_col: str = "status") -> DataFrame:
-    """A2 — processed/failed counters (dividend_extractor.py:1422-1438)."""
-    return df.groupBy(status_col).agg(F.count(F.lit(1)).alias("n"))

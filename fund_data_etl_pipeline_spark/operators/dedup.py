@@ -37,9 +37,7 @@ from ..functions.text import (
     minhash_signature_from_hashes,
     normalized_md5,
     shingle_hashes,
-    shingles,
     simhash,
-    word_hash,
     word_hashes,
     words,
 )
@@ -304,14 +302,6 @@ def benchmark_contamination(
         "n_shingles",
         ratio.alias("overlap_ratio"),
         (ratio >= threshold).alias("contaminated"),
-    )
-
-
-def with_shingle_sets(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id", n: int = 3
-) -> DataFrame:
-    return df.select(
-        F.col(id_col), shingles(words(F.col(text_col)), n).alias("sh")
     )
 
 

@@ -6,32 +6,9 @@ Catalyst fuses the whole normalize stage into the scan's codegen span.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
-
-from ..functions.cleaning import clean_number
-
-
-def with_constants(df: DataFrame, consts: dict[str, Column]) -> DataFrame:
-    """N1 — constant/derived column fill (dividend_extractor.py:1409-1418)."""
-    return df.withColumns(consts)
-
-
-def cast_money(df: DataFrame, cols: list[str], scale: int = 2) -> DataFrame:
-    """N2 — `pd.to_numeric(errors='coerce').round(2)` on string money cols."""
-    return df.withColumns({c: clean_number(F.col(c), scale) for c in cols})
-
-
-def yyyymmdd(col: Column) -> Column:
-    """Serialize a date to the reference's 8-char string form."""
-    return F.date_format(col, "yyyyMMdd")
-
-
-def coalesce_date(platform_date: Column, default_date: Column) -> Column:
-    """N3 — platform-supplied date wins, else job default (dividend cutoff,
-    dividend_extractor.py:1411-1415)."""
-    return F.coalesce(platform_date, default_date)
 
 
 def dim_join(

@@ -311,17 +311,20 @@ def merge_snapshots(base: DataFrame, delta: DataFrame) -> DataFrame:
 
     def packed(df: DataFrame, tag: str) -> DataFrame:
         return df.select(
-            *key,
+            *[F.col(k).alias(f"{k}_{tag}") for k in key],
             F.struct(*pack_cols).alias(f"p_{tag}"),
             F.col("n_changes").alias(f"n_{tag}"),
         )
 
-    j = packed(base, "b").join(packed(delta, "d"), key, "full_outer")
+    # null-safe keys: a NULL key present in both slices is ONE group, as
+    # in the oracle's PARTITION BY, not two unmatched outer rows
+    same = [F.col(f"{k}_b").eqNullSafe(F.col(f"{k}_d")) for k in key]
+    j = packed(base, "b").join(packed(delta, "d"), same, "full_outer")
     # greatest() skips NULLs (one-sided keys) and orders structs
     # lexicographically — leading with __ord when present
     win = F.greatest(F.col("p_b"), F.col("p_d"))
     return j.select(
-        *key,
+        *[F.coalesce(F.col(f"{k}_b"), F.col(f"{k}_d")).alias(k) for k in key],
         *[win[c].alias(c) for c in payload],
         (
             F.coalesce(F.col("n_b"), F.lit(0)) + F.coalesce(F.col("n_d"), F.lit(0))

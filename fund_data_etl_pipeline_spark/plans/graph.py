@@ -79,6 +79,8 @@ def pagerank(edges: DataFrame, iters: int = PR_ITERS) -> DataFrame:
         .localCheckpoint(eager=False)
     )
     n = deg.count()  # materializes edges + deg; the loop reuses both
+    if n == 0:  # no nodes: the typed empty frame, and no rank to divide
+        return deg.select("node", F.lit(0).cast("long").alias("rank_units"))
     init = PR_SCALE // n
     base = (PR_SCALE * (PR_DAMP_DEN - PR_DAMP_NUM)) // (n * PR_DAMP_DEN)
     ranks = deg.select(

@@ -368,7 +368,8 @@ def table_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggs = []
     for c, num in _PROFILE_COLS:
         aggs += [
-            F.sum(F.col(c).isNull().cast("bigint")).alias(f"{c}__nulls"),
+            # count_if is 0 on an empty table, where a sum is NULL
+            F.count_if(F.col(c).isNull()).alias(f"{c}__nulls"),
             F.countDistinct(c).alias(f"{c}__distinct"),
         ]
         if num:

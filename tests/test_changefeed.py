@@ -215,6 +215,7 @@ def test_merge_snapshots_conflict_and_one_sided_keys(spark):
             (2, "view", "2026-01-15 12:00:00", 9, 2.0, 2),    # base is later
             (3, "view", "2026-01-15 09:00:00", 2, 3.0, 1),    # base-only key
             (4, "click", "2026-01-15 10:00:00", 7, 4.0, 1),   # ts tie: eid wins
+            (None, "view", "2026-01-15 09:00:00", 3, 6.0, 2),  # NULL key, both
         ],
         layout,
     )
@@ -224,6 +225,7 @@ def test_merge_snapshots_conflict_and_one_sided_keys(spark):
             (2, "view", "2026-01-15 11:00:00", 8, 20.0, 1),
             (5, "view", "2026-01-15 13:00:00", 11, 30.0, 2),  # delta-only key
             (4, "click", "2026-01-15 10:00:00", 8, 40.0, 1),
+            (None, "view", "2026-01-15 14:00:00", 12, 60.0, 1),
         ],
         layout,
     )
@@ -231,7 +233,11 @@ def test_merge_snapshots_conflict_and_one_sided_keys(spark):
         (r["user_id"], r["event_type"]): r
         for r in merge_snapshots(base, delta).collect()
     }
-    assert len(got) == 5
+    assert len(got) == 6
+    # a NULL key in both slices merges into one row, as the oracle's
+    # PARTITION BY groups NULLs together
+    assert got[(None, "view")]["last_event_id"] == 12
+    assert got[(None, "view")]["n_changes"] == 3
     assert got[(1, "click")]["last_event_id"] == 6
     assert got[(1, "click")]["n_changes"] == 4
     assert got[(2, "view")]["last_event_id"] == 9  # later base survives delta

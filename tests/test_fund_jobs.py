@@ -56,9 +56,10 @@ def test_classifier_first_match_and_unmatched(spark):
 
 def test_cascade_cache_content_keyed_and_bounded(spark, monkeypatch):
     # Regression (ADVICE r7): the cascade's cache key is the rules'
-    # CONTENT, so in-place mutation of a cached list yields a fresh
-    # cascade (an id()-based key served a stale tree), and the LRU cap
-    # bounds callers that build fresh rule objects per call.
+    # CONTENT (their compiled SQL text), so in-place mutation of a cached
+    # list yields a fresh cascade (an id()-based key served a stale
+    # tree), and the LRU cap bounds callers that build fresh rule objects
+    # per call.
     from collections import OrderedDict
 
     from fund_data_etl_pipeline_spark.functions import text as T

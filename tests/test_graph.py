@@ -25,6 +25,15 @@ def _ranks(df):
     return {r["node"]: r["rank_units"] for r in df.collect()}
 
 
+def test_empty_edges_give_typed_empty_ranks(spark):
+    """A 0-row edge list has no node to rank: the result is the empty
+    (node, rank_units) frame, not a ZeroDivisionError on the node count."""
+    out = pagerank(spark.createDataFrame([], "src long, dst long"), 5)
+    assert out.columns == ["node", "rank_units"]
+    assert dict(out.dtypes) == {"node": "bigint", "rank_units": "bigint"}
+    assert out.collect() == []
+
+
 def test_star_hub_dominates(spark):
     # star: hub 0 touches leaves 1..6 — the hub must outrank every leaf,
     # and the leaves (symmetric positions) must tie exactly.

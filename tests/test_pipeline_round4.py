@@ -279,6 +279,21 @@ def test_table_profile_single_scan(spark, sf_dir):
     assert rows["o_totalprice"]["min_num"] <= rows["o_totalprice"]["max_num"]
 
 
+def test_table_profile_empty_orders_counts_zero_nulls(spark, sf_dir, tmp_path):
+    """On a 0-row ``orders`` every column reports 0 NULLs, as the oracle
+    does — a SUM over no rows would report NULL."""
+    import os
+
+    from fund_data_etl_pipeline_spark.plans.relational2 import table_profile
+
+    spark.read.parquet(os.path.join(sf_dir, "orders.parquet")).limit(0).write.parquet(
+        str(tmp_path / "orders.parquet")
+    )
+    rows = table_profile(spark, str(tmp_path)).collect()
+    assert rows and all(r["n_nulls"] == 0 for r in rows)
+    assert all(r["n_distinct"] == 0 for r in rows)
+
+
 def test_quality_deciles_shape(spark, sf_dir):
     """Deciles are 1..10, monotone in score ranges, counts sum to the
     corpus, and the plan has no global-sort window (threshold broadcast,

@@ -16,6 +16,11 @@ from fund_data_etl_pipeline_spark.functions.cleaning import (
 SETTINGS = dict(max_examples=20, deadline=None)
 
 
+def _sql(builder):
+    """A SQL-text cleaner as a Column builder over the ``v`` column."""
+    return lambda col: F.expr(builder("v"))
+
+
 def _eval(spark, expr_builder, values):
     df = spark.createDataFrame([(v,) for v in values], "v string")
     return [r["o"] for r in df.select(expr_builder(F.col("v")).alias("o")).collect()]
@@ -34,7 +39,7 @@ def _eval(spark, expr_builder, values):
 def test_clean_number_roundtrip_on_canonical_numbers(spark, xs):
     """comma-format ∘ clean_number = identity on canonical 2dp numbers."""
     formatted = [f"{x:,.2f}" for x in xs]
-    out = _eval(spark, clean_number, formatted)
+    out = _eval(spark, _sql(clean_number), formatted)
     assert out == [float(x) for x in xs]
 
 
@@ -73,7 +78,7 @@ def test_correct_fund_code_fixpoint(spark, codes):
 
 
 def test_clean_number_garbage_to_null(spark):
-    out = _eval(spark, clean_number, ["abc", "", "  ", "12,34,5x", "1.2.3"])
+    out = _eval(spark, _sql(clean_number), ["abc", "", "  ", "12,34,5x", "1.2.3"])
     assert out == [None, None, None, None, None]
 
 
@@ -130,12 +135,17 @@ def test_pack_sequences_conserves_tokens(spark, counts):
 
 def test_round2_py_matches_column_form(spark):
     """round2_py (the scalar twin used by the stateful-streaming
-    updaters) must agree bit-for-bit with the round2 Column expression —
+    updaters) and round2_sql (the SQL-text form the fund platform tables
+    compile) must agree bit-for-bit with the round2 Column expression —
     the pin that keeps the repo's single rounding convention actually
     single. The grid covers negative values, exact halves at both
     scales, values whose shortest decimal string rounds differently than
     their binary value (the F.round divergence class), and zero."""
-    from fund_data_etl_pipeline_spark.functions.numeric import round2, round2_py
+    from fund_data_etl_pipeline_spark.functions.numeric import (
+        round2,
+        round2_py,
+        round2_sql,
+    )
 
     values = [
         0.0, 1.0, -1.0, 2.5, -2.5, 0.125, -0.125, 130.545, -130.545,
@@ -148,8 +158,13 @@ def test_round2_py_matches_column_form(spark):
             r["o"]
             for r in df.select(round2(F.col("v"), scale).alias("o")).collect()
         ]
+        sql_out = [
+            r["o"]
+            for r in df.select(F.expr(round2_sql("v", scale)).alias("o")).collect()
+        ]
         py_out = [round2_py(v, scale) for v in values]
         assert col_out == py_out, (scale, list(zip(values, col_out, py_out)))
+        assert sql_out == py_out, (scale, list(zip(values, sql_out, py_out)))
 
 
 @given(

@@ -120,10 +120,11 @@ def _lookup(k):
 
 def _plan_cache_lookup(spark, name):
     """lookup(k) builds a distinct key per ``k`` through one of the two
-    fund-job paths that file Column trees in the plan-build cache: the
-    platform cascade (``classify``) or the spec records
+    fund-job paths that file parsed SQL in the plan-build cache: the
+    platform cascade (``classify``) or the records CASE
     (``_explode_records``)."""
     from fund_data_etl_pipeline_spark.operators import classify as C
+    from fund_data_etl_pipeline_spark.platforms import JobSpec
 
     if name == "cascade":
         df = spark.createDataFrame(
@@ -141,16 +142,10 @@ def _plan_cache_lookup(spark, name):
         "doc_id int, filename string, platform string, text string, "
         "lines array<string>",
     )
-    fns = {}
 
     def lookup(k):
-        fn = fns.setdefault(
-            k,
-            lambda text, lines, filename: [
-                (f"s{k}", F.array(F.struct(text.alias("x"))))
-            ],
-        )
-        return jobs._explode_records(df, fn, ["x"])
+        spec = JobSpec(fields=("x",), defaults={}, platforms={f"s{k}": {"x": "text"}})
+        return jobs._explode_records(df, spec)
 
     return lookup
 
@@ -270,8 +265,8 @@ def test_cached_columns_never_files_a_stale_context(spark):
         T._COL_CACHE_CTX = None  # the next call resets to the live context
 
 
-# the five fund jobs whose platform cascade and spec records come out of
-# the plan-build Column cache; the four manual jobs have no cascade
+# the five fund jobs whose platform tables compile to SQL text, and the
+# four manual jobs
 FUND_JOBS = (
     "dividend_job", "purchase_apply_job", "purchase_confirm_job",
     "redemption_confirm_job", "conversion_job",
@@ -280,15 +275,19 @@ MANUAL_JOBS = (
     "manual_purchase_apply_job", "manual_purchase_confirm_job",
     "manual_redemption_job", "manual_dividend_job",
 )
+# py4j commands one first build of a job may send. The platform CASE and
+# the records CASE each cross the gateway as one SQL string, so a build
+# costs about 0.9k-1.3k commands (a Column-tree build of the same plan
+# sent 2.8k-10.9k). A warm build sends about as many: only the two parses
+# are saved.
+FIRST_BUILD_MAX_CALLS = 1600
 
 
-def test_warm_job_rebuild_halves_gateway_calls(spark, monkeypatch):
-    """Each of the nine jobs is built twice on an empty Column cache,
-    counting the py4j commands the builds send. A warm rebuild of every
-    fund job reuses its cascade and spec records, so it sends at most
-    half the commands of the first build. GC is off while counting, so
-    no release command of an unrelated collected object lands in a
-    build's count."""
+def test_first_job_build_gateway_calls_bounded(spark, monkeypatch):
+    """Each of the nine jobs is built once on an empty Column cache,
+    counting the py4j commands the build sends; none exceeds the bound.
+    GC is off while counting, so no release command of an unrelated
+    collected object lands in a build's count."""
     import gc
     from collections import OrderedDict
 
@@ -312,14 +311,9 @@ def test_warm_job_rebuild_halves_gateway_calls(spark, monkeypatch):
     gc.disable()
     try:
         for name in FUND_JOBS + MANUAL_JOBS:
-            counts = []
-            for _ in range(2):
-                sent[0] = 0
-                built.append(getattr(jobs, name)(docs, dim, FX.RUN_DATE))
-                counts.append(sent[0])
-            calls[name] = counts
+            sent[0] = 0
+            built.append(getattr(jobs, name)(docs, dim, FX.RUN_DATE))
+            calls[name] = sent[0]
     finally:
         gc.enable()
-    for name in FUND_JOBS:
-        first, warm = calls[name]
-        assert 2 * warm <= first, (name, calls[name])
+    assert all(n <= FIRST_BUILD_MAX_CALLS for n in calls.values()), calls
