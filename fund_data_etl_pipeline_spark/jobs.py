@@ -394,9 +394,14 @@ def run_all(
     observed on the write, and an output whose observed count is zero is
     deleted again (the reference's empty-result guard). ``dividend_merged``
     and the Excel copies read the written parquet back, so nothing
-    re-executes a job's plan. The parse cache is released even when a job
-    fails; every job is waited for, then the first failure in job order
-    is raised.
+    re-executes a job's plan. ``dim`` is read once per run: it is cached
+    beside the parse and filled before the jobs start, so the five fund
+    jobs' broadcasts read JVM blocks instead of each re-reading the
+    caller's plan (for a ``createDataFrame(list)`` that is a Python-worker
+    scan). Both caches are released in the same ``finally``, even when a
+    job fails; a cache the caller had put on ``dim`` is released with it.
+    Every job is waited for, then the first failure in job order is
+    raised.
     Returns {job: output path | False (empty)} plus audit counts.
     """
     from concurrent.futures import ThreadPoolExecutor
@@ -414,12 +419,17 @@ def run_all(
     )
     from .sources.corpus import load_corpus
 
-    # eager consumer: the audit below materializes the cache, every
-    # pipeline reads it, and the finally reclaims it; persist_tracked is
-    # the exception-path backstop when run under a registry collector
+    # eager consumers: the audit below materializes the parse cache and
+    # a no-op write the dimension's, every pipeline reads them, and the
+    # finally reclaims both; persist_tracked is the exception-path
+    # backstop when run under a registry collector
     parsed = persist_tracked(load_corpus(spark, corpus_root))
+    dim = persist_tracked(dim)
     try:
         audit = {r["status"]: r["n"] for r in audit_summary(parsed).collect()}
+        # filled here, before the five broadcasts would race to fill it;
+        # a no-op write is one Spark job (a count would add its shuffle's)
+        dim.write.format("noop").mode("overwrite").save()
         ok = parsed.filter(F.col("status") == "ok").select(
             "doc_id", "filename", "rel_path", "text"
         )
@@ -483,3 +493,4 @@ def run_all(
         return status
     finally:
         parsed.unpersist()
+        dim.unpersist()

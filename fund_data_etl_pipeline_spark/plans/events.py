@@ -65,10 +65,10 @@ def events_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     has neither) — and ``stack`` unpivots the 1-row result so the
     conversion window runs on exactly three rows.
 
-    Degenerate-data note: an empty intermediate step yields NULL
-    conversion (guarded division; ANSI mode would otherwise raise
-    DIVIDE_BY_ZERO) where the oracle's IEEE path yields NaN — both are
-    "undefined", normalized alike by the value-hash.
+    Degenerate-data note: a rate over an empty step is NULL (guarded
+    division; ANSI mode would otherwise raise DIVIDE_BY_ZERO), as the
+    oracle's division by zero is — including step 1's ``conv_from_prev``
+    when no user viewed.
     """
     events = load_table(spark, sf_dir, "events")
     first_step, later_steps = _FUNNEL_STEPS[0], _FUNNEL_STEPS[1:]
@@ -128,7 +128,9 @@ def events_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     # to a single partition" warning an operator would otherwise chase.
     w = Window.partitionBy(F.lit(0)).orderBy("step_idx")
     first_n = F.first("n_users").over(w)
-    prev_n = F.lag("n_users", 1, None).over(w)
+    # step 1 has no previous step: as in the oracle's LAG default, it
+    # divides by its own count (NULL at 0 users, not 100 %)
+    prev_n = F.coalesce(F.lag("n_users").over(w), F.col("n_users"))
     return u.select(
         "step_idx",
         "step",
@@ -137,12 +139,7 @@ def events_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.when(first_n > 0, F.col("n_users") * F.lit(1.0) / first_n), 6
         ).alias("conv_from_first"),
         round2(
-            # 1.0 ONLY for step 1's missing lag; an intermediate step with
-            # 0 users must NOT report 100% conversion
-            F.when(F.col("step_idx") == 1, F.lit(1.0)).otherwise(
-                F.when(prev_n > 0, F.col("n_users") * F.lit(1.0) / prev_n)
-            ),
-            6,
+            F.when(prev_n > 0, F.col("n_users") * F.lit(1.0) / prev_n), 6
         ).alias("conv_from_prev"),
     )
 

@@ -31,9 +31,10 @@ schema, and failure semantics are the real ones either way.
 
 from __future__ import annotations
 
+import functools
 import hashlib
 import io
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
@@ -94,19 +95,55 @@ def filter_filenames(
 _IMAGE_MAGIC = (b"\x89PNG", b"\xff\xd8\xff")
 
 
+@functools.cache
+def pdf_codec() -> Callable[[bytes], str]:
+    """The PDF text codec, resolved once per process: pdfplumber (the
+    reference's codec, dividend_extractor.py:1292-1298), else pypdf, else
+    the builtin from-spec extractor (sources/pdf_text.py — the xls_writer
+    precedent applied to S3). The builtin raises a NAMED error for the
+    features it deliberately doesn't cover (real passwords, CCITT/JBIG2/
+    JPX), which the S7 side-channel turns into an informative quarantine
+    row. A failed import is not retried per document: each retry cost
+    about 90 µs, a fifth of a generated statement's one-core decode."""
+    try:
+        import pdfplumber
+    except ImportError:
+        pass
+    else:
+
+        def plumber_text(content: bytes) -> str:
+            with pdfplumber.open(io.BytesIO(content)) as pdf:
+                return "\n".join(p.extract_text() or "" for p in pdf.pages)
+
+        return plumber_text
+    try:
+        from pypdf import PdfReader
+    except ImportError:
+        from .pdf_text import extract_pdf_text
+
+        return extract_pdf_text
+
+    def pypdf_text(content: bytes) -> str:
+        reader = PdfReader(io.BytesIO(content))
+        return "\n".join(p.extract_text() or "" for p in reader.pages)
+
+    return pypdf_text
+
+
 def decode_document(content: bytes) -> str:
     """S3/S4 codec dispatch on magic bytes, import-gated per library.
 
-    - ``%PDF`` container -> pdfplumber (reference codec,
-      dividend_extractor.py:1292-1298), falling back to pypdf, falling
-      back to the builtin from-spec extractor (sources/pdf_text.py:
-      object scan + FlateDecode + Tj/TJ + ToUnicode CMaps — so plain
-      generated PDFs decode even with no third-party PDF library
-      installed); a PDF whose pages carry NO text (a scan) routes to
-      ``ocr_scanned_pdf`` — embedded page images extracted and decoded
-      from spec, glyph recognition import-gated — instead of returning
-      silent empty text;
-    - PNG/JPEG -> easyocr (manual_purchase_apply_extractor.py:75-181);
+    - ``%PDF`` container -> ``pdf_codec()``: pdfplumber (reference
+      codec), else pypdf, else the builtin from-spec extractor
+      (sources/pdf_text.py: object scan + FlateDecode + Tj/TJ +
+      ToUnicode CMaps — so plain generated PDFs decode even with no
+      third-party PDF library installed); a PDF whose pages carry NO
+      text (a scan) routes to ``ocr_scanned_pdf`` — embedded page images
+      extracted and decoded from spec, glyph recognition import-gated —
+      instead of returning silent empty text;
+    - PNG/JPEG -> easyocr (manual_purchase_apply_extractor.py:75-181),
+      imported per call, so a backend put into ``sys.modules`` after the
+      first document is still found;
     - anything else -> UTF-8 decode (test fixtures are plain-text
       ``.pdf``s).
     A missing OCR library (or a PDF feature outside the builtin
@@ -115,30 +152,7 @@ def decode_document(content: bytes) -> str:
     crashing the job.
     """
     if content.startswith(b"%PDF"):
-        try:
-            import pdfplumber
-        except ImportError:
-            pass
-        else:
-            with pdfplumber.open(io.BytesIO(content)) as pdf:
-                text = "\n".join(
-                    p.extract_text() or "" for p in pdf.pages
-                )
-            return text if text.strip() else ocr_scanned_pdf(content)
-        try:
-            from pypdf import PdfReader
-        except ImportError:
-            # neither library installed: the from-spec builtin extractor
-            # (sources/pdf_text.py — the xls_writer precedent applied to
-            # S3). Raises a NAMED error for the features it deliberately
-            # doesn't cover (real passwords, CCITT/JBIG2/JPX), which the
-            # S7 side-channel turns into an informative quarantine row.
-            from .pdf_text import extract_pdf_text
-
-            text = extract_pdf_text(content)
-            return text if text.strip() else ocr_scanned_pdf(content)
-        reader = PdfReader(io.BytesIO(content))
-        text = "\n".join(p.extract_text() or "" for p in reader.pages)
+        text = pdf_codec()(content)
         return text if text.strip() else ocr_scanned_pdf(content)
     if content.startswith(_IMAGE_MAGIC):
         try:

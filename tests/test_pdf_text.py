@@ -11,6 +11,8 @@ from __future__ import annotations
 
 import zlib
 
+import pytest
+
 
 def build_pdf(objects: list[bytes]) -> bytes:
     """Assemble numbered objects (1-based, in order) into a valid PDF:
@@ -155,6 +157,52 @@ def test_decode_document_uses_builtin_for_real_pdfs():
 
     pdf = simple_pdf(b"BT /F1 12 Tf (dispatch works) Tj ET", compress=True)
     assert decode_document(pdf) == "dispatch works"
+
+
+def _fake_pdf_library(name: str):
+    """A module with the call surface decode_document uses of ``name``:
+    pdfplumber's ``open`` context manager or pypdf's ``PdfReader``."""
+    import contextlib
+    import types
+
+    page = types.SimpleNamespace(extract_text=lambda: f"read by {name}")
+    pdf = types.SimpleNamespace(pages=[page])
+    mod = types.ModuleType(name)
+    mod.open = lambda buf: contextlib.nullcontext(pdf)
+    mod.PdfReader = lambda buf: pdf
+    return mod
+
+
+@pytest.mark.parametrize(
+    "installed, expected",
+    [
+        (("pdfplumber", "pypdf"), "read by pdfplumber"),
+        (("pdfplumber",), "read by pdfplumber"),
+        (("pypdf",), "read by pypdf"),
+        ((), "dispatch works"),  # the builtin extractor
+    ],
+)
+def test_pdf_codec_choice_resolved_once(monkeypatch, installed, expected):
+    """pdfplumber wins over pypdf, pypdf over the builtin; the choice is
+    made on the first PDF and kept, so a library that disappears later
+    is not looked up again."""
+    import sys
+
+    from fund_data_etl_pipeline_spark.sources.corpus import decode_document, pdf_codec
+
+    pdf = simple_pdf(b"BT /F1 12 Tf (dispatch works) Tj ET", compress=True)
+    for name in ("pdfplumber", "pypdf"):
+        # None in sys.modules makes the import raise ImportError
+        lib = _fake_pdf_library(name) if name in installed else None
+        monkeypatch.setitem(sys.modules, name, lib)
+    pdf_codec.cache_clear()
+    try:
+        assert decode_document(pdf) == expected
+        for name in ("pdfplumber", "pypdf"):
+            monkeypatch.setitem(sys.modules, name, None)
+        assert decode_document(pdf) == expected
+    finally:
+        pdf_codec.cache_clear()
 
 
 def test_decode_document_quarantines_encrypted(tmp_path):

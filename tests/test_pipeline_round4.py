@@ -44,6 +44,29 @@ def test_funnel_conversion_rates_well_formed(spark, sf_dir):
         assert 0.0 <= rows[i]["conv_from_first"] <= 1.0
 
 
+def test_funnel_on_empty_events_matches_oracle(spark, sf_dir, tmp_path):
+    """With 0 users every rate is undefined: the query gives NULL where
+    its DuckDB oracle does, step 1's conv_from_prev included."""
+    import os
+
+    import duckdb
+    import pyarrow.parquet as pq
+
+    import __spark_entry__ as entry
+    from fund_data_etl_pipeline_spark.plans.events import events_funnel
+
+    path = str(tmp_path / "events.parquet")
+    schema = pq.read_schema(os.path.join(sf_dir, "events.parquet"))
+    pq.write_table(schema.empty_table(), path)
+    got = sorted(tuple(r) for r in events_funnel(spark, str(tmp_path)).collect())
+    con = duckdb.connect()
+    con.sql(f"CREATE VIEW events AS SELECT * FROM '{path}'")
+    cols = "step_idx, step, n_users, conv_from_first, conv_from_prev"
+    oracle = con.sql(f"SELECT {cols} FROM ({entry.oracle_sql()['events_funnel']})")
+    assert got == sorted(oracle.fetchall())
+    assert [r[4] for r in got] == [None, None, None]
+
+
 def test_event_value_stats_approx_tracks_exact(spark, sf_dir):
     """The sketch form (approx_percentile/approx_count_distinct) must obey
     its documented guarantees vs the exact oracle baseline. The percentile

@@ -1,7 +1,8 @@
 """``jobs.run_all`` fan-out: each sink executes its plan once, the nine job
 pipelines run on concurrent driver threads, the empty-result guard deletes
-only what the write itself produced, and the parse cache is released on
-every exit path.
+only what the write itself produced, the dimension is read once per run,
+a second run compiles no generated class, and the parse and dimension
+caches are released on every exit path.
 """
 
 from __future__ import annotations
@@ -20,11 +21,12 @@ from test_corpus_lifecycle import _build_tree
 from test_fund_jobs import expected_set, rows_set
 
 # Spark jobs of one run_all(excel=True) over the _build_tree corpus: the
-# audit (which materializes the parse), one write per sink, one toPandas
-# per Excel copy, plus the map stages AQE submits as jobs of their own.
-# An isEmpty probe, a re-executed dividend cascade, a schema-inferring
-# read-back or a count-after-write each add jobs and fail the test.
-RUN_ALL_SPARK_JOBS = 29
+# audit (which materializes the parse), the no-op write that materializes
+# the dimension, one write per sink, one toPandas per Excel copy, plus the
+# map stages AQE submits as jobs of their own. An isEmpty probe, a
+# re-executed dividend cascade, a schema-inferring read-back or a
+# count-after-write each add jobs and fail the test.
+RUN_ALL_SPARK_JOBS = 30
 
 SINK_GOLDENS = {
     "dividend": (FX.EXPECTED_DIVIDEND, S.DIVIDEND_COLS),
@@ -96,19 +98,50 @@ def test_run_all_failure_releases_parse_cache(spark, corpus, tmp_path, monkeypat
     assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
 
+def _classes_compiled(spark) -> int:
+    """Generated classes Janino has compiled in this JVM: the generated-code
+    cache compiles only on a miss."""
+    codegen = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return codegen.METRIC_COMPILATION_TIME().getCount()
+
+
 def test_back_to_back_runs_match_goldens(spark, corpus, tmp_path):
+    """Both runs write the goldens, and the second compiles no generated
+    class: the session's generated-code cache holds every class of the
+    first (at Spark's default of 100 entries it recompiled about 90)."""
     dividend = jobs.dividend_job(
         FX.docs_df(spark, FX.DIVIDEND_DOCS), FX.dim_df(spark), FX.RUN_DATE
     )
     merged = rows_set(dividend_merge(dividend))
     for run in range(2):
+        compiled = _classes_compiled(spark)
         status = _run_all(spark, corpus, tmp_path / f"out{run}")
+        if run:
+            assert _classes_compiled(spark) == compiled
         for sink, (golden, cols) in SINK_GOLDENS.items():
             assert _sink_rows(spark, status[sink], cols) == expected_set(golden), sink
         # merged from the written output == merged from the job's plan
         assert _sink_rows(spark, status["dividend_merged"], S.DIVIDEND_COLS) == merged
         assert status["quarantined"] == 1
         assert status["audit"] == {"ok": N_DOCS, "error": 1}
+
+
+def test_run_all_reads_dimension_once(spark, corpus, tmp_path):
+    """Each row of a Python-scanned dimension passes an accumulator once
+    per read: one run reads it once, not once per fund job's broadcast."""
+    sc = spark.sparkContext
+    reads = sc.accumulator(0)
+
+    def tap(row):
+        reads.add(1)
+        return row
+
+    dim = spark.createDataFrame(
+        sc.parallelize(FX.PRODUCT_CODES).map(tap), S.PRODUCT_CODES_SCHEMA
+    )
+    status = jobs.run_all(spark, corpus, dim, FX.RUN_DATE, str(tmp_path / "out"))
+    assert status["dividend"]
+    assert reads.value == len(FX.PRODUCT_CODES)
 
 
 def _lookup(k):
