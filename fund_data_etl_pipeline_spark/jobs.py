@@ -386,7 +386,13 @@ def run_all(
     The reference runs 9 sequential jobs each re-walking the share
     (main:501-527); here a single binaryFile scan + parse stage is
     persisted and every job is a filter over it — at 100 TB this is the
-    difference between 9 corpus reads and 1. The audit count materializes
+    difference between 9 corpus reads and 1. The parse has as many
+    partitions as ``load_corpus`` gives the decode (one per
+    ``FILES_PER_TASK`` statements, at most one per core), and every stage
+    below inherits them: a day of about a hundred statements runs the
+    audit, each job and the quarantine as one task each, instead of
+    paying a task's fixed cost, such as deserializing the job's plan, once
+    per core. The audit count materializes
     the persisted parse; then the nine jobs run concurrently, one driver
     thread each (build -> write -> Excel copy), so one job's Python plan
     build overlaps the others' execution, while this thread writes the

@@ -77,6 +77,18 @@ _LEN_IND_RE = re.compile(rb"/Length\s+(\d+)\s+\d+\s+R")
 _LEN_DIR_RE = re.compile(rb"/Length\s+(\d+)(?!\s+\d+\s+R)")
 _REF_RE = re.compile(rb"(\d+)\s+\d+\s+R")
 _NAME_RE = re.compile(rb"/([A-Za-z0-9.#+-]+)")
+# Tokenizer patterns are matched AT a position (``pattern.match(data, i)``),
+# never on a slice ``data[i:]``: a slice copies the rest of the buffer, so
+# a per-byte loop over a large content stream would take quadratic time.
+_HEX_STRING_RE = re.compile(rb"<([0-9A-Fa-f\s]*)>")
+_OCTAL_RE = re.compile(rb"[0-7]{1,3}")
+# an ``n g R`` reference first, so it stays one item
+_ARRAY_ITEM_RE = re.compile(rb"\d+\s+\d+\s+R\b|/[A-Za-z0-9.#+-]+|[^\s\[\]<>/]+")
+_OPERATOR_RE = re.compile(rb"[A-Za-z'\"*]+")
+# content-stream bytes that start no token _page_text reads (whitespace,
+# numbers, array brackets): skipped as one run
+_FILLER_RE = re.compile(rb"[^(</A-Za-z'\"*]*")
+_TF_RE = re.compile(rb"\s+[\d.+-]+\s+Tf\b")
 
 
 def _declared_length(head: bytes, int_objs: dict[int, int]) -> int | None:
@@ -469,7 +481,7 @@ def _string_value_after(d: bytes, key: bytes) -> bytes | None:
         s, _ = _literal_string(d, i)
         return s
     if d[i : i + 1] == b"<":
-        hm = re.match(rb"<([0-9A-Fa-f\s]*)>", d[i:])
+        hm = _HEX_STRING_RE.match(d, i)
         if hm:
             hexs = re.sub(rb"\s+", b"", hm.group(1))
             if len(hexs) & 1:
@@ -644,15 +656,10 @@ def _array_items(val: bytes) -> list[bytes]:
             items.append(inner[i:j])
             i = j
             continue
-        m = re.match(rb"(\d+)\s+(\d+)\s+R\b", inner[i:])
+        m = _ARRAY_ITEM_RE.match(inner, i)
         if m:
             items.append(m.group(0))
-            i += m.end()
-            continue
-        m = re.match(rb"/[A-Za-z0-9.#+-]+|[^\s\[\]<>/]+", inner[i:])
-        if m:
-            items.append(m.group(0))
-            i += m.end()
+            i = m.end()
         else:
             i += 1
     return items
@@ -892,9 +899,9 @@ def _literal_string(data: bytes, i: int) -> tuple[bytes, int]:
                 out += _ESCAPES[nxt].encode("latin-1")
                 i += 2
             elif nxt.isdigit():
-                oct_m = re.match(rb"[0-7]{1,3}", data[i + 1 :])
+                oct_m = _OCTAL_RE.match(data, i + 1)
                 out.append(int(oct_m.group(0), 8) & 0xFF)
-                i += 1 + len(oct_m.group(0))
+                i = oct_m.end()
             elif nxt in (b"\n", b"\r"):
                 # line continuation: \<EOL> elides the whole EOL, and
                 # §7.3.4.2 treats \<CRLF> as ONE end-of-line — consume
@@ -964,13 +971,13 @@ def _page_text(
             pending.append(raw)
             continue
         if ch == b"<" and content[i : i + 2] != b"<<":
-            m = re.match(rb"<([0-9A-Fa-f\s]*)>", content[i:])
+            m = _HEX_STRING_RE.match(content, i)
             if m:
                 hx = re.sub(rb"\s", b"", m.group(1))
                 if len(hx) % 2:
                     hx += b"0"
                 pending.append(bytes.fromhex(hx.decode("ascii")))
-                i += m.end()
+                i = m.end()
                 continue
         if ch == b"/":
             m = _NAME_RE.match(content, i)
@@ -978,11 +985,10 @@ def _page_text(
                 name = m.group(1)
                 i = m.end()
                 # lookahead for Tf: "/F1 12 Tf"
-                la = content[i : i + 32]
-                if re.match(rb"\s+[\d.+-]+\s+Tf\b", la):
+                if _TF_RE.match(content, i, i + 32):
                     cmap = cmaps.get(name)
                 continue
-        m = re.match(rb"[A-Za-z'\"*]+", content[i:])
+        m = _OPERATOR_RE.match(content, i)
         if m:
             op = m.group(0)
             if op in (b"'", b"\"", b"T*", b"TD", b"Td") and cur:
@@ -996,9 +1002,9 @@ def _page_text(
                 cur = []
             else:
                 pending.clear()  # strings were operands of a non-text op
-            i += m.end()
+            i = m.end()
             continue
-        i += 1
+        i = _FILLER_RE.match(content, i + 1).end()
     if cur:  # unterminated BT block: keep what was shown
         blocks.append("".join(cur))
     return "\n".join(b for b in blocks if b)

@@ -66,6 +66,41 @@ def test_scan_prunes_and_parses(spark, tmp_path):
     assert by_status["ok"] == len(FX.DIVIDEND_DOCS)
 
 
+MAX_PARTITION_BYTES = 128 * 2**20
+
+
+def test_decode_partitions_rule():
+    """One task per FILES_PER_TASK statements, at most one per core, and
+    never fewer than one per maxPartitionBytes of content, so a task's
+    Arrow batches stay within Spark's own split size."""
+    from fund_data_etl_pipeline_spark.sources.corpus import (
+        FILES_PER_TASK,
+        decode_partitions,
+    )
+
+    # a 105-statement day of 40 KB PDFs is one task at any core count
+    assert decode_partitions(105, 105 * 40_000, 4, MAX_PARTITION_BYTES) == 1
+    assert decode_partitions(105, 105 * 40_000, 32, MAX_PARTITION_BYTES) == 1
+    # a 3,150-statement month fills the cores, and no more
+    assert decode_partitions(3150, 3150 * 40_000, 4, MAX_PARTITION_BYTES) == 4
+    # large scans keep the byte floor
+    listed = 3 * FILES_PER_TASK * MAX_PARTITION_BYTES
+    assert decode_partitions(
+        FILES_PER_TASK, listed, 4, MAX_PARTITION_BYTES
+    ) == 3 * FILES_PER_TASK
+    # an empty listing still has one task
+    assert decode_partitions(0, 0, 4, MAX_PARTITION_BYTES) == 1
+
+
+def test_small_day_decodes_in_one_task(spark, tmp_path):
+    """Spark splits the 103-file tree into a task per core; the decode, and
+    the persisted parse every job stage reads, run as one."""
+    root = str(_build_tree(tmp_path / "corpus"))
+    if spark.sparkContext.defaultParallelism >= 2:
+        assert scan_binary_corpus(spark, root).rdd.getNumPartitions() >= 2
+    assert load_corpus(spark, root).rdd.getNumPartitions() == 1
+
+
 def test_filename_filter_runs_before_parse(spark, tmp_path):
     root = _build_tree(tmp_path / "corpus")
     scanned = parse_path_metadata(scan_binary_corpus(spark, str(root)))

@@ -9,6 +9,7 @@ builtin instead of quarantining."""
 
 from __future__ import annotations
 
+import time
 import zlib
 
 import pytest
@@ -132,6 +133,28 @@ def test_multipage_and_quote_operator():
     ]
     pdf = build_pdf(objects)
     assert extract_pdf_text(pdf) == "page one\nfirst\nsecond"
+
+
+@pytest.mark.parametrize(
+    "filler",
+    [b" ", b"100.5 200.25 m 300 200 l S\n"],
+    ids=["whitespace", "path_operators"],
+)
+def test_megabyte_content_stream_decodes_in_linear_time(filler):
+    """1 MB of content that shows no text decodes in well under a second.
+    A tokenizer that matches on ``content[i:]`` copies the rest of the
+    stream at every such byte: about 13 s for 1 MB of spaces."""
+    from fund_data_etl_pipeline_spark.sources.pdf_text import extract_pdf_text
+
+    body = filler * (2**20 // len(filler))
+    pdf = simple_pdf(
+        b"BT /F1 12 Tf (head) Tj ET\n" + body + b"BT (tail) Tj ET",
+        compress=True,
+    )
+    start = time.perf_counter()
+    text = extract_pdf_text(pdf)
+    assert time.perf_counter() - start < 1.0
+    assert text == "head\ntail"
 
 
 def test_unsupported_filter_names_the_problem():
