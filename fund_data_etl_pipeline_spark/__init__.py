@@ -11,7 +11,6 @@ Layout
 - ``functions``  expression library: cleaning, extraction (P1-P16), text, vectors
 - ``operators``  classify, normalize, aggregate, dedup, similarity, codecs
 - ``plans``      registered queries (DataFrame builder + DuckDB oracle SQL)
-- ``streaming``  Structured Streaming file ingest + windowed aggregations
 """
 
 __version__ = "0.1.0"

@@ -30,45 +30,6 @@ def round2_sql(x: str, scale: int = 2) -> str:
     return f"signum({x}) * floor(abs({x}) * {p} + 0.5D) / {p}"
 
 
-def round2_py(x: float, scale: int = 2) -> float:
-    """Scalar twin of ``round2`` — the SAME half-away-from-zero-on-the-
-    binary-double expression (copysign(floor(|x|·p + 0.5)) / p), for the
-    Python side of stateful streaming updaters. Keeping it here, beside
-    the Column form, is what keeps the convention single-sourced: the
-    streaming CDC snapshot and anomaly gate round with this function, so
-    their outputs stay bit-equal to the batch plans their parity pytests
-    compare against (a pytest asserts this function matches the Column
-    form on a value grid including negative halves)."""
-    import math
-
-    p = float(10**scale)
-    return math.copysign(math.floor(abs(x) * p + 0.5), x) / p
-
-
-def cents_py(x: float) -> int:
-    """Scalar twin of ``cents`` (sign-aware exact BIGINT cents) for the
-    stateful streaming updaters — same single-sourcing rationale as
-    round2_py."""
-    import math
-
-    return int(math.copysign(math.floor(abs(float(x)) * 100 + 0.5), x))
-
-
-def cents_np(values):
-    """Vectorized twin of ``cents_py`` for a float64 numpy array — the
-    LITERALLY SAME ``copysign(floor(|x|*100 + 0.5), x)`` IEEE expression,
-    elementwise (numpy float64 abs/multiply/add/floor/copysign are the
-    same correctly-rounded double ops the scalar math module applies), so
-    the streaming updaters' vectorized folds stay bit-equal to the scalar
-    fold a pytest grid pins against the Column form. Exact int64 for
-    |cents| < 2**53 (the same bound at which the scalar twin's double
-    argument stops being integral)."""
-    import numpy as np
-
-    a = np.asarray(values, dtype="float64")
-    return np.copysign(np.floor(np.abs(a) * 100.0 + 0.5), a).astype("int64")
-
-
 def cents(col: Column | str) -> Column:
     """Exact integer cents of a 2-decimal DOUBLE (money/value columns).
 

@@ -137,7 +137,6 @@ def _span_kept(
     text_col: str,
     id_col: str,
     span_words: int,
-    keep_text: bool,
 ) -> DataFrame:
     """Span-occurrence table joined with the first-occurrence rule: every
     non-overlapping ``span_words``-word window of every document, keyed
@@ -146,9 +145,8 @@ def _span_kept(
     table is persisted because two consumers read it (the first-occurrence
     aggregate and the probe side of the join back); at 100 TB it becomes
     a written intermediate bucketed by span hash, so neither pass
-    re-shuffles. ``keep_text`` carries span_idx + span_text through for
-    corpus rewriting; the stats path drops them so the cached table stays
-    hash-sized. (The slice lambda re-evaluates the inlined words(text)
+    re-shuffles. Only (id, hash, order key) are kept, so the cached table
+    stays hash-sized. (The slice lambda re-evaluates the inlined words(text)
     per span — a one-time linear factor paid during the single
     materialization of the persisted table.)"""
     spans = F.transform(
@@ -166,20 +164,17 @@ def _span_kept(
     tokenized = df.select(
         F.col(id_col), words(F.col(text_col)).alias("__w")
     ).filter(F.size("__w") > 0)
-    cols = [
-        F.col(id_col),
-        F.md5("span_text").alias("span_hash"),
-        (
-            F.col(id_col).cast("bigint") * F.lit(SPAN_IDX_BASE)
-            + F.col("span_idx")
-        ).alias("okey"),
-    ]
-    if keep_text:
-        cols += [F.col("span_idx"), F.col("span_text")]
     occ = persist_tracked(
         tokenized.select(
             F.col(id_col), F.posexplode(spans).alias("span_idx", "span_text")
-        ).select(*cols)
+        ).select(
+            F.col(id_col),
+            F.md5("span_text").alias("span_hash"),
+            (
+                F.col(id_col).cast("bigint") * F.lit(SPAN_IDX_BASE)
+                + F.col("span_idx")
+            ).alias("okey"),
+        )
     )
     first = occ.groupBy("span_hash").agg(F.min("okey").alias("first_key"))
     return occ.join(first, "span_hash").withColumn(
@@ -210,7 +205,7 @@ def span_dedup(
     shuffle on a 32-char md5 span key — the same cost class as exact doc
     dedup (see _span_kept for the shared occurrence/first-occurrence
     machinery)."""
-    kept = _span_kept(df, text_col, id_col, span_words, keep_text=False)
+    kept = _span_kept(df, text_col, id_col, span_words)
     per_doc = kept.groupBy(id_col).agg(
         F.count(F.lit(1)).alias("n_spans"),
         F.sum(F.when(F.col("is_first"), 1).otherwise(0)).alias("n_kept"),
@@ -222,36 +217,6 @@ def span_dedup(
         round2(
             (F.col("n_spans") - F.col("n_kept")) / F.col("n_spans"), 6
         ).alias("dup_ratio"),
-    )
-
-
-def span_dedup_rewrite(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    span_words: int = SPAN_WORDS,
-) -> DataFrame:
-    """The production output of span dedup: the corpus REWRITTEN with
-    duplicated spans removed. Same first-occurrence rule as
-    ``span_dedup``; each document's surviving spans are reassembled in
-    original order. Documents whose every span was a duplicate drop out
-    entirely (they contributed nothing new).
-
-    Scale shape: identical to ``span_dedup`` plus one aggregation on
-    doc_id — collect_list is safe because a document's spans are bounded
-    by its own length; order is restored by array_sort on span_idx, not
-    by shuffle order."""
-    kept = _span_kept(df, text_col, id_col, span_words, keep_text=True).filter(
-        F.col("is_first")
-    )
-    return kept.groupBy(id_col).agg(
-        F.array_join(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("span_idx", "span_text"))),
-                lambda s: s["span_text"],
-            ),
-            " ",
-        ).alias(text_col)
     )
 
 
@@ -554,13 +519,11 @@ def minhash_band_keys(
     seed: int = 0,
 ) -> DataFrame:
     """(id, band, key [, carry…]) rows — THE banding definition, shared
-    by the batch pair-finder (minhash_lsh_pairs), the batch incremental
-    path (incremental_minhash_pairs) and its streaming twin
-    (streaming/file_ingest.streaming_minhash_neardup), so every consumer
-    bands identically by construction — the attribution_join parity
-    pattern. ``carry`` keeps extra columns of ``prepped`` on the banded
-    rows (the streaming side carries ``hs`` through — see the
-    incremental builder's note on why). ``seed=1`` bands with the
+    by the pair-finder (minhash_lsh_pairs) and the incremental path
+    (incremental_minhash_pairs), so both band identically by
+    construction. ``carry`` keeps extra columns of ``prepped`` on the
+    banded rows (the incremental new side carries ``hs`` through — see
+    that builder's note on why). ``seed=1`` bands with the
     independent second permutation set — the straggler-recovery pass
     (minhash_recovery_pairs)."""
     # signature + band-struct Columns memoized per (hs_col, seed) — the
@@ -637,24 +600,15 @@ def incremental_minhash_pairs(
     id_col: str = "doc_id",
     threshold: float = 0.8,
     index_bucket_cap: int = MINHASH_BUCKET_CAP,
-    watermark: str = "1 hour",
     index_tables: tuple[DataFrame, DataFrame] | None = None,
 ) -> DataFrame:
     """Incremental near-dup against a persisted corpus index — the
-    minhash twin of incremental_exact_dedup, and the VERDICT r7 #8
-    batch/streaming pair: today's (small) new batch bands with the SAME
-    minhash_band_keys code as the full-corpus path and equi-joins the
-    index's band table; candidates verify by the exact hashed-shingle
-    jaccard against the index's prepped sets. Output: (d1 = index doc,
+    minhash twin of incremental_exact_dedup: today's (small) new batch
+    bands with the SAME minhash_band_keys code as the full-corpus path
+    and equi-joins the index's band table; candidates verify by the
+    exact hashed-shingle jaccard against the index's prepped sets. Output: (d1 = index doc,
     d2 = new doc, jaccard) for every verified pair — "d2 has any pair"
     IS the dup flag, and d1's min is the canonical attribution.
-
-    ``new_docs`` may be a STREAMING DataFrame: every stage is a
-    stateless projection or a stream-static equi-join (the index side
-    is static), legal in append mode; the only stateful operator is the
-    final within-watermark pair dedup. The same builder serves batch
-    and streaming — parity by construction, asserted by the
-    streaming-vs-batch pytest.
 
     Two deliberate shape choices, both documented trade-offs:
     - The index side keeps only the ``index_bucket_cap`` SMALLEST ids
@@ -675,13 +629,9 @@ def incremental_minhash_pairs(
       recall on clustered staging (tools/recall_probe.py) prices this.
     - The new side CARRIES its hashed shingle set through the band
       explode (4 copies) instead of the full-corpus path's ID-only join:
-      joining candidates back to the stream-derived prepped table would
-      be a stream-stream join (watermark bookkeeping for no benefit),
-      and the carried payload is today's small batch, not the corpus.
-      The stream side also pays the note-6 no-CSE re-evaluation of the
-      hashing pipeline (a stream can't persist); at scale wrap the sink
-      in foreachBatch and persist per micro-batch if the batch stops
-      being small.
+      joining candidates back to the new side's prepped table would be
+      one more shuffle of it, while the carried payload is today's small
+      batch, not the corpus.
 
     Index input, one of:
     - ``index_docs``: raw corpus documents — prepped and banded inline
@@ -738,16 +688,7 @@ def incremental_minhash_pairs(
             6,
         ).alias("jaccard"),
     ).filter(F.col("jaccard") >= threshold)
-    # a pair sharing k bands appears k times with identical jaccard —
-    # collapse: bounded within-watermark state on a stream (the
-    # streaming_dedup precedent), plain dropDuplicates in batch
-    if out.isStreaming:
-        return (
-            out.withColumn("ingest_ts", F.current_timestamp())
-            .withWatermark("ingest_ts", watermark)
-            .dropDuplicatesWithinWatermark(["d1", "d2"])
-            .drop("ingest_ts")
-        )
+    # a pair sharing k bands appears k times with identical jaccard
     return out.dropDuplicates(["d1", "d2"])
 
 

@@ -299,8 +299,8 @@ def save_minhash_index(
 def load_minhash_index(
     spark: SparkSession, base_dir: str, prefix: str | None = None
 ) -> tuple[DataFrame, DataFrame]:
-    """The ``index_tables=`` pair for incremental_minhash_pairs /
-    streaming_minhash_neardup, backed by the on-disk bucketed tables."""
+    """The ``index_tables=`` pair for incremental_minhash_pairs, backed
+    by the on-disk bucketed tables."""
     names = (f"{prefix}_prepped", f"{prefix}_bands") if prefix else (None, None)
     return (
         attach_bucketed_table(spark, os.path.join(base_dir, "prepped"), names[0]),

@@ -145,132 +145,3 @@ def audit_summary(parsed: DataFrame) -> DataFrame:
     """A2 — per-status counts over the parsed corpus."""
     return parsed.groupBy("status").agg(F.count(F.lit(1)).alias("n"))
 
-
-def write_sized(
-    df: DataFrame,
-    path: str,
-    partition_cols: tuple[str, ...] = (),
-    target_rows_per_file: int = 1_000_000,
-    mode: str = "overwrite",
-) -> int:
-    """Small-file-aware parquet sink: coalesce output into files of
-    ~``target_rows_per_file`` rows (tune so files land near the
-    100-200 MB parquet sweet spot for the schema at hand).
-
-    The 100 TB problem this solves: a 1000-task stage writing into N
-    hive partitions produces up to 1000*N files; downstream scans then
-    pay per-file open/footer costs and the namenode holds the metadata.
-    The fix is a row-count-driven repartition BEFORE the write:
-
-    - unpartitioned: one count (cheap columnless scan) sizes a
-      round-robin ``repartition(ceil(n/target))`` — every file lands
-      within rounding of the target. The count doubles as the Q2
-      empty-result guard, so the upstream plan runs twice total (count +
-      write), not three times (the old isEmpty/count/write chain).
-    - hive-partitioned: repartition on (partition key, file slot) where
-      the slot count is sized from THAT PARTITION VALUE's row count (a
-      tiny per-value count table broadcast back onto the rows,
-      NULL-safe on the keys). Sizing every value from the largest
-      (the pre-r11 form) shattered small partitions into `slots`
-      near-empty files each — one 50M-row day next to 364 1k-row days
-      wrote ~50 files per small day, the very pathology this sink
-      exists to prevent. Each output task writes at most one file per
-      partition value it holds; ``maxRecordsPerFile`` backstops
-      residual skew inside a slot.
-
-    Returns the number of files THIS CALL wrote (before/after listing
-    diff, so ``mode='append'`` doesn't count pre-existing files). This
-    is the batch analogue of Delta/Iceberg OPTIMIZE file compaction,
-    expressed with nothing but repartition + maxRecordsPerFile."""
-    import math
-
-    spark = df.sparkSession
-
-    def _files() -> set[str]:
-        from pyspark.errors import AnalysisException
-
-        try:
-            return {
-                r["path"]
-                for r in spark.read.format("binaryFile")
-                .option("pathGlobFilter", "*.parquet")
-                .option("recursiveFileLookup", "true")
-                .load(path)
-                .select("path")
-                .collect()
-            }
-        except AnalysisException as e:
-            # only "path does not exist yet" is expected; a transient
-            # listing failure must propagate, not read as a 0 file count.
-            # Match the STRUCTURED error class, not the rendered message
-            # (ADVICE r12: the message text is a Spark-version artifact);
-            # the substring check remains only as the fallback for a
-            # build where the condition accessor returns None.
-            cond = None
-            for attr in ("getCondition", "getErrorClass"):
-                fn = getattr(e, attr, None)
-                if callable(fn):
-                    try:
-                        cond = fn()
-                    except Exception:  # noqa: BLE001 — accessor drift
-                        cond = None
-                    if cond is not None:
-                        break
-            if cond == "PATH_NOT_FOUND" or (
-                cond is None and "PATH_NOT_FOUND" in str(e)
-            ):
-                return set()
-            raise
-
-    cols = [c for c in partition_cols if c in df.columns]
-    if not cols:
-        n = df.count()
-        if n == 0:
-            return 0
-        writer_df = df.repartition(max(1, math.ceil(n / target_rows_per_file)))
-    else:
-        from pyspark.sql.types import IntegerType, StructField, StructType
-
-        counts = df.groupBy(*cols).agg(F.count(F.lit(1)).alias("__n"))
-        # collect the tiny per-partition-value counts table ONCE (one row
-        # per partition value — bounded by the sink's layout, not the
-        # data): it serves both the Q2 emptiness guard and the broadcast
-        # join, so the upstream plan executes twice total (counts + the
-        # write), not three times (guard-count + join-recompute + write)
-        count_rows = counts.collect()
-        if not count_rows:
-            return 0
-        key_fields = [
-            StructField(f"__k_{f.name}", f.dataType, True)
-            for f in counts.schema.fields
-            if f.name != "__n"
-        ]
-        slot_tbl = spark.createDataFrame(
-            [
-                tuple(r[c] for c in cols)
-                + (max(1, math.ceil(r["__n"] / target_rows_per_file)),)
-                for r in count_rows
-            ],
-            StructType(key_fields + [StructField("__slots", IntegerType(), False)]),
-        )
-        cond = None
-        for c in cols:
-            e = F.col(c).eqNullSafe(F.col(f"__k_{c}"))
-            cond = e if cond is None else (cond & e)
-        writer_df = (
-            df.join(F.broadcast(slot_tbl), cond)
-            .withColumn(
-                "__slot",
-                F.pmod(F.abs(F.hash(*df.columns)), F.col("__slots")),
-            )
-            .repartition(*cols, F.col("__slot"))
-            .drop("__slot", "__slots", *[f"__k_{c}" for c in cols])
-        )
-    before = _files() if mode == "append" else set()
-    writer = writer_df.write.mode(mode).option(
-        "maxRecordsPerFile", target_rows_per_file
-    )
-    if cols:
-        writer = writer.partitionBy(*cols)
-    writer.parquet(path)
-    return len(_files() - before)

@@ -15,7 +15,7 @@ ties deterministically.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
@@ -26,28 +26,10 @@ from . import register
 
 _TS_FMT = "yyyy-MM-dd HH:mm:ss"
 _TS_FMT_SQL = "%Y-%m-%d %H:%M:%S"
-# exported pair: the Spark date_format pattern (TS_FMT, also used by
-# plans/scoring's anomaly query) and its strftime twin (TS_FMT_PY,
-# imported by streaming/stateful.py) — ONE definition so no batch plan
-# or streaming twin can render a ts string differently
+# exported for plans/scoring's anomaly query: the Spark date_format
+# pattern and the oracle's strftime form of the same rendering
 TS_FMT = _TS_FMT
-TS_FMT_PY = _TS_FMT_SQL
-
-
-def cdc_order_key(ts, event_id):
-    """The last-write-wins ordering key — (ts, then event_id as the
-    exact-timestamp tiebreak) — polymorphic over engines, the
-    z_moments/z_score device applied to CDC: given pyspark Columns it
-    returns the struct that ``latest_snapshot`` feeds to every max_by;
-    given plain scalars it returns the tuple the streaming keyed state
-    (``streaming/stateful._cdc_update``) compares. ONE definition of
-    "later change", so the batch aggregate and the streaming state
-    update cannot drift. (The streaming side passes epoch-microsecond
-    ints for ``ts`` — a strictly monotone recoding of the timestamp, so
-    tuple order and struct order agree on every pair.)"""
-    if isinstance(ts, Column) or isinstance(event_id, Column):
-        return F.struct(ts, event_id)
-    return (ts, event_id)
+TS_FMT_SQL = _TS_FMT_SQL
 
 
 @register(
@@ -91,21 +73,16 @@ def latest_snapshot(
     events: DataFrame, keep_order_key: bool = False
 ) -> DataFrame:
     """The compaction aggregate itself, reusable on any change-feed frame.
-
-    Parity-by-construction with the streaming twin
-    (``streaming/stateful.streaming_cdc_snapshot``): the ordering every
-    max_by consumes here is ``cdc_order_key`` — the SAME function whose
-    scalar form the streaming state update compares — and the pytest
-    replay asserts the resulting rows bit-equal. Code-level sharing, not
-    parity-by-test alone (the z_moments/z_score pattern).
+    Every max_by orders by the last-write-wins key (ts, then event_id as
+    the exact-timestamp tiebreak).
 
     ``keep_order_key=True`` additionally carries the winning change's
-    EXACT ``cdc_order_key`` as a ``__ord`` struct column. The public
+    EXACT order key as a ``__ord`` struct column. The public
     ``last_ts`` string is second-truncated, so a snapshot destined for
     ``merge_snapshots`` must keep the exact key or sub-second conflicts
     across slices resolve on the event_id tiebreak instead of the true
     change order (r11 review)."""
-    ord_key = cdc_order_key(F.col("ts"), F.col("event_id"))
+    ord_key = F.struct(F.col("ts"), F.col("event_id"))
     aggs = [
         F.date_format(F.max_by(F.col("ts"), ord_key), _TS_FMT).alias("last_ts"),
         F.max_by(F.col("event_id"), ord_key).alias("last_event_id"),
@@ -297,7 +274,7 @@ def merge_snapshots(base: DataFrame, delta: DataFrame) -> DataFrame:
 
     Conflict order: when both sides carry the exact ``__ord`` key
     (``latest_snapshot(keep_order_key=True)``), it leads the comparison
-    — the TRUE cdc_order_key, correct for any slice cutoff. Without it
+    — the TRUE change order, correct for any slice cutoff. Without it
     the comparison falls back to (last_ts string, last_event_id); the
     ts string is SECOND-truncated, so two changes inside the same second
     then resolve on event_id, which can contradict the exact change

@@ -425,10 +425,9 @@ def _inc_minhash_oracle(threshold: float = _JACCARD_T) -> str:
 @register("dedup_incremental_minhash", oracle=_inc_minhash_oracle())
 def dedup_incremental_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental minhash near-dup (operators/dedup.
-    incremental_minhash_pairs, the r8 batch/streaming pair): today's
-    batch bands with the shared minhash_band_keys code and equi-joins
-    the bucket-capped index band table; exact hashed-shingle jaccard
-    verifies. Output: (d1 = index doc, d2 = new doc, jaccard)."""
+    incremental_minhash_pairs): today's batch bands with the shared
+    minhash_band_keys code and equi-joins the bucket-capped index band
+    table; exact hashed-shingle jaccard verifies. Output: (d1 = index doc, d2 = new doc, jaccard)."""
     docs = load_table(spark, sf_dir, "documents")
     return D.incremental_minhash_pairs(
         docs.filter(F.expr(_INC_BATCH_PRED)),

@@ -279,29 +279,39 @@ def top_users_per_event(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def attribution_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Click→purchase attribution candidates: each purchase joined to the
-    same user's clicks at most 30 minutes before it — the BATCH
-    registration of ``streaming/joins.click_purchase_attribution``,
-    running the literally-same builder the watermarked stream-stream
-    join runs (batch/streaming parity is code-level, not copied logic).
+    same user's clicks at most 30 minutes before it (click_ts <=
+    purchase_ts < click_ts + 30 minutes) — last-touch candidates for ad
+    attribution.
 
     Scale shape: one co-shuffle of both filtered sides on user_id; the
     event-time range condition evaluates inside the join (per-user
-    candidate pairs, never a global interval join), and on streams the
-    same two-sided bound is what lets Spark evict join state — see the
-    streaming module. event_type predicates reach both scans as
-    PushedFilters. Output timestamps format to strings and values round
-    to 2dp only in this registration wrapper, keeping the shared builder
-    schema-clean for streaming sinks.
+    candidate pairs, never a global interval join). event_type
+    predicates reach both scans as PushedFilters.
     """
-    from ..streaming.joins import click_purchase_attribution
-
     events = load_table(spark, sf_dir, "events")
-    clicks = events.filter(F.col("event_type") == "click")
-    purchases = events.filter(F.col("event_type") == "purchase")
-    out = click_purchase_attribution(clicks, purchases)
-    return out.select(
+    c = events.filter(F.col("event_type") == "click").select(
+        F.col("event_id").alias("click_id"),
+        F.col("user_id").alias("c_user"),
+        F.col("ts").alias("click_ts"),
+        F.col("value").alias("click_value"),
+    )
+    p = events.filter(F.col("event_type") == "purchase").select(
+        F.col("event_id").alias("purchase_id"),
+        F.col("user_id").alias("p_user"),
+        F.col("ts").alias("purchase_ts"),
+        F.col("value").alias("purchase_value"),
+    )
+    cond = (
+        (F.col("c_user") == F.col("p_user"))
+        & (F.col("click_ts") <= F.col("purchase_ts"))
+        & (
+            F.col("purchase_ts")
+            < F.col("click_ts") + F.expr("INTERVAL 30 minutes")
+        )
+    )
+    return c.join(p, cond, "inner").select(
         "purchase_id",
-        "user_id",
+        F.col("p_user").alias("user_id"),
         F.date_format("purchase_ts", "yyyy-MM-dd HH:mm:ss").alias("purchase_ts"),
         round2(F.col("purchase_value"), 2).alias("purchase_value"),
         "click_id",

@@ -5,8 +5,8 @@ retrieval-scoring and data-quality stages of a training-data pipeline).
 the lexical retrieval baseline every RAG / data-curation stack needs
 next to the embedding ANN path (operators/similarity.py).
 ``events_anomaly_zscore`` flags events whose value deviates from the
-user's own trailing window — the streaming-shaped outlier gate run
-before facts feed training aggregates.
+user's own trailing window — the per-entity outlier gate run before
+facts feed training aggregates.
 """
 
 from __future__ import annotations
@@ -20,7 +20,7 @@ from ..functions.text import cached_columns, words
 from ..sources import load_table
 from . import _sqlgen as G
 from . import register
-from .changefeed import TS_FMT, TS_FMT_PY
+from .changefeed import TS_FMT, TS_FMT_SQL
 
 # --------------------------------------------------------------------------
 # BM25
@@ -156,25 +156,6 @@ Z_MIN_N = 8  # minimum trailing sample before flagging
 Z_SIGMA = 3.0
 
 
-def z_moments(n, s, ssq):
-    """(mean, variance) of a trailing window from its exact BIGINT-cents
-    moments (count, Σ, Σ²). POLYMORPHIC over pyspark Columns and Python
-    scalars — arithmetic operators are overloaded identically — so the
-    batch window plan (events_anomaly_zscore) and the stateful-streaming
-    deque (streaming/stateful._zscore_update) evaluate the LITERALLY SAME
-    function, not parallel re-implementations. This shared code is the
-    batch/streaming parity anchor: the oracle-green batch twin vouches
-    for the streaming op's arithmetic (round-4 VERDICT #5)."""
-    mean = s * 1.0 / n
-    return mean, ssq * 1.0 / n - mean * mean
-
-
-def z_score(v_c, mean, var, sqrt):
-    """z = (x - μ)/σ with the caller's sqrt (F.sqrt batch, math.sqrt
-    streaming) — one IEEE expression tree on both sides; see z_moments."""
-    return (v_c - mean) / sqrt(var)
-
-
 @register(
     "events_anomaly_zscore",
     oracle=f"""
@@ -190,7 +171,7 @@ def z_score(v_c, mean, var, sqrt):
                    ROWS BETWEEN {Z_LOOKBACK} PRECEDING AND 1 PRECEDING)
     )
     SELECT event_id, user_id, event_type,
-           strftime(ts, '{TS_FMT_PY}') AS ts,
+           strftime(ts, '{TS_FMT_SQL}') AS ts,
            ROUND(v_c / 100.0, 2) AS value,
            {G.round_sql(
                "(v_c - sum_c * 1.0 / n_window)"
@@ -218,11 +199,7 @@ def events_anomaly_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
     one frame pass); mean/variance/z then stay per-row in codegen. Keys
     are users — high-cardinality and naturally balanced — and the frame
     is rows-bounded, so state per key is O({Z_LOOKBACK}) regardless of
-    history length; the identical logic runs incrementally as the
-    stateful-streaming twin (streaming/stateful.py keeps the same
-    bounded deque per key and composes z_moments/z_score — the SAME
-    functions this plan builds its Column expressions from — so this
-    query's oracle anchors the streaming op too).
+    history length.
 
     Cross-engine exactness: moments accumulate in exact BIGINT cents
     (Welford/stddev built-ins would differ in last-ulp between engines —
@@ -247,8 +224,10 @@ def events_anomaly_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(v_c).over(w).alias("sum_c"),
         F.sum(v_c * v_c).over(w).alias("ssq_c"),
     )
-    mean_c, var_c = z_moments(F.col("n_window"), F.col("sum_c"), F.col("ssq_c"))
-    z = z_score(F.col("v_c"), mean_c, var_c, F.sqrt)
+    # (mean, variance) from the exact BIGINT-cents moments (count, Σ, Σ²)
+    mean_c = F.col("sum_c") * 1.0 / F.col("n_window")
+    var_c = F.col("ssq_c") * 1.0 / F.col("n_window") - mean_c * mean_c
+    z = (F.col("v_c") - mean_c) / F.sqrt(var_c)
     return (
         t.filter(
             (F.col("n_window") >= Z_MIN_N) & (var_c > 0) & (F.abs(z) > Z_SIGMA)

@@ -8,7 +8,7 @@ partial aggregation map-side.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
@@ -781,6 +781,11 @@ def corpus_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     joined = sig.join(groups, "__h")
     is_canon = F.col("doc_id") == F.col("__canonical")
+    quality_keep = (
+        (F.col("quality_score") >= _MIN_QUALITY)
+        & (F.col("uniq_word_frac") >= _MIN_UNIQ_WORD_FRAC)
+        & (F.col("dup_bigram_frac") <= _MAX_DUP_BIGRAM_FRAC)
+    )
     return joined.select(
         "doc_id",
         "n_words",
@@ -789,18 +794,15 @@ def corpus_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
         "dup_bigram_frac",
         "n_redactions",
         is_canon.alias("is_canonical"),
-        (is_canon & curation_quality_keep()).alias("keep"),
+        (is_canon & quality_keep).alias("keep"),
     )
 
 
-def with_curation_signals(docs: DataFrame) -> DataFrame:
-    """APPEND the per-row curation signals — quality score, repetition
-    fractions, PII-redaction count, normalized content hash — to ``docs``,
-    keeping every source column (a streaming consumer needs the text to
-    reach the sink). One hoisted words array feeds every HOF; stateless,
-    so the SAME columns run unchanged on a stream
-    (streaming/file_ingest.streaming_curation); batch/streaming curation
-    parity is column-level, not reimplemented."""
+def curation_signals(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
+    """Per-row curation signals — quality score, repetition fractions,
+    PII-redaction count — with the id and the normalized content hash
+    ``__h``. One hoisted words array feeds every HOF; batch queries let
+    Catalyst prune the signals they do not read."""
     base = docs.withColumns(
         {"__w": words("text"), "__h": normalized_md5(F.col("text"))}
     )
@@ -826,44 +828,19 @@ def with_curation_signals(docs: DataFrame) -> DataFrame:
         + F.regexp_count("text", F.lit(EMAIL_RE))
         + F.regexp_count("text", F.lit(LONGNUM_RE))
     )
-    return base.withColumns(
-        {
-            "n_words": n,
-            "quality_score": round2(
-                0.5 * stop
-                + 0.3 * F.least(n / F.lit(100.0), F.lit(1.0))
-                + 0.2 * (F.lit(1.0) - punct),
-                6,
-            ),
-            "uniq_word_frac": round2(uniq, 6),
-            "dup_bigram_frac": round2(dup_bi, 6),
-            "n_redactions": n_red,
-        }
-    ).drop("__w")
-
-
-def curation_signals(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """Projection form of ``with_curation_signals`` — just id, hash and
-    the signal columns (batch queries let Catalyst prune from here)."""
-    return with_curation_signals(docs).select(
+    return base.select(
         id_col,
         "__h",
-        "n_words",
-        "quality_score",
-        "uniq_word_frac",
-        "dup_bigram_frac",
-        "n_redactions",
-    )
-
-
-def curation_quality_keep() -> Column:
-    """The signal-threshold part of the curation verdict (shared with the
-    streaming pass, which replaces batch canonicality with within-
-    watermark first-occurrence dedup)."""
-    return (
-        (F.col("quality_score") >= _MIN_QUALITY)
-        & (F.col("uniq_word_frac") >= _MIN_UNIQ_WORD_FRAC)
-        & (F.col("dup_bigram_frac") <= _MAX_DUP_BIGRAM_FRAC)
+        n.alias("n_words"),
+        round2(
+            0.5 * stop
+            + 0.3 * F.least(n / F.lit(100.0), F.lit(1.0))
+            + 0.2 * (F.lit(1.0) - punct),
+            6,
+        ).alias("quality_score"),
+        round2(uniq, 6).alias("uniq_word_frac"),
+        round2(dup_bi, 6).alias("dup_bigram_frac"),
+        n_red.alias("n_redactions"),
     )
 
 

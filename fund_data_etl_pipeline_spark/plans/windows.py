@@ -1,11 +1,9 @@
 """Event-time windowing over the ``events`` table (engine extension,
 SURVEY.md §2.12).
 
-These are the BATCH formulations of the streaming aggregations in
-streaming/file_ingest.py — identical semantics (Structured Streaming runs
-the same plan incrementally), which is what makes them oracle-checkable:
-tumbling and sliding windows map to time_bucket arithmetic in DuckDB,
-session windows to the gaps-and-islands pattern.
+Each is oracle-checkable: tumbling and sliding windows map to
+time_bucket arithmetic in DuckDB, session windows to the gaps-and-islands
+pattern.
 """
 
 from __future__ import annotations

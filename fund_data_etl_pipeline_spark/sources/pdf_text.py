@@ -898,8 +898,7 @@ def _literal_string(data: bytes, i: int) -> tuple[bytes, int]:
             if nxt in _ESCAPES:
                 out += _ESCAPES[nxt].encode("latin-1")
                 i += 2
-            elif nxt.isdigit():
-                oct_m = _OCTAL_RE.match(data, i + 1)
+            elif oct_m := _OCTAL_RE.match(data, i + 1):
                 out.append(int(oct_m.group(0), 8) & 0xFF)
                 i = oct_m.end()
             elif nxt in (b"\n", b"\r"):
@@ -909,6 +908,8 @@ def _literal_string(data: bytes, i: int) -> tuple[bytes, int]:
                 # spurious newline
                 i += 3 if nxt == b"\r" and data[i + 2 : i + 3] == b"\n" else 2
             else:
+                # \8, \9 or any other unknown escape: §7.3.4.2 ignores
+                # the backslash and keeps the character after it
                 i += 1
         elif ch == b"(":
             depth += 1

@@ -123,83 +123,6 @@ def test_shipping_priority_matches_duckdb_shape(spark, sf_dir):
     assert "TakeOrderedAndProject" in plan
 
 
-def test_streaming_cdc_snapshot_parity_with_batch(spark, tmp_path):
-    """The streaming keyed-state snapshot, replayed over micro-batches,
-    must equal the batch max_by compaction over the union of changes —
-    including across an AvailableNow restart (state from the checkpoint)."""
-    import json as _json
-
-    from fund_data_etl_pipeline_spark.plans.changefeed import latest_snapshot
-    from fund_data_etl_pipeline_spark.streaming.stateful import (
-        streaming_cdc_snapshot,
-    )
-
-    schema = "event_id long, ts timestamp, user_id long, event_type string, value double"
-    b1 = [
-        (1, "2026-01-15 10:00:00", 1, "click", 10.07),
-        (2, "2026-01-15 10:01:00", 1, "click", 5.01),
-        (3, "2026-01-15 10:01:00", 2, "view", 7.33),
-        # exact-ts tie inside one key: event_id must break it
-        (5, "2026-01-15 10:02:00", 2, "view", 1.25),
-        (4, "2026-01-15 10:02:00", 2, "view", 9.99),
-    ]
-    b2 = [
-        (6, "2026-01-15 11:00:00", 1, "click", -2.55),
-        (7, "2026-01-15 11:00:00", 3, "purchase", 42.0),
-    ]
-    src = tmp_path / "feed"
-    src.mkdir()
-    ckpt = str(tmp_path / "ckpt")
-    out = str(tmp_path / "snap")
-
-    def write_batch(name, rows):
-        with open(src / name, "w") as f:
-            for eid, ts, uid, et, v in rows:
-                f.write(
-                    _json.dumps(
-                        {"event_id": eid, "ts": ts, "user_id": uid,
-                         "event_type": et, "value": v}
-                    ) + "\n"
-                )
-
-    def run():
-        stream = spark.readStream.schema(schema).json(str(src))
-        q = (
-            streaming_cdc_snapshot(stream)
-            .writeStream.format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-        latest = {}
-        for r in spark.read.parquet(out).collect():
-            key = (r["user_id"], r["event_type"])
-            if key not in latest or r["n_changes"] > latest[key]["n_changes"]:
-                latest[key] = r
-        return latest
-
-    write_batch("b1.json", b1)
-    run()
-    write_batch("b2.json", b2)
-    streamed = run()
-
-    raw = spark.createDataFrame(
-        [tuple(r) for r in b1 + b2],
-        "event_id long, ts string, user_id long, event_type string, value double",
-    )
-    batch_df = latest_snapshot(raw.withColumn("ts", F.to_timestamp("ts")))
-    expect = {(r["user_id"], r["event_type"]): r for r in batch_df.collect()}
-    assert set(streamed) == set(expect)
-    for key, e in expect.items():
-        s = streamed[key]
-        assert (
-            s["last_ts"], s["last_event_id"], s["last_value"], s["n_changes"]
-        ) == (e["last_ts"], e["last_event_id"], e["last_value"], e["n_changes"]), key
-
-
 def test_merge_snapshots_conflict_and_one_sided_keys(spark):
     """merge_snapshots: delta wins only when its (last_ts, last_event_id)
     is later; one-sided keys pass through; n_changes accumulates."""
@@ -278,7 +201,7 @@ def test_merge_snapshots_subsecond_conflicts_use_exact_order_key(spark):
     event_id: the formatted last_ts string is second-truncated, so the
     fallback (string, event_id) comparison would pick the earlier change
     — snapshots built with keep_order_key=True must resolve on the exact
-    cdc_order_key instead (r11 review)."""
+    (ts, event_id) order key instead (r11 review)."""
     from pyspark.sql import functions as F
 
     from fund_data_etl_pipeline_spark.plans.changefeed import (

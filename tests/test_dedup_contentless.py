@@ -10,9 +10,6 @@ keys never equi-joining).
 
 from __future__ import annotations
 
-import json
-import os
-
 import pytest
 from pyspark.sql import functions as F
 
@@ -114,45 +111,6 @@ def test_pair_finders_require_corpus_or_prepped(spark):
         minhash_recovery_pairs(None, first)
     # prepped-only recovery composes on the same corpus
     assert minhash_recovery_pairs(None, first, prepped=prepped).count() == 0
-
-
-def test_streaming_dedup_keeps_distinct_contentless_docs(spark, tmp_path):
-    """dropDuplicatesWithinWatermark groups NULL keys as EQUAL — the
-    per-doc fallback key must keep every distinct parse-failure doc
-    flowing while real duplicate contents still collapse."""
-    from fund_data_etl_pipeline_spark.streaming.file_ingest import (
-        read_document_stream,
-        streaming_dedup,
-        write_available_now,
-    )
-
-    src, out, ckpt = tmp_path / "docs", tmp_path / "out", tmp_path / "ckpt"
-    src.mkdir()
-    rows = [
-        {"doc_id": 1, "filename": "a.txt", "rel_path": "x/a.txt",
-         "text": "alpha beta"},
-        {"doc_id": 2, "filename": "b.txt", "rel_path": "x/b.txt",
-         "text": "ALPHA  beta"},  # same normalized content
-        {"doc_id": 3, "filename": "c.txt", "rel_path": "x/c.txt",
-         "text": None},
-        {"doc_id": 4, "filename": "d.txt", "rel_path": "x/d.txt",
-         "text": None},  # distinct parse failure, must ALSO survive
-    ]
-    with open(os.path.join(str(src), "day1.json"), "w") as fh:
-        for r in rows:
-            fh.write(json.dumps(r) + "\n")
-
-    q = write_available_now(
-        streaming_dedup(read_document_stream(spark, str(src))),
-        str(out),
-        str(ckpt),
-    )
-    q.awaitTermination(120)
-    got = spark.read.parquet(str(out))
-    assert got.count() == 3  # one content row + BOTH contentless docs
-    assert sorted(
-        r["doc_id"] for r in got.where(F.col("text").isNull()).collect()
-    ) == [3, 4]
 
 
 def test_poly_fingerprint_zero_word_docs(spark):

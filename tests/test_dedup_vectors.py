@@ -500,40 +500,6 @@ def test_benchmark_contamination_flags_bench_copy(spark):
     assert out[2]["overlap_ratio"] == 1.0 and out[2]["contaminated"]
 
 
-def test_span_dedup_rewrite_removes_duplicate_spans(spark):
-    """The rewrite keeps each document's surviving spans in order; fully
-    duplicated documents drop out."""
-    df = spark.createDataFrame(
-        [
-            (1, "a b c d"),
-            (2, "a b x y"),   # loses "a b", keeps "x y"
-            (3, "c d"),       # fully duplicated -> gone
-            (4, "z z z z"),   # within-doc dup -> one "z z" left
-        ],
-        "doc_id long, text string",
-    )
-    out = {
-        r["doc_id"]: r["text"]
-        for r in D.span_dedup_rewrite(df, span_words=2).collect()
-    }
-    assert out == {1: "a b c d", 2: "x y", 4: "z z"}
-
-
-def test_span_dedup_rewrite_agrees_with_stats(spark, sf_dir):
-    """On the real corpus the rewrite's surviving-span counts match
-    span_dedup's n_kept for every document."""
-    docs = load_table(spark, sf_dir, "documents")
-    stats = {r["doc_id"]: r["n_kept"] for r in D.span_dedup(docs).collect()}
-    rewritten = D.span_dedup_rewrite(docs).collect()
-    assert {r["doc_id"] for r in rewritten} == {
-        d for d, k in stats.items() if k > 0
-    }
-    for r in rewritten:
-        n_words = len(r["text"].split())
-        # kept spans are 20 words except possibly one tail span
-        assert (n_words + 19) // 20 >= stats[r["doc_id"]] >= n_words // 20
-
-
 def test_incremental_dedup_collapses_redelivered_rows(spark):
     """A batch containing the SAME (doc_id, text) row twice — a double-
     read of one file — yields exactly one output row for it."""

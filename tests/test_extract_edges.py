@@ -108,41 +108,3 @@ def test_quoting_round_trips_every_emitted_pattern(spark, monkeypatch):
         *[F.expr(q(v)).alias(f"c{i}") for i, v in enumerate(values)]
     ).first()
     assert [row[f"c{i}"] for i in range(len(values))] == values
-
-
-def test_write_sized_small_partitions_stay_one_file(spark, tmp_path):
-    """Per-partition-value slot sizing: a huge partition splits, tiny
-    sibling partitions do NOT shatter into the huge partition's slot
-    count (the global-max bug wrote ~slots near-empty files per small
-    value)."""
-    import glob
-
-    from fund_data_etl_pipeline_spark.operators.sinks import write_sized
-
-    df = spark.range(0, 5300).select(
-        F.when(F.col("id") < 5000, F.lit("big"))
-        .otherwise(F.concat(F.lit("small"), (F.col("id") % 3).cast("string")))
-        .alias("day"),
-        F.col("id").alias("v"),
-    )
-    out = str(tmp_path / "sized")
-    n_files = write_sized(df, out, partition_cols=("day",),
-                          target_rows_per_file=1000)
-    per_part = {
-        p.rsplit("day=", 1)[1]: len(glob.glob(f"{p}/*.parquet"))
-        for p in glob.glob(f"{out}/day=*")
-    }
-    assert per_part["big"] >= 5  # ~5000/1000
-    for k, n in per_part.items():
-        if k != "big":
-            assert n == 1, (k, n)  # 100 rows -> exactly one file
-    assert n_files == sum(per_part.values())
-
-    # append returns only THIS call's files, not the directory total
-    n2 = write_sized(
-        spark.range(5).select(F.lit("small0").alias("day"),
-                              F.col("id").alias("v")),
-        out, partition_cols=("day",), target_rows_per_file=1000,
-        mode="append",
-    )
-    assert n2 == 1

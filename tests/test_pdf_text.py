@@ -343,6 +343,17 @@ def test_backslash_crlf_continuation_elides_whole_eol():
     assert extract_pdf_text(pdf) == "continued"
 
 
+def test_backslash_before_non_octal_digit_is_dropped():
+    """§7.3.4.2: \\8 and \\9 are not octal escapes — the backslash is
+    ignored and the digit kept, instead of the file quarantining."""
+    from fund_data_etl_pipeline_spark.sources.pdf_text import extract_pdf_text
+
+    pdf = simple_pdf(b"BT /F1 8 Tf (a\\8b) Tj ET")
+    assert extract_pdf_text(pdf) == "a8b"
+    pdf = simple_pdf(b"BT /F1 8 Tf (\\9\\1018) Tj ET")
+    assert extract_pdf_text(pdf) == "9A8"
+
+
 # --- round-6 upgrades: LZW / ASCIIHex / ASCII85 filters + /ObjStm ---------
 
 class _MSBWriter:

@@ -133,17 +133,18 @@ def test_pack_sequences_conserves_tokens(spark, counts):
         assert last["seq_bin"] * 128 + last["pack_offset"] + last["n_tokens"] == total
 
 
-def test_round2_py_matches_column_form(spark):
-    """round2_py (the scalar twin used by the stateful-streaming
-    updaters) and round2_sql (the SQL-text form the fund platform tables
-    compile) must agree bit-for-bit with the round2 Column expression —
-    the pin that keeps the repo's single rounding convention actually
-    single. The grid covers negative values, exact halves at both
-    scales, values whose shortest decimal string rounds differently than
-    their binary value (the F.round divergence class), and zero."""
+def test_round2_matches_duckdb_round(spark):
+    """round2 (Column) and round2_sql (the SQL-text form the fund
+    platform tables compile) must agree bit-for-bit with DuckDB's
+    ``ROUND(x, scale)`` — the oracle engine's convention, which the repo
+    pins as its single rounding rule. The grid covers negative values,
+    exact halves at both scales, values whose shortest decimal string
+    rounds differently than their binary value (the F.round divergence
+    class), and zero."""
+    import duckdb
+
     from fund_data_etl_pipeline_spark.functions.numeric import (
         round2,
-        round2_py,
         round2_sql,
     )
 
@@ -152,8 +153,8 @@ def test_round2_py_matches_column_form(spark):
         0.005, -0.005, 1.005, 2.675, -2.675, 99999999.995, 3.14159,
         -3.14159, 0.00005, -0.00005, 123456.789,
     ]
+    df = spark.createDataFrame([(v,) for v in values], "v double")
     for scale in (2, 4, 6):
-        df = spark.createDataFrame([(v,) for v in values], "v double")
         col_out = [
             r["o"]
             for r in df.select(round2(F.col("v"), scale).alias("o")).collect()
@@ -162,9 +163,15 @@ def test_round2_py_matches_column_form(spark):
             r["o"]
             for r in df.select(F.expr(round2_sql("v", scale)).alias("o")).collect()
         ]
-        py_out = [round2_py(v, scale) for v in values]
-        assert col_out == py_out, (scale, list(zip(values, col_out, py_out)))
-        assert sql_out == py_out, (scale, list(zip(values, sql_out, py_out)))
+        duck = dict(
+            duckdb.sql(
+                f"SELECT v, ROUND(v, {scale}) FROM (SELECT UNNEST("
+                f"{values!r}::DOUBLE[]) AS v)"
+            ).fetchall()
+        )
+        want = [duck[v] for v in values]
+        assert col_out == want, (scale, list(zip(values, col_out, want)))
+        assert sql_out == want, (scale, list(zip(values, sql_out, want)))
 
 
 @given(
@@ -227,16 +234,16 @@ def test_merge_dim_idempotent_and_lww(spark, ops):
     } == got
 
 
-def test_cents_sign_aware_and_twins_agree(spark):
-    """cents (Column) == cents_py (scalar) == cents_sql (DuckDB) on a
-    grid including negative quarter-cent values, where the pre-r11
-    half-UP floor form diverged from the pinned half-away-from-zero
-    convention (-0.125 -> -13 cents, not -12)."""
+def test_cents_sign_aware_matches_sql_form(spark):
+    """cents (Column) == cents_sql (DuckDB) on a grid including negative
+    quarter-cent values, where the pre-r11 half-UP floor form diverged
+    from the pinned half-away-from-zero convention (-0.125 -> -13 cents,
+    not -12)."""
     import duckdb
 
     from pyspark.sql import functions as F
 
-    from fund_data_etl_pipeline_spark.functions.numeric import cents, cents_py
+    from fund_data_etl_pipeline_spark.functions.numeric import cents
     from fund_data_etl_pipeline_spark.plans._sqlgen import cents_sql
 
     grid = [0.0, 0.005, -0.005, 0.125, -0.125, 2.375, -2.375, 57.04,
@@ -253,5 +260,5 @@ def test_cents_sign_aware_and_twins_agree(spark):
         ).fetchall()
     )
     for x in grid:
-        assert col_form[x] == cents_py(x) == sql_form[x], x
-    assert cents_py(-0.125) == -13 and cents_py(0.125) == 13
+        assert col_form[x] == sql_form[x], x
+    assert col_form[-0.125] == -13 and col_form[0.125] == 13

@@ -1,13 +1,9 @@
 """Round-12 regression tests: the NULL-propagating band_key (VERDICT r11
-what's-wrong #1), NaN/NULL parity in the stateful streaming folds
-(ADVICE r11 medium), schema-first/cached check_dims (VERDICT #5), the
+what's-wrong #1), schema-first/cached check_dims (VERDICT #5), the
 file-URI normalizer (ADVICE), and the bench canary's comparison rule."""
 
 from __future__ import annotations
 
-import math
-
-import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
@@ -60,69 +56,6 @@ def test_minhash_band_keys_has_no_row_filter(spark):
     assert keys2 and all(k is None for k in keys2)
     keys1 = [r["key"] for r in out if r["doc_id"] == 1]
     assert keys1 and all(k is not None for k in keys1)
-
-
-# ---------------------------------------------------------------------------
-# stateful streaming folds: NaN/None parity with the batch twins
-# ---------------------------------------------------------------------------
-
-
-class _FakeState:
-    def __init__(self, value=None):
-        self._v = value
-
-    @property
-    def exists(self):
-        return self._v is not None
-
-    @property
-    def get(self):
-        return self._v
-
-    def update(self, v):
-        self._v = v
-
-
-def test_running_totals_fold_skips_nan_but_counts_rows():
-    from fund_data_etl_pipeline_spark.streaming.stateful import _update
-
-    pdf = pd.DataFrame({"value": [1.25, float("nan"), 2.75, None]})
-    state = _FakeState()
-    (out,) = list(_update((7,), iter([pdf]), state))
-    # batch twin: n_events = COUNT(*) (NULL rows count), sum_value =
-    # F.sum(cents(value)) (NULLs skipped)
-    assert out["n_events"].iloc[0] == 4
-    assert out["sum_value"].iloc[0] == pytest.approx(4.0)
-
-
-def test_zscore_fold_null_value_occupies_slot_never_flags():
-    from fund_data_etl_pipeline_spark.plans.scoring import Z_MIN_N
-    from fund_data_etl_pipeline_spark.streaming.stateful import (
-        _zscore_update,
-    )
-
-    ts = pd.date_range("2026-01-01", periods=Z_MIN_N + 2, freq="h")
-    vals = [10.0] * Z_MIN_N + [float("nan"), 10.0]
-    pdf = pd.DataFrame(
-        {
-            "event_id": range(len(vals)),
-            "user_id": [7] * len(vals),
-            "event_type": ["t"] * len(vals),
-            "ts": ts,
-            "value": vals,
-        }
-    )
-    state = _FakeState()
-    outs = list(_zscore_update((7,), iter([pdf]), state))
-    # constant values -> var 0 -> nothing flagged; the NaN row must not
-    # crash (the r11 behavior) and must not be flagged
-    assert outs == []
-    (held,) = state.get
-    # the NaN row occupies a window slot (COUNT(*) parity): deque holds
-    # every row, with None in the NaN position
-    assert len(held) == len(vals)
-    assert held[Z_MIN_N] is None
-    assert all(x == 1000 for i, x in enumerate(held) if i != Z_MIN_N)
 
 
 # ---------------------------------------------------------------------------
@@ -255,14 +188,11 @@ def test_vector_ann_ivf_indexed_matches_inline(spark, sf_dir):
     assert inline == indexed and inline
 
 
-def test_streaming_neardup_against_attached_index_store(spark, tmp_path):
-    """The full 100 TB daily shape end-to-end: the minhash index saved
-    as ON-DISK BUCKETED tables (operators/index_store), re-ATTACHED from
-    its manifest, and probed by the STREAMING near-dup query — must emit
-    exactly the batch pair set (extends the r9 plain-parquet prebuilt
-    test to the r11 bucketed store)."""
-    import json
-
+def test_incremental_neardup_against_attached_index_store(spark, tmp_path):
+    """The daily shape end-to-end: the minhash index saved as ON-DISK
+    BUCKETED tables (operators/index_store), re-ATTACHED from its
+    manifest, and probed by incremental_minhash_pairs — must emit
+    exactly the pair set of the inline index."""
     from fund_data_etl_pipeline_spark.operators.dedup import (
         build_minhash_index,
         incremental_minhash_pairs,
@@ -270,9 +200,6 @@ def test_streaming_neardup_against_attached_index_store(spark, tmp_path):
     from fund_data_etl_pipeline_spark.operators.index_store import (
         load_minhash_index,
         save_minhash_index,
-    )
-    from fund_data_etl_pipeline_spark.streaming.file_ingest import (
-        streaming_minhash_neardup,
     )
 
     doc_schema = "doc_id long, text string"
@@ -285,39 +212,21 @@ def test_streaming_neardup_against_attached_index_store(spark, tmp_path):
     new_rows = [(100, f"{boiler} vX"), (101, " ".join(f"novelw{w}" for w in range(30)))]
     new_docs = spark.createDataFrame(new_rows, doc_schema)
 
-    batch = {
+    inline = {
         (r["d1"], r["d2"], r["jaccard"])
         for r in incremental_minhash_pairs(new_docs, index_docs).collect()
     }
-    assert batch and all(d2 == 100 for _, d2, _ in batch)
+    assert inline and all(d2 == 100 for _, d2, _ in inline)
 
     base = str(tmp_path / "mh_store")
     save_minhash_index(
         build_minhash_index(index_docs), base, n_buckets=4, prefix="t12mh"
     )
     attached = load_minhash_index(spark, base, prefix="t12mh")
-
-    src = tmp_path / "stream_src"
-    src.mkdir()
-    with open(src / "b1.json", "w") as fh:
-        for i, t in new_rows:
-            fh.write(json.dumps({"doc_id": i, "text": t}) + "\n")
-    out = str(tmp_path / "stream_out")
-    q = (
-        streaming_minhash_neardup(
-            spark.readStream.schema(doc_schema).json(str(src)),
-            index_tables=attached,
-        )
-        .writeStream.format("parquet")
-        .option("path", out)
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    streamed = {
+    probed = {
         (r["d1"], r["d2"], r["jaccard"])
-        for r in spark.read.parquet(out).collect()
+        for r in incremental_minhash_pairs(
+            new_docs, index_tables=attached
+        ).collect()
     }
-    assert streamed == batch
+    assert probed == inline

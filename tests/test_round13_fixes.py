@@ -4,9 +4,7 @@
   configurable non-world-shared root, with LRU eviction (ADVICE medium
   + VERDICT #4);
 - table_fingerprint detects timestamp-preserving regeneration via a
-  head/tail content sample (ADVICE low);
-- sinks' expected-missing-path detection matches the structured error
-  condition, not the rendered message (ADVICE low).
+  head/tail content sample (ADVICE low).
 """
 
 from __future__ import annotations
@@ -202,43 +200,3 @@ def test_registered_lsh_plans_build_on_metadata_bearing_input(spark):
 
     assert dedup_semantic_lsh(spark, "/root/testdata/sf0.001").count() >= 0
     assert vector_ann_lsh(spark, "/root/testdata/sf0.001").count() >= 0
-
-
-# ---------------------------------------------------------------------------
-# sinks: structured error-condition matching
-
-
-def test_write_sized_append_to_fresh_path_returns_zero_before(spark, tmp_path):
-    """End-to-end: the first append to a not-yet-existing path goes
-    through the PATH_NOT_FOUND branch (now matched via getCondition on
-    the real Spark 4 exception) and succeeds."""
-    from fund_data_etl_pipeline_spark.operators.sinks import write_sized
-
-    df = spark.range(10).withColumnRenamed("id", "v")
-    out = str(tmp_path / "fresh_sink")
-    n = write_sized(df, out, mode="append")
-    assert n >= 1
-
-
-def test_real_path_not_found_condition_is_structured(spark, tmp_path):
-    """The exception Spark actually raises for a missing read path
-    carries the PATH_NOT_FOUND condition through the structured
-    accessor — i.e. the branch no longer depends on message text."""
-    from pyspark.errors import AnalysisException
-
-    try:
-        spark.read.parquet(str(tmp_path / "nope")).collect()
-    except AnalysisException as e:
-        conds = set()
-        for attr in ("getCondition", "getErrorClass"):
-            fn = getattr(e, attr, None)
-            if callable(fn):
-                try:
-                    c = fn()
-                except Exception:
-                    c = None
-                if c:
-                    conds.add(c)
-        assert "PATH_NOT_FOUND" in conds
-    else:
-        pytest.fail("expected AnalysisException")

@@ -229,61 +229,6 @@ def test_bm25_empty_docs_excluded(spark):
         assert bm25_topk(spark, d).count() == 0
 
 
-def test_write_sized_unpartitioned_hits_target(spark, tmp_path):
-    """10k rows at target 1000 -> ~10 near-equal files, none above."""
-    from fund_data_etl_pipeline_spark.operators.sinks import write_sized
-
-    df = spark.range(10_000).withColumn("v", F.col("id") * 2)
-    out = str(tmp_path / "sized")
-    n_files = write_sized(df, out, target_rows_per_file=1000)
-    assert 10 <= n_files <= 12
-    per_file = (
-        spark.read.parquet(out)
-        .groupBy(F.input_file_name())
-        .count()
-        .collect()
-    )
-    assert all(r["count"] <= 1000 for r in per_file)
-    assert sum(r["count"] for r in per_file) == 10_000
-
-
-def test_write_sized_partitioned_bounds_files_under_skew(spark, tmp_path):
-    """A 10:1 skewed partition column still yields files at or under the
-    target, and the small partition is NOT sliced into the big
-    partition's file count."""
-    from fund_data_etl_pipeline_spark.operators.sinks import write_sized
-
-    df = spark.range(11_000).select(
-        F.col("id"),
-        F.when(F.col("id") < 10_000, F.lit("big"))
-        .otherwise(F.lit("small"))
-        .alias("part"),
-    )
-    out = str(tmp_path / "sizedp")
-    n_files = write_sized(
-        df, out, partition_cols=("part",), target_rows_per_file=1000
-    )
-    per_file = (
-        spark.read.parquet(out)
-        .groupBy("part", F.input_file_name().alias("f"))
-        .count()
-        .collect()
-    )
-    assert all(r["count"] <= 1000 for r in per_file)
-    big_files = sum(1 for r in per_file if r["part"] == "big")
-    small_files = sum(1 for r in per_file if r["part"] == "small")
-    assert big_files >= 10
-    assert small_files <= 10  # 1000 rows: a handful of slots, not 10+
-    assert n_files == len(per_file)
-
-
-def test_write_sized_empty_is_guarded(spark, tmp_path):
-    from fund_data_etl_pipeline_spark.operators.sinks import write_sized
-
-    df = spark.range(10).filter(F.col("id") < 0)
-    assert write_sized(df, str(tmp_path / "none")) == 0
-
-
 def test_rolling_7d_spend_plan_and_values(spark, sf_dir):
     """Time-RANGE frame: pushed filter, ONE window exchange; a user's
     biggest rolling total equals an independently computed trailing sum."""

@@ -1,70 +1,11 @@
-"""Stateful streaming operator + IVF ANN tests."""
+"""IVF ANN tests."""
 
 from __future__ import annotations
-
-import json
 
 from pyspark.sql import functions as F
 
 from fund_data_etl_pipeline_spark.operators.similarity import cosine_topk, ivf_topk
 from fund_data_etl_pipeline_spark.sources import load_table
-from fund_data_etl_pipeline_spark.streaming.stateful import user_running_totals
-
-EVENT_SCHEMA = "ts timestamp, user_id long, value double"
-
-
-def _write_events(path, rows):
-    with open(path, "w") as f:
-        for ts, uid, v in rows:
-            f.write(json.dumps({"ts": ts, "user_id": uid, "value": v}) + "\n")
-
-
-def test_stateful_running_totals_across_restarts(spark, tmp_path):
-    """applyInPandasWithState keeps per-user state in the checkpoint: a
-    second AvailableNow run over NEW files continues the totals."""
-    src = tmp_path / "events"
-    src.mkdir()
-    ckpt = str(tmp_path / "ckpt")
-    _write_events(src / "b1.json", [
-        ("2026-01-15 10:00:00", 1, 10.0),
-        ("2026-01-15 10:01:00", 1, 5.0),
-        ("2026-01-15 10:02:00", 2, 7.0),
-    ])
-
-    out = str(tmp_path / "totals")
-
-    def run_batch(_):
-        stream = spark.readStream.schema(EVENT_SCHEMA).json(str(src))
-        q = (
-            user_running_totals(stream)
-            .writeStream.format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-        # latest snapshot per user = row with the max running count
-        rows = spark.read.parquet(out).collect()
-        latest = {}
-        for r in rows:
-            cur = latest.get(r["user_id"])
-            if cur is None or r["n_events"] > cur[0]:
-                latest[r["user_id"]] = (r["n_events"], r["sum_value"])
-        return latest
-
-    first = run_batch("totals1")
-    assert first[1] == (2, 15.0)
-    assert first[2] == (1, 7.0)
-
-    _write_events(src / "b2.json", [
-        ("2026-01-15 11:00:00", 1, 1.0),
-        ("2026-01-15 11:01:00", 3, 2.5),
-    ])
-    second = run_batch("totals2")
-    assert second[1] == (3, 16.0)  # state carried over: 2+1 events, 15+1
-    assert second[3] == (1, 2.5)
 
 
 def test_ivf_recall_and_candidate_reduction(spark, sf_dir):
