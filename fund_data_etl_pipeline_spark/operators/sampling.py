@@ -1,8 +1,8 @@
 """Deterministic sampling / dataset-split operators (engine extension:
 the split stage of a large-scale training-data pipeline).
 
-Both operators key on ``H(salt || id)`` — the cross-engine md5 hash from
-functions/text.py — so assignment is
+The split and sampling operators key on ``H(salt || id)`` — the
+cross-engine md5 hash from functions/text.py — so assignment is
 
 - deterministic: re-running the pipeline (or re-reading a partition after
   failure) assigns every row identically; no RNG state, no seed plumbing
@@ -60,19 +60,6 @@ def hash_split(
     return out.withColumn("split", expr.otherwise(F.lit(weights[-1][0])))
 
 
-def hash_sample(
-    df: DataFrame,
-    rate: float,
-    id_col: str = "doc_id",
-    salt: str = "sample-v1",
-) -> DataFrame:
-    """Deterministic Bernoulli-style sample: keep rows whose bucket falls
-    below ``rate``. Same row set every run, any partitioning."""
-    return df.filter(
-        split_bucket(F.col(id_col), salt) < int(round(rate * SPLIT_BUCKETS))
-    )
-
-
 def stratified_sample(
     df: DataFrame,
     rates: dict[str, float],
@@ -84,7 +71,7 @@ def stratified_sample(
     """Per-stratum deterministic sampling — the corpus-rebalancing op of a
     multilingual pretraining pipeline (downsample the dominant language,
     keep the rare ones whole). Each stratum gets its own keep rate; the
-    keep decision is the same salted hash bucket as ``hash_sample``, so it
+    keep decision is the same salted hash bucket as ``hash_split``, so it
     is map-only, reproducible, and stable under corpus growth. Strata not
     named in ``rates`` keep ``default_rate``."""
     threshold = F.lit(int(round(default_rate * SPLIT_BUCKETS)))

@@ -32,11 +32,6 @@ ANN_OCC_TARGET = 64  # target expected bucket occupancy per table
 ANN_P_MIN = 4
 ANN_P_MAX = 24
 IVF_LISTS_MIN = 16
-# widest centroid set expressed as Catalyst literals (above this, the
-# per-centroid expression tree — n_lists structs × dims literals —
-# dominates analysis time outright; assignment switches to the Arrow
-# GEMM path)
-_IVF_LITERAL_MAX = 64
 
 
 def ann_planes(
@@ -120,161 +115,6 @@ def cosine_topk(
     return (
         scored.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
-    )
-
-
-def ivf_topk(
-    vectors: DataFrame,
-    queries: DataFrame,
-    k: int = 5,
-    n_lists: int | None = None,
-    n_probe: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    seed: int = 42,
-    train_fraction: float = 1.0,
-) -> DataFrame:
-    """IVF (inverted-file) ANN: KMeans coarse quantizer -> every vector
-    assigned to its nearest centroid's list; a query probes its
-    ``n_probe`` nearest lists and ranks only those candidates by exact
-    cosine. The crossJoin becomes an equi-join on ``list_id`` — with
-    n_lists lists and n_probe probes the candidate set shrinks by
-    ~n_probe/n_lists. The quantizer trains on a deterministic hash sample
-    (``train_fraction``) — at 100 TB the coarse quantizer never needs the
-    full corpus, only enough vectors per list (~256·n_lists); the sample
-    is the same rows every run, so list assignment stays reproducible.
-    Centroids ship as literals, so assignment is a pure map-side
-    expression. ``n_lists=None`` (default, r10) sizes the list count at
-    ~sqrt(N) via ivf_lists — the standard IVF balance point — so probe
-    cost stays ~n_probe*sqrt(N) as the corpus grows instead of
-    n_probe*N/16 (the note-10 fixed-parameter trap); the registered
-    query pins 16 for oracle determinism."""
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
-    from pyspark.sql.window import Window as W
-
-    from .sampling import hash_sample
-
-    if n_lists is None:
-        n_lists = ivf_lists(vectors.count())
-    train_src = (
-        hash_sample(vectors, train_fraction, id_col=id_col, salt="ivf-train-v1")
-        if train_fraction < 1.0
-        else vectors
-    )
-    train = train_src.select(
-        array_to_vector(as_double(F.col(vec_col))).alias("features")
-    )
-    # guard the quantizer: hash sampling gives no per-run size guarantee
-    # on small corpora, and KMeans needs comfortably more vectors than
-    # lists — fall back to full training below 4 per list (the count is a
-    # tiny aggregate, paid once at train time)
-    if train_fraction < 1.0 and train.count() < 4 * n_lists:
-        train = vectors.select(
-            array_to_vector(as_double(F.col(vec_col))).alias("features")
-        )
-    model = KMeans(k=n_lists, seed=seed, maxIter=10).fit(train)
-    centroids = [list(map(float, c)) for c in model.clusterCenters()]
-
-    def dist2(v: Column, center: list[float]) -> Column:
-        c = F.array(*[F.lit(x) for x in center])
-        return F.aggregate(
-            F.zip_with(v, c, lambda x, y: (x - y) * (x - y)),
-            F.lit(0.0),
-            lambda acc, d: acc + d,
-        )
-
-    def ranked_lists(v: Column, n: int) -> Column:
-        scored = F.array(
-            *[
-                F.struct(dist2(v, c).alias("d"), F.lit(i).alias("i"))
-                for i, c in enumerate(centroids)
-            ]
-        )
-        return F.slice(F.array_sort(scored), 1, n)
-
-    def numpy_ranked(df: DataFrame, idn: str, n: int) -> DataFrame:
-        """(id, list_id) for each vector's n nearest centroids via an
-        Arrow-batched vectorized kernel — above the literal-width
-        threshold the per-centroid literal expression tree is the
-        bottleneck (32 k AST nodes at 512 lists × 64 dims stall
-        analysis outright, the r10 adaptive-width lesson), and the
-        distance pass itself is the N·n_lists term a vectorized kernel
-        does ~40–70× faster. The distance is accumulated dim-by-dim in
-        the SAME left-fold order as the literal branch's ``aggregate``
-        (acc = 0.0, then acc + (x_j - c_j)^2 in dim order, each step an
-        elementwise add) — NOT the expanded |v|^2 - 2·v·c + |c|^2 GEMM
-        form, whose different float summation could flip near-tie list
-        assignments across the _IVF_LITERAL_MAX switch (ADVICE r10).
-        Ties break to the LOWER centroid index, matching array_sort on
-        the (d, i) struct. The id column's output type is derived from
-        the input, so non-integral ids pass through unchanged."""
-        import numpy as np
-
-        cmat = np.array(centroids, dtype="float64")
-        dims = cmat.shape[1]
-        id_sql = df.schema["vid"].dataType.simpleString()
-
-        def _rank(batches):
-            import pandas as pd
-
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                vm = np.array(list(pdf["v"]), dtype="float64")
-                d = np.zeros((vm.shape[0], cmat.shape[0]))
-                for j in range(dims):
-                    t = vm[:, j, None] - cmat[None, :, j]
-                    t *= t
-                    d += t
-                idx = np.argsort(d, axis=1, kind="stable")[:, :n]
-                ids = np.repeat(pdf["vid"].to_numpy(), n)
-                yield pd.DataFrame(
-                    {idn: ids, "list_id": idx.reshape(-1).astype("int64")}
-                )
-
-        return df.mapInPandas(_rank, schema=f"{idn} {id_sql}, list_id long")
-
-    if n_lists > _IVF_LITERAL_MAX:
-        vp = vectors.select(
-            F.col(id_col).alias("vid"), as_double(F.col(vec_col)).alias("v")
-        )
-        qp = queries.select(
-            F.col(id_col).alias("vid"), as_double(F.col(vec_col)).alias("v")
-        )
-        v = vp.select(F.col("vid").alias("neighbor_id"),
-                      F.col("v").alias("nv")).join(
-            numpy_ranked(vp, "neighbor_id", 1), "neighbor_id"
-        )
-        q = qp.select(F.col("vid").alias("query_id"),
-                      F.col("v").alias("qv")).join(
-            numpy_ranked(qp, "query_id", n_probe), "query_id"
-        )
-    else:
-        v = vectors.select(
-            F.col(id_col).alias("neighbor_id"), as_double(F.col(vec_col)).alias("nv")
-        ).withColumn("list_id", ranked_lists(F.col("nv"), 1)[0]["i"])
-        q = (
-            queries.select(
-                F.col(id_col).alias("query_id"), as_double(F.col(vec_col)).alias("qv")
-            )
-            .withColumn("probe", F.explode(ranked_lists(F.col("qv"), n_probe)))
-            .select("query_id", "qv", F.col("probe.i").alias("list_id"))
-        )
-    scored = (
-        q.join(v, "list_id")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            round2(cosine(F.col("qv"), F.col("nv")), 6).alias("cos_sim"),
-        )
-    )
-    w = W.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id")
-    )
-    return scored.withColumn("rank", F.row_number().over(w)).filter(
-        F.col("rank") <= k
     )
 
 
@@ -421,9 +261,9 @@ def ivf_seed_topk(
 ) -> DataFrame:
     """IVF ANN with a DETERMINISTIC seed quantizer: the coarse centroids
     are the ``n_lists`` corpus vectors with the smallest md5(id) — a
-    hash-uniform draw standing in for KMeans' sampled training set (the
-    random-init special case of ``ivf_topk``; FAISS calls the same idea
-    a flat coarse quantizer over sampled points). That substitution is
+    hash-uniform draw standing in for a trained quantizer's centroids
+    (KMeans' random-init step without the Lloyd iterations; FAISS calls
+    the same idea a flat coarse quantizer over sampled points). That substitution is
     what makes this ANN path EXACTLY reproducible in SQL: seed choice,
     cosine list assignment (rounded to 6), n_probe probing and the final
     exact-cosine rank are all engine-stable expressions, so the DuckDB

@@ -20,8 +20,7 @@ parsing:
 - PhotometricInterpretation 0/1 (grayscale, incl. the inverted
   WhiteIsZero convention), 2 (RGB, 8 bits/sample), 3 (palette via the
   16-bit ColorMap tag);
-- output [h, w, 3] uint8 RGB (grayscale replicated), matching
-  decode_png's convention so mean_luma is shared. First IFD only —
+- output [h, w, 3] uint8 RGB (grayscale replicated). First IFD only —
   multi-page TIFFs describe documents, and features describe the first
   page.
 
